@@ -786,9 +786,9 @@ def _work_overlap_ab(spark, sf_dir: str, work_ms: float = 10.0) -> dict:
 
 def _batch_overhead(spark, sf_dir: str) -> dict:
     """Per-micro-batch FIXED overhead of the outcome contract: time one
-    full ``StreamRunner.process_batch`` (pipeline + persist + outcome
-    accounting groupBy at runner.py's status collect + DLQ split write
-    + delivery) against the bare pipeline->filter(PASSED)->sink path
+    full ``StreamRunner.process_batch`` (pipeline + one checkpoint job
+    carrying the observe() outcome counts + DLQ split write + delivery)
+    against the bare pipeline->filter(PASSED)->sink path
     over the same static frame. The difference is the per-batch cost
     the reference's dispatch benchmark doesn't pay — the line that,
     with the delivered-fraction row, lets BASELINE.md's 57,563/34,465

@@ -13,7 +13,7 @@ pipeline.processed.{passed,filtered,failed}).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 STATUS_COL = "_status"
@@ -51,3 +51,15 @@ def outcome_counts(df: DataFrame) -> dict[str, int]:
     for r in rows:
         counts[r[STATUS_COL]] = r["n"]
     return counts
+
+
+def observe_outcomes(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Lazy passed/filtered/failed counts: the returned frame carries an
+    ``observe()`` whose counts ride on its first action (no job of their
+    own); read them with ``observation.get`` once that action is done."""
+    observation = Observation()
+    counted = df.observe(
+        observation,
+        *(F.count_if(F.col(STATUS_COL) == s).alias(s) for s in (PASSED, FILTERED, FAILED)),
+    )
+    return counted, observation

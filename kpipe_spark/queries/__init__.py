@@ -60,64 +60,59 @@ def register(
 # equals the computation, so a drifted list fails CI instead of
 # silently aging a grade (that drift happened once: round 8's
 # hand-typed list dropped d24_dup_clusters from its own count).
-# Round 14 = the r9/r10-era stalest block in registry order (the four
-# r9 grades d99/p02/p03/q02, the d37/d44-d48 dedup-calibration rows,
-# the d86-d89 PQ serving family, and the q03-q45 relational mid-range;
-# the r11/r12-graded wave-7/9 rewrites q53/q62/q65/q72/q76/q79/q81/
-# q83/q84 queue for the NEXT windows — 51 staler candidates exist for
-# 47 slots this round). All oracle-backed queries run the identical
+# All oracle-backed queries run the identical
 # DuckDB compare in pytest regardless of window position.
 FLAGSHIP_50: tuple[str, ...] = (
     "q01_pricing_summary",
     "p01_outcome_accounting",
     "d05_minhash_neardup",
-    "d99_weighted_reservoir_sample",
-    "p02_passed_enriched",
-    "p03_field_surgery",
-    "q02_revenue_by_nation",
-    "d37_semdedup_clusters",
-    "d44_temperature_sampling_weights",
-    "d45_sequence_length_histogram",
-    "d46_cross_source_overlap",
-    "d47_dedup_survivors",
-    "d48_minhash_estimator_calibration",
-    "d86_pq_adc_topk",
-    "d87_pq_recall",
-    "d88_ivfpq_topk",
-    "d89_pq_codebook_health",
-    "q19_distinct_agg",
-    "q27_conditional_agg_pivot",
-    "q03_shipping_priority",
-    "q04_order_priority",
-    "q05_local_supplier_volume",
-    "q07_join_left_outer",
-    "q08_join_anti",
-    "q09_join_semi",
-    "q10_join_full_outer",
-    "q28_range_join",
-    "q11_window_topk_per_customer",
-    "q12_window_running_total",
-    "q14_rollup",
-    "q15_cube",
-    "q25_grouping_sets",
-    "q16_union",
-    "q17_intersect",
-    "q18_except",
-    "q24_topk_orders",
-    "q20_scalar_string_math",
-    "q21_date_functions",
-    "q23_json_extract",
-    "q29_string_agg",
-    "q22_events_hourly",
-    "q31_correlated_scalar_subquery",
-    "q32_in_subquery",
-    "q33_percentiles",
-    "q35_pivot",
-    "q36_unpivot",
-    "q37_sessionization",
-    "q38_asof_join",
-    "q44_range_frame_moving_sum",
-    "q45_array_map_functions",
+    "q49_exists_subquery",
+    "q56_exact_median",
+    "q68_argmax_aggregates",
+    "q70_lateness_priority_counts",
+    "m03_media_features",
+    "d23_mllib_minhash_join",
+    "d27_ivf_kmeans_topk",
+    "d28_bpe_train",
+    "d49_semantic_decontamination",
+    "d50_quality_weighted_sampling",
+    "d51_packing_efficiency",
+    "d52_leakage_safe_split",
+    "m04_resize_plan",
+    "d53_cdc_chunk_dedup",
+    "d93_adaptive_nprobe_topk",
+    "d94_adaptive_nprobe_recall",
+    "d90_unigram_train",
+    "d91_unigram_fertility",
+    "d92_unigram_piece_coverage",
+    "d95_kneser_ney_logprob",
+    "q41_sliding_window",
+    "q43_distribution_ranks",
+    "q47_time_bucket_window",
+    "q48_null_handling_and_editdist",
+    "q50_histogram_buckets",
+    "q52_posexplode_lateral",
+    "q53_large_volume_orders",
+    "q54_nation_volume_shipping",
+    "q55_inactive_rich_customers",
+    "q57_filtered_aggregates",
+    "q58_customer_order_distribution",
+    "q59_promo_revenue",
+    "q60_small_quantity_revenue",
+    "q61_disjunctive_part_revenue",
+    "q62_waiting_supplier",
+    "q63_market_share",
+    "q64_returned_item_revenue",
+    "q65_top_supplier",
+    "q66_stat_aggregates",
+    "q67_activity_streaks",
+    "q69_lateral_topk",
+    "q71_event_funnel",
+    "q72_retention_cohorts",
+    "q73_event_transitions",
+    "q74_loyal_customers_by_nation",
+    "q75_boolean_aggregates",
+    "q76_error_rate_anomaly",
 )
 
 

@@ -25,22 +25,46 @@ from __future__ import annotations
 
 import logging
 import time
-from collections import deque
+from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kpipe_spark.pipeline.pipeline import Pipeline
-from kpipe_spark.pipeline.result import ERROR_COL, FAILED, FILTERED, PASSED, STATUS_COL
+from kpipe_spark.pipeline.result import (
+    ERROR_COL,
+    FAILED,
+    FILTERED,
+    PASSED,
+    STATUS_COL,
+    observe_outcomes,
+)
 from kpipe_spark.pipeline.sinks import dlq_frame
 from kpipe_spark.streaming.backpressure import BackpressureGovernor, kafka_lag
 from kpipe_spark.streaming.modes import ProcessingMode, shape_batch
-from kpipe_spark.util import ensure_parallelism
+from kpipe_spark.util import (
+    ensure_parallelism,
+    free_local_checkpoint,
+    pin_local_checkpoint,
+)
 
 log = logging.getLogger(__name__)
+
+
+def _checkpoint_lost(exc: BaseException | None) -> bool:
+    """True when ``exc``, or an exception it wraps, is a read of local
+    checkpoint blocks that are gone (their executor was lost)."""
+    seen: set[int] = set()
+    while exc is not None and id(exc) not in seen:
+        seen.add(id(exc))
+        if "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in str(exc):
+            return True
+        exc = exc.__cause__ or exc.__context__
+    return False
 
 
 class Metrics:
@@ -84,20 +108,29 @@ class CircuitBreaker:
     failure_threshold: float = 0.5
     window: int = 100
     open_duration_s: float = 5.0
-    _outcomes: deque = field(default_factory=deque)
+    # the rolling window as counts: how many outcomes it holds, and how
+    # many of those are failures (fractional once batches are spread)
+    _size: int = 0
+    _failed: float = 0.0
     state: str = "CLOSED"
     _opened_at: float = 0.0
     trips: int = 0
 
     def record(self, passed: int, filtered: int, failed: int) -> None:
         # one terminal outcome per record, after retries (CB sees terminal
-        # outcomes only, CircuitBreakerController.java:34-60)
-        for _ in range(passed + filtered):
-            self._outcomes.append(0)
-        for _ in range(failed):
-            self._outcomes.append(1)
-        while len(self._outcomes) > self.window:
-            self._outcomes.popleft()
+        # outcomes only, CircuitBreakerController.java:34-60). A batch's
+        # outcomes have no order among themselves, so the batch enters
+        # the window spread in proportion: the newest min(n, window)
+        # outcomes carry its failure rate, and the outcomes they push
+        # out leave the older window in its own proportion. O(1) per
+        # batch, whatever its size.
+        n = passed + filtered + failed
+        if n:
+            take = min(n, self.window)
+            kept = min(self._size, self.window - take)
+            kept_failed = self._failed * kept / self._size if self._size else 0.0
+            self._failed = kept_failed + failed * take / n
+            self._size = kept + take
         if self.state == "HALF_OPEN":
             # probe decided by this batch: any failure re-opens
             if failed > 0:
@@ -109,10 +142,9 @@ class CircuitBreaker:
                 # (without this, a 50%+-failure residue re-opens on
                 # the first healthy batch, stalling a recovered
                 # stream open_duration at a time for several cycles)
-                self._outcomes.clear()
-        elif self.state == "CLOSED" and len(self._outcomes) >= self.window:
-            rate = sum(self._outcomes) / len(self._outcomes)
-            if rate >= self.failure_threshold:
+                self._size, self._failed = 0, 0.0
+        elif self.state == "CLOSED" and self._size >= self.window:
+            if self._failed / self._size >= self.failure_threshold:
                 self._open()
 
     def _open(self) -> None:
@@ -139,7 +171,9 @@ class StreamRunner:
     batch_id), when set, receives the DLQ-enveloped failed rows and runs
     BEFORE the sink; its failure aborts the batch (commit withheld ⇒
     replay), reproducing "DLQ-send-failure holds the offset"
-    (docs/OFFSET-INVARIANTS.md:79-90).
+    (docs/OFFSET-INVARIANTS.md:79-90). Both frames read the batch's
+    local checkpoint, which is freed when process_batch returns: consume
+    them inside the call.
     """
 
     pipeline: Pipeline
@@ -163,7 +197,9 @@ class StreamRunner:
     # one-record-at-a-time memory profile.
     error_sample_limit: int = 1000
 
-    def _write_with_retry(self, write: Callable[[], None], what: str) -> None:
+    def _write_with_retry(
+        self, write: Callable[[], None], what: str, tally: Counter
+    ) -> None:
         """Fixed-backoff retry (Stream.withRetry semantics: maxRetries
         counts retries AFTER the first attempt, KPipeConsumerBuilder.java:52-53)."""
         attempts = self.sink_retries + 1
@@ -171,8 +207,12 @@ class StreamRunner:
             try:
                 write()
                 return
-            except Exception:
-                self.metrics.add("sink.errors")
+            except Exception as e:
+                # lost checkpoint blocks do not come back on retry; the
+                # batch is redone from its source instead (process_batch)
+                if _checkpoint_lost(e):
+                    raise
+                tally["sink.errors"] += 1
                 if attempt == attempts:
                     raise
                 log.warning("%s failed (attempt %d/%d) — backing off", what, attempt, attempts)
@@ -191,6 +231,23 @@ class StreamRunner:
                 self.circuit_breaker.trips
             )
 
+    def _account(self, tally: Counter) -> None:
+        """Fold one attempt's counters into the metrics and notify the
+        result observers."""
+        for key, n in tally.items():
+            self.metrics.add(key, n)
+        # observers are observe-only; a throwing observer is swallowed
+        # (DefaultStream.java:307-369)
+        for cb, key in (
+            (self.on_filtered, "pipeline.processed.filtered"),
+            (self.on_failed, "pipeline.processed.failed"),
+        ):
+            if cb and tally[key]:
+                try:
+                    cb(tally[key])
+                except Exception:  # noqa: BLE001
+                    log.exception("result observer raised — swallowed")
+
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         if self.circuit_breaker:
             self.circuit_breaker.gate()
@@ -201,93 +258,127 @@ class StreamRunner:
             ensure_parallelism(batch), self.mode, key_col=self.key_col
         )
         applied = self.pipeline.apply(shaped)
-        applied.persist()
         try:
-            from kpipe_spark.pipeline.result import outcome_counts
+            self._deliver(applied, batch_id)
+        except Exception as e:
+            if not _checkpoint_lost(e):
+                raise
+            # an executor holding the checkpoint's blocks was lost. The
+            # checkpoint cut lineage, so Spark cannot recompute them, but
+            # `applied` still reaches the source: redo the batch once.
+            # The DLQ writer is batch-id idempotent and the sink
+            # at-least-once, so this is an ordinary replay.
+            log.warning("batch %d lost checkpoint blocks — redoing it from source", batch_id)
+            self._deliver(applied, batch_id)
 
-            by_status = outcome_counts(applied)
-            n_passed = by_status[PASSED]
-            n_filtered = by_status[FILTERED]
-            n_failed = by_status[FAILED]
-            self.metrics.add("records.received", n_passed + n_filtered + n_failed)
-            self.metrics.add("pipeline.processed.passed", n_passed)
-            self.metrics.add("pipeline.processed.filtered", n_filtered)
-            self.metrics.add("pipeline.processed.failed", n_failed)
+    def _deliver(self, applied: DataFrame, batch_id: int) -> None:
+        """One attempt at a batch: materialize its terminal-bound rows,
+        run the terminals over them, account for the outcomes.
 
-            # observers are observe-only; a throwing observer is swallowed
-            # (DefaultStream.java:307-369)
-            for cb, arg in ((self.on_filtered, n_filtered), (self.on_failed, n_failed)):
-                if cb and arg:
-                    try:
-                        cb(arg)
-                    except Exception:  # noqa: BLE001
-                        log.exception("result observer raised — swallowed")
+        One eager job does the materializing: the outcome counts ride on
+        it through ``observe()``, FILTERED rows (no terminal reads them)
+        are dropped, and the rest is local-checkpointed at the serialized
+        level (the deserialized default holds the same rows in more
+        memory). Both terminals then read those blocks, not the source.
 
-            # 1. DLQ park FIRST — before anything that could commit.
-            # The writer runs on EVERY batch (an empty frame when
-            # nothing failed): an idempotent batch-keyed sink needs the
-            # empty write as a tombstone — a replay whose transient
-            # failures succeeded must CLEAR the pre-crash attempt's
-            # parks, not leave them stranded (IdempotentDlqParquet).
-            if self.dlq_writer is not None:
-                dlq = dlq_frame(applied)
-                try:
-                    self.dlq_writer(dlq, batch_id)
-                    if n_failed:
-                        self.metrics.add("dlq.sent", n_failed)
-                except Exception:
-                    self.metrics.add("dlq.send.failures")
-                    # the park failure IS a terminal-outcome failure
-                    # for breaker purposes: a dead DLQ broker must be
-                    # able to trip the breaker, not just hot-replay
-                    self._breaker_observe_failure(n_failed or 1)
-                    raise  # batch not committed ⇒ replay (offset held)
-            if n_failed:
-                if self.error_handler is not None:
-                    # invoked with terminally-failed records, after
-                    # retries; a throwing handler is contained
-                    # (RecordProcessor.java:437-448). Bounded sample —
-                    # never collect a whole failed batch to the driver.
-                    try:
-                        failed_rows = (
-                            applied.filter(F.col(STATUS_COL) == FAILED)
-                            .limit(self.error_sample_limit)
-                            .collect()
-                        )
-                        if n_failed > len(failed_rows):
-                            log.warning(
-                                "error handler sampled %d of %d failed records",
-                                len(failed_rows),
-                                n_failed,
-                            )
-                        self.error_handler(failed_rows)
-                    except Exception:  # noqa: BLE001
-                        log.exception("error handler raised — contained")
-
-            # 2. deliver passed records. A sink that fails AFTER
-            # retries is the classic breaker trigger (the reference's
-            # CB sees terminal produce failures too,
-            # CircuitBreakerController.java:34-60) — without the
-            # except-hook the breaker would only ever see
-            # pipeline-level outcomes and a persistent sink outage
-            # could never trip it.
-            passed_df = applied.filter(F.col(STATUS_COL) == PASSED).drop(
-                STATUS_COL, ERROR_COL
+        Counters, observers and the breaker are fed from the attempt
+        that completes — succeeded, or failed for any reason but lost
+        checkpoint blocks (that attempt is redone by process_batch)."""
+        counted, observation = observe_outcomes(applied)
+        # not util.materialize: a micro-batch is batch-bounded scratch,
+        # and its strategies checkpoint bounded frames deserialized.
+        # Pinned: a sink freeing its own checkpoints must not free ours.
+        frozen = pin_local_checkpoint(
+            counted.filter(F.col(STATUS_COL) != FILTERED).localCheckpoint(
+                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+            )
+        )
+        try:
+            counts = observation.get
+            n_passed, n_filtered, n_failed = counts[PASSED], counts[FILTERED], counts[FAILED]
+            tally: Counter = Counter(
+                {
+                    "records.received": n_passed + n_filtered + n_failed,
+                    "pipeline.processed.passed": n_passed,
+                    "pipeline.processed.filtered": n_filtered,
+                    "pipeline.processed.failed": n_failed,
+                }
             )
             try:
-                self._write_with_retry(
-                    lambda: self.sink(passed_df, batch_id), "sink"
-                )
-            except Exception:
-                self._breaker_observe_failure(n_passed or 1)
-                raise  # batch not committed ⇒ replay
-
-            self.metrics.add("batches.completed")
+                self._terminals(frozen, batch_id, n_passed, n_failed, tally)
+            except Exception as e:
+                if not _checkpoint_lost(e):
+                    self._account(tally)
+                raise
+            tally["batches.completed"] += 1
+            self._account(tally)
             if self.circuit_breaker:
                 self.circuit_breaker.record(n_passed, n_filtered, n_failed)
                 self.metrics.counters["circuitbreaker.trips"] = self.circuit_breaker.trips
         finally:
-            applied.unpersist()
+            free_local_checkpoint(frozen, pinned=True)
+
+    def _terminals(
+        self, frozen: DataFrame, batch_id: int, n_passed: int, n_failed: int, tally: Counter
+    ) -> None:
+        # 1. DLQ park FIRST — before anything that could commit.
+        # The writer runs on EVERY batch (an empty frame when
+        # nothing failed): an idempotent batch-keyed sink needs the
+        # empty write as a tombstone — a replay whose transient
+        # failures succeeded must CLEAR the pre-crash attempt's
+        # parks, not leave them stranded (IdempotentDlqParquet).
+        if self.dlq_writer is not None:
+            try:
+                self.dlq_writer(dlq_frame(frozen), batch_id)
+            except Exception as e:
+                if not _checkpoint_lost(e):
+                    tally["dlq.send.failures"] += 1
+                    # the park failure IS a terminal-outcome failure
+                    # for breaker purposes: a dead DLQ broker must be
+                    # able to trip the breaker, not just hot-replay
+                    self._breaker_observe_failure(n_failed or 1)
+                raise  # batch not committed ⇒ replay (offset held)
+            if n_failed:
+                tally["dlq.sent"] += n_failed
+        if n_failed and self.error_handler is not None:
+            # invoked with terminally-failed records, after
+            # retries; a throwing handler is contained
+            # (RecordProcessor.java:437-448). Bounded sample —
+            # never collect a whole failed batch to the driver.
+            try:
+                failed_rows = (
+                    frozen.filter(F.col(STATUS_COL) == FAILED)
+                    .limit(self.error_sample_limit)
+                    .collect()
+                )
+                if n_failed > len(failed_rows):
+                    log.warning(
+                        "error handler sampled %d of %d failed records",
+                        len(failed_rows),
+                        n_failed,
+                    )
+                self.error_handler(failed_rows)
+            except Exception:  # noqa: BLE001
+                log.exception("error handler raised — contained")
+
+        # 2. deliver passed records. A sink that fails AFTER
+        # retries is the classic breaker trigger (the reference's
+        # CB sees terminal produce failures too,
+        # CircuitBreakerController.java:34-60) — without the
+        # except-hook the breaker would only ever see
+        # pipeline-level outcomes and a persistent sink outage
+        # could never trip it.
+        passed_df = frozen.filter(F.col(STATUS_COL) == PASSED).drop(
+            STATUS_COL, ERROR_COL
+        )
+        try:
+            self._write_with_retry(
+                lambda: self.sink(passed_df, batch_id), "sink", tally
+            )
+        except Exception as e:
+            if not _checkpoint_lost(e):
+                self._breaker_observe_failure(n_passed or 1)
+            raise  # batch not committed ⇒ replay
 
     def start(
         self,

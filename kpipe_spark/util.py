@@ -66,7 +66,35 @@ def materialize(df: DataFrame, *, eager: bool = False, scale: str = "bounded") -
     return df.localCheckpoint(eager=eager)
 
 
-def free_local_checkpoint(df: DataFrame) -> bool:
+_PINNED = "kpipe:pinned-local-checkpoint"
+
+
+def _checkpoint_rdds(df: DataFrame) -> list:
+    """The JVM RDDs behind ``df``'s LogicalRDD leaves (the local
+    checkpoints its analyzed plan reads)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [
+        leaves.apply(i).rdd()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    ]
+
+
+def pin_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Mark the local checkpoint(s) ``df`` reads as held by the caller:
+    ``free_local_checkpoint`` skips them unless called with
+    ``pinned=True``. For a caller that hands a checkpointed frame to
+    code it does not control (StreamRunner's sink and DLQ writer): that
+    code may free its own superseded checkpoints through a frame
+    derived from the input, and the lineage walk would reach the
+    caller's blocks while the caller still reads them. The mark is the
+    RDD's name, so it lives and dies with the blocks."""
+    for rdd in _checkpoint_rdds(df):
+        rdd.setName(_PINNED)
+    return df
+
+
+def free_local_checkpoint(df: DataFrame, *, pinned: bool = False) -> bool:
     """Best-effort release of the ``localCheckpoint`` RDD blocks a
     SUPERSEDED frame reads. Walks the analyzed plan and unpersists every
     LogicalRDD leaf, so it works on the checkpointed frame itself AND on
@@ -74,7 +102,8 @@ def free_local_checkpoint(df: DataFrame) -> bool:
     only call it when the ENTIRE lineage is dead. A local checkpoint's
     lineage is truncated, so after the release any frame sharing it
     fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND rather than silently
-    recomputing.
+    recomputing. Leaves marked by ``pin_local_checkpoint`` are skipped
+    unless ``pinned`` is set: only their holder releases them.
 
     Iterative operators checkpoint once per round; without an explicit
     release every round's blocks live until session shutdown (nothing
@@ -86,13 +115,12 @@ def free_local_checkpoint(df: DataFrame) -> bool:
     table) has no checkpoint RDD and is left to that strategy's own
     lifecycle (``table_materializer.drop_all``)."""
     try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         freed = False
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
-                freed = True
+        for rdd in _checkpoint_rdds(df):
+            if rdd.name() == _PINNED and not pinned:
+                continue
+            rdd.unpersist(False)
+            freed = True
         return freed
     except Exception:
         return False

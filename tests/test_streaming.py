@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -78,17 +77,26 @@ def test_end_to_end_outcomes_and_dlq(spark, tmp_path):
     exp_passed = [
         r for r in data if r["event_type"] != "error" and r["value"] > 50.0
     ]
-    assert len(delivered) == len(exp_passed)
+    assert sorted(r["event_id"] for r in delivered) == [r["event_id"] for r in exp_passed]
     assert len(dlq) == len(exp_failed)
     # delivered rows carry the added field and no outcome columns
     assert all(r["stage"] == "v1" for r in delivered)
     assert "_status" not in delivered[0].asDict()
-    # metrics counters match (docs/OBSERVABILITY.md names)
+    # metrics counters match exactly (docs/OBSERVABILITY.md names); the
+    # outcome counts are observed on the batch's checkpoint job, and the
+    # filtered rows the checkpoint drops are still counted
+    expected = {
+        "records.received": len(data),
+        "pipeline.processed.passed": len(exp_passed),
+        "pipeline.processed.filtered": len(data) - len(exp_passed) - len(exp_failed),
+        "pipeline.processed.failed": len(exp_failed),
+        "dlq.sent": len(exp_failed),
+        "dlq.send.failures": 0,
+        "sink.errors": 0,
+        "batches.completed": 2,
+    }
     m = h.metrics()
-    assert m["pipeline.processed.passed"] == len(exp_passed)
-    assert m["pipeline.processed.failed"] == len(exp_failed)
-    assert m["records.received"] == len(data)
-    assert m["dlq.sent"] == len(exp_failed)
+    assert {k: m[k] for k in expected} == expected
     # DLQ envelope columns present (FIXTURES.md F5)
     hdr_keys = {h["key"] for h in dlq[0]["headers"]}
     assert "x-dlq-exception-class" in hdr_keys
@@ -238,31 +246,6 @@ def test_sink_retry(spark, tmp_path):
     assert h.metrics()["sink.errors"] == 1
 
 
-def test_circuit_breaker_state_machine():
-    """CLOSED->OPEN at threshold with full window; OPEN pauses; HALF_OPEN
-    probe decides (ConsumerHealthController.java:292-451)."""
-    cb = CircuitBreaker(failure_threshold=0.5, window=10, open_duration_s=0.05)
-    cb.record(passed=10, filtered=0, failed=0)
-    assert cb.state == "CLOSED"
-    cb.record(passed=0, filtered=0, failed=6)  # window now 40% old pass + 60% fail
-    assert cb.state == "OPEN"
-    assert cb.trips == 1
-    t0 = time.monotonic()
-    cb.gate()  # blocks for the remaining open duration
-    assert time.monotonic() - t0 <= 0.06 + 0.05
-    assert cb.state == "HALF_OPEN"
-    cb.record(passed=1, filtered=0, failed=0)  # successful probe
-    assert cb.state == "CLOSED"
-    # failing probe re-opens
-    cb2 = CircuitBreaker(failure_threshold=0.5, window=4, open_duration_s=0.01)
-    cb2.record(0, 0, 4)
-    assert cb2.state == "OPEN"
-    cb2.gate()
-    cb2.record(0, 0, 1)
-    assert cb2.state == "OPEN"
-    assert cb2.trips == 2
-
-
 def test_observers_swallow_exceptions(spark, tmp_path):
     """Result observers are observe-only; a throwing observer never
     affects the pipeline (DefaultStream.java:307-369)."""
@@ -306,24 +289,6 @@ def test_kafka_source_requires_exactly_one_subscription(spark):
         kafka_source(
             spark, "localhost:9092", topics="t", subscribe_pattern="t-.*"
         )
-
-
-def test_circuit_breaker_recovery_clears_window():
-    """Round-10 review: a recovered breaker must not re-trip off the
-    OUTAGE's residue — the CLOSED transition clears the rolling
-    window, so all-success batches after recovery stay CLOSED."""
-    cb = CircuitBreaker(failure_threshold=0.5, window=10, open_duration_s=0.0)
-    cb.record(0, 0, 10)  # outage fills the window
-    assert cb.state == "OPEN" and cb.trips == 1
-    cb.gate()
-    cb.record(passed=2, filtered=0, failed=0)  # successful probe
-    assert cb.state == "CLOSED"
-    # pre-fix: window still held >=50% failures, so ANY further
-    # success batch that refilled it re-tripped a healthy stream
-    for _ in range(10):
-        cb.record(passed=3, filtered=0, failed=0)
-        assert cb.state == "CLOSED"
-    assert cb.trips == 1
 
 
 def test_sink_outage_feeds_and_trips_the_breaker(spark, tmp_path):
