@@ -31,10 +31,15 @@ Storage layout (the part that matters at 100 TB):
   searching with a different family than the index was encoded with
   would return garbage distances, silently.
 
-Determinism matches llm_ops13: residual encoding against first-k
-codebooks, every distance a 2^24 fixed-point BIGINT from birth, ties
-to the lowest code/cell — so ``search`` over d88's panel returns
-EXACTLY d88's oracle-checked rows (pinned in tests/test_ann_index.py).
+The module-level PQ kernels below are the only IVF-PQ implementation:
+llm_ops13's d86-d89 are built from them too. Residual encoding runs
+against first-k codebooks, every distance is a 2^24 fixed-point BIGINT
+from birth, ties go to the lowest code/cell. d88 encodes its corpus
+with the same kernels as ``build`` and runs the same query side as
+``search``, minus the stored table — so ``search`` over d88's panel
+returns EXACTLY d88's oracle-checked rows (pinned in
+tests/test_ann_index.py), which guards the stored-table path: code
+storage, the cell partitioning and the probe-cell filter.
 
 Reference parity: kpipe's pipeline surface has no ANN index
 (/root/reference/README.md:190-208 declares analytics out of scope);
@@ -49,7 +54,13 @@ import logging
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kpipe_spark.functions.similarity import top_k
 from kpipe_spark.functions.stored_artifact import StoredArtifact
+from kpipe_spark.util import (
+    ieee_round,
+    materialize,
+    reclaim_orphaned_table_location,
+)
 
 log = logging.getLogger(__name__)
 
@@ -60,20 +71,177 @@ _FP = float(1 << 24)
 # overhead of accreted append batches starts to dominate probe scans
 ADVISORY_FILES_PER_CELL = 8
 
+# probe ranking: nearest centroid first, ties to the lowest cell
+PROBE_ORDER = ("_cdq", "cell")
+
+
+# -- PQ kernels ----------------------------------------------------------
+# The one implementation of IVF-PQ encoding and ADC scoring: AnnIndex
+# and the d86-d89 queries (queries/llm_ops13.py) are all built from
+# these. Each is a pure DataFrame -> DataFrame step that never
+# respreads (the callers decide) and quantizes every distance to a
+# 2^24 fixed-point BIGINT the moment it exists, ties going to the
+# lowest code/cell, so argmins, ADC sums and rankings are
+# integer-exact under any partial-aggregation order.
+
 
 def _fixed_sq_l2(a, b, dim: int):
     """Squared L2 between two array columns of KNOWN length, quantized
-    to 2^24 fixed-point BIGINT the moment it exists (llm_ops13's
-    rule). Unrolled element arithmetic rather than a zip_with fold:
-    element_at stays inside whole-stage codegen where the fold runs
-    interpreted — 2.3× on the encode stage, bit-identical (IEEE
-    left-to-right sum, 0+t0 == t0 for t0 ≥ 0)."""
+    to 2^24 fixed-point BIGINT the moment it exists. Unrolled element
+    arithmetic rather than a zip_with fold: element_at stays inside
+    whole-stage codegen where the fold runs interpreted — 2.3× on the
+    encode stage, bit-identical (IEEE left-to-right sum, 0+t0 == t0
+    for t0 ≥ 0)."""
     total = None
     for i in range(dim):
         t = F.element_at(a, i + 1) - F.element_at(b, i + 1)
         sq = t * t
         total = sq if total is None else total + sq
     return F.floor(total * F.lit(_FP) + F.lit(0.5)).cast("long")
+
+
+def subvectors(df: DataFrame, col: str, m: int, sub_dim: int) -> DataFrame:
+    """Replace array column ``col`` by m rows of (j, _sub): subvector j
+    is elements j·sub_dim+1 .. (j+1)·sub_dim. Every other column rides
+    along."""
+    keep = [c for c in df.columns if c != col]
+    return df.select(
+        *keep,
+        F.posexplode(
+            F.array(
+                *[F.slice(F.col(col), j * sub_dim + 1, sub_dim) for j in range(m)]
+            )
+        ).alias("j", "_sub"),
+    )
+
+
+def first_k_cells(v: DataFrame, n_cells: int) -> DataFrame:
+    """(cell, _ce): vectors 0 .. n_cells-1 as the coarse centroids —
+    deterministic training (d13's first-k convention), which is what
+    lets DuckDB verify the queries."""
+    return v.filter(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").alias("cell"), F.col("_e").alias("_ce")
+    )
+
+
+def first_k_codebook(subs: DataFrame, k_codes: int) -> DataFrame:
+    """(code, j, _cb): subspace j's codebook is the j-th subvector of
+    vectors 0 .. k_codes-1 (the same first-k convention)."""
+    return subs.filter(F.col("vec_id") < k_codes).select(
+        F.col("vec_id").alias("code"), "j", F.col("_sub").alias("_cb")
+    )
+
+
+def centroid_distances(
+    df: DataFrame, cents: DataFrame, dim: int, id_col: str
+) -> DataFrame:
+    """(id_col, _e, cell, _ce, _cdq): every (id_col, _e) row against
+    every (cell, _ce) centroid. Its argmin is coarse assignment; its
+    ``PROBE_ORDER`` prefix per query is the probe set."""
+    return df.crossJoin(F.broadcast(cents)).select(
+        id_col, "_e", "cell", "_ce", _fixed_sq_l2("_e", "_ce", dim).alias("_cdq")
+    )
+
+
+def nearest_probes(
+    q: DataFrame, cents: DataFrame, dim: int, nprobe: int
+) -> DataFrame:
+    """(query_id, _e, cell, _ce, _cdq, _prn): each (query_id, _e)
+    query's nprobe nearest cells — the fixed-nprobe probe set."""
+    ranked = centroid_distances(q, cents, dim, "query_id")
+    return top_k(ranked, "query_id", PROBE_ORDER, nprobe, "_prn")
+
+
+def assign_residual(v: DataFrame, cents: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, cell, _r): coarse assignment of (vec_id, _e) rows to
+    the nearest (cell, _ce) centroid and the residual _e − _ce. One
+    pass: the min_by carries the winning centroid out, so the residual
+    needs no join back."""
+    scored = centroid_distances(v, cents, dim, "vec_id")
+    win = F.min_by(
+        F.struct(F.col("cell"), F.col("_ce")),
+        F.struct(F.col("_cdq"), F.col("cell")),
+    )
+    return (
+        scored.groupBy("vec_id")
+        .agg(win.alias("_w"), F.any_value("_e").alias("_e"))
+        .select(
+            "vec_id",
+            F.col("_w.cell").alias("cell"),
+            F.zip_with("_e", "_w._ce", lambda x, y: x - y).alias("_r"),
+        )
+    )
+
+
+def code_distances(subs: DataFrame, cb: DataFrame, sub_dim: int) -> DataFrame:
+    """Every subvector against its subspace's m×k codebook: the keys
+    of ``subs``, j, code and the distance _dq. Encoding takes its
+    argmin; for query subvectors it IS the ADC lookup table."""
+    keys = [c for c in subs.columns if c not in ("j", "_sub")]
+    return subs.join(F.broadcast(cb), "j").select(
+        *keys, "j", "code", _fixed_sq_l2("_sub", "_cb", sub_dim).alias("_dq")
+    )
+
+
+def nearest_codes(
+    subs: DataFrame, cb: DataFrame, sub_dim: int, keep_dq: bool = False
+) -> DataFrame:
+    """(keys…, j, code[, _dq]): each subvector's nearest codebook
+    entry, ties to the lowest code. The k candidate rows collapse
+    map-side (min_by partial aggregation). ``keep_dq`` also returns the
+    quantization error the argmin picked (codebook-health monitoring)."""
+    dist = code_distances(subs, cb, sub_dim)
+    keys = [c for c in dist.columns if c not in ("code", "_dq")]
+    order = F.struct(F.col("_dq"), F.col("code"))
+    if not keep_dq:
+        return dist.groupBy(*keys).agg(F.min_by("code", order).alias("code"))
+    return (
+        dist.groupBy(*keys)
+        .agg(F.min_by(F.struct("code", "_dq"), order).alias("_w"))
+        .select(*keys, "_w.code", "_w._dq")
+    )
+
+
+def adc_table(
+    probes: DataFrame, cb: DataFrame, m: int, sub_dim: int
+) -> DataFrame:
+    """(query_id, cell, j, code, _dq): the residual of each admitted
+    (query, cell) probe against that cell's centroid, split into
+    subvectors and scored against the codebook — |probes|×m×k rows."""
+    res = probes.select(
+        "query_id",
+        "cell",
+        F.zip_with("_e", "_ce", lambda x, y: x - y).alias("_qr"),
+    )
+    return code_distances(subvectors(res, "_qr", m, sub_dim), cb, sub_dim)
+
+
+def adc_topk(codes: DataFrame, adc: DataFrame, k: int) -> DataFrame:
+    """ADC candidate scoring: (query_id, neighbor_id, adc_dist[, cell],
+    rn). ``codes`` rows (vec_id[, cell], j, code) join the broadcast
+    ADC table on its keys, and each (query, vector) pair's distance is
+    the BIGINT sum of its m table entries — m lookups and adds, never a
+    decode; only (query, vec, BIGINT) partial sums shuffle. With a
+    ``cell`` column the codes only match their own cell's probes
+    (IVFADC); without, the table holds raw query subvectors (flat PQ)."""
+    keys = [c for c in ("cell", "j", "code") if c in adc.columns]
+    by_cell = "cell" in keys
+    cand = (
+        codes.join(F.broadcast(adc), keys)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(
+            F.sum("_dq").alias("_tq"),
+            *([F.any_value("cell").alias("cell")] if by_cell else []),
+        )
+    )
+    return top_k(cand, "query_id", ["_tq", "vec_id"], k).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        ieee_round(F.col("_tq") / F.lit(_FP), 4).alias("adc_dist"),
+        *([F.col("cell").cast("long").alias("cell")] if by_cell else []),
+        "rn",
+    )
 
 
 class AnnIndex(StoredArtifact):
@@ -152,8 +320,6 @@ class AnnIndex(StoredArtifact):
         MLlib) — and the index stores THOSE; everything downstream
         (assignment, residuals, search) only reads the side table."""
         idx = cls(spark, table, **family)
-        from kpipe_spark.util import reclaim_orphaned_table_location
-
         # a crashed prior build leaves managed directories with no
         # catalog entry; saveAsTable would die with
         # LOCATION_ALREADY_EXISTS on the first driver-OOM rerun
@@ -174,19 +340,14 @@ class AnnIndex(StoredArtifact):
             )
             idx.n_cells = centroids.count()  # bounded: the cell count
         else:
-            cents = v.filter(F.col("vec_id") < idx.n_cells).select(
-                F.col("vec_id").alias("cell"), F.col("_e").alias("_ce")
-            )
+            cents = first_k_cells(v, idx.n_cells)
         (
             cents.select("cell", F.col("_ce").alias("centroid"))
             .write.mode("overwrite")
             .saveAsTable(idx._centroids_table, format="parquet")
         )
-        assigned = idx._assign_residual(v, cents)
-        rsubs = idx._subvectors(assigned, "_r")
-        cb = rsubs.filter(F.col("vec_id") < idx.k_codes).select(
-            F.col("vec_id").alias("code"), "j", F.col("_sub").alias("_cb")
-        )
+        rsubs = idx._residual_subvectors(v, cents)
+        cb = first_k_codebook(rsubs, idx.k_codes)
         (
             cb.select("code", "j", F.col("_cb").alias("subvector"))
             .write.mode("overwrite")
@@ -203,67 +364,22 @@ class AnnIndex(StoredArtifact):
 
     # -- shared encode plumbing ----------------------------------------
 
-    def _assign_residual(self, v: DataFrame, cents: DataFrame) -> DataFrame:
-        """One-pass coarse assignment carrying the winning centroid out
-        of the min_by so the residual needs no join back (d88's
-        shape)."""
-        scored = v.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            "_e",
-            "cell",
-            "_ce",
-            _fixed_sq_l2("_e", "_ce", self.m * self.sub_dim).alias("_cdq"),
-        )
-        win = F.min_by(
-            F.struct(F.col("cell"), F.col("_ce")),
-            F.struct(F.col("_cdq"), F.col("cell")),
-        )
-        return (
-            scored.groupBy("vec_id")
-            .agg(win.alias("_w"), F.any_value("_e").alias("_e"))
-            .select(
-                "vec_id",
-                F.col("_w.cell").alias("cell"),
-                F.zip_with("_e", "_w._ce", lambda x, y: x - y).alias("_r"),
-            )
-        )
+    @property
+    def _dim(self) -> int:
+        return self.m * self.sub_dim
 
-    def _subvectors(self, df: DataFrame, col: str) -> DataFrame:
-        keep = [c for c in df.columns if c != col]
-        return df.select(
-            *keep,
-            F.posexplode(
-                F.array(
-                    *[
-                        F.slice(F.col(col), j * self.sub_dim + 1, self.sub_dim)
-                        for j in range(self.m)
-                    ]
-                )
-            ).alias("j", "_sub"),
+    def _residual_subvectors(self, v: DataFrame, cents: DataFrame) -> DataFrame:
+        return subvectors(
+            assign_residual(v, cents, self._dim), "_r", self.m, self.sub_dim
         )
 
     def _encode(self, rsubs: DataFrame, cb: DataFrame) -> DataFrame:
-        """(vec_id, cell, codes array<int>) — codes[j] is subspace j's
-        nearest codebook entry; map-side min_by argmin, then the m
-        rows fold into one array ordered by j."""
-        enc = (
-            rsubs.join(F.broadcast(cb), "j")
-            .select(
-                "vec_id",
-                "cell",
-                "j",
-                "code",
-                _fixed_sq_l2("_sub", "_cb", self.sub_dim).alias("_dq"),
-            )
-            .groupBy("vec_id", "cell", "j")
-            .agg(
-                F.min_by(
-                    "code", F.struct(F.col("_dq"), F.col("code"))
-                ).alias("code")
-            )
-        )
+        """(vec_id, codes, cell) — codes[j] is subspace j's nearest
+        codebook entry; the m code rows fold into one array ordered by
+        j."""
         return (
-            enc.groupBy("vec_id", "cell")
+            nearest_codes(rsubs, cb, self.sub_dim)
+            .groupBy("vec_id", "cell")
             .agg(
                 F.array_sort(
                     F.collect_list(F.struct("j", "code"))
@@ -313,8 +429,6 @@ class AnnIndex(StoredArtifact):
         the profile fold leaves the profile undercounting; like the
         ``update_batch`` marker window, ``compact()`` is the repair
         (it recomputes the profile exactly from the deduped table)."""
-        from kpipe_spark.util import materialize
-
         v = self._vectors(vectors)
         cents = self.spark.table(self._centroids_table).select(
             "cell", F.col("centroid").alias("_ce")
@@ -322,7 +436,7 @@ class AnnIndex(StoredArtifact):
         cb = self.spark.table(self._codebooks_table).select(
             "code", "j", F.col("subvector").alias("_cb")
         )
-        rsubs = self._subvectors(self._assign_residual(v, cents), "_r")
+        rsubs = self._residual_subvectors(v, cents)
         # materialized so the profile fold reuses the encode instead of
         # re-running assignment + codebook argmin over the batch
         enc = materialize(self._encode(rsubs, cb), eager=True)
@@ -356,8 +470,6 @@ class AnnIndex(StoredArtifact):
         table — the build seed, the compact()-time repair, and the
         one-time migration of a pre-profile index. One scan of the
         (bytes-per-vector) code table; the output is ≤ n_cells rows."""
-        from kpipe_spark.util import reclaim_orphaned_table_location
-
         session = session or self.spark
         reclaim_orphaned_table_location(session, self._profile_table)
         counts = (
@@ -471,8 +583,6 @@ class AnnIndex(StoredArtifact):
         tmp = f"{self.table}__compacting"
         backup = f"{self.table}__precompact"
         self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        from kpipe_spark.util import reclaim_orphaned_table_location
-
         reclaim_orphaned_table_location(self.spark, tmp)
         (
             self.spark.table(self.table)
@@ -570,20 +680,8 @@ class AnnIndex(StoredArtifact):
             "code", "j", F.col("subvector").alias("_cb")
         )
         q = self._vectors(queries).withColumnRenamed("vec_id", "query_id")
-        wp = Window.partitionBy("query_id").orderBy("_cdq", "cell")
-        ranked = (
-            q.crossJoin(F.broadcast(cents))
-            .select(
-                "query_id",
-                "_e",
-                "cell",
-                "_ce",
-                _fixed_sq_l2("_e", "_ce", self.m * self.sub_dim).alias("_cdq"),
-            )
-            .withColumn("_prn", F.row_number().over(wp))
-        )
         if probe_budget is None:
-            admitted = ranked.filter(F.col("_prn") <= nprobe)
+            admitted = nearest_probes(q, cents, self._dim, nprobe)
         else:
             counts = cell_counts
             if counts is None:
@@ -595,9 +693,14 @@ class AnnIndex(StoredArtifact):
             # cumulative mass of the cells ranked BEFORE this one —
             # probe while cum_prev × n_cells < budget × total (the
             # d93 gate): rank 1 always passes (cum_prev = 0)
-            wcum = wp.rowsBetween(Window.unboundedPreceding, -1)
+            wcum = (
+                Window.partitionBy("query_id")
+                .orderBy(*PROBE_ORDER)
+                .rowsBetween(Window.unboundedPreceding, -1)
+            )
             admitted = (
-                ranked.join(F.broadcast(counts), "cell", "left")
+                centroid_distances(q, cents, self._dim, "query_id")
+                .join(F.broadcast(counts), "cell", "left")
                 .withColumn("_n", F.coalesce("_n", F.lit(0)))
                 .withColumn(
                     "_cum_prev",
@@ -609,63 +712,24 @@ class AnnIndex(StoredArtifact):
                     < F.lit(int(probe_budget)) * F.col("_total")
                 )
             )
-        probes = admitted.select(
-            "query_id",
-            "cell",
-            F.zip_with("_e", "_ce", lambda x, y: x - y).alias("_qr"),
-        )
-        qsubs = self._subvectors(
-            probes.withColumnRenamed("query_id", "vec_id"), "_qr"
-        ).withColumnRenamed("vec_id", "query_id")
-        adc = qsubs.join(F.broadcast(cb), "j").select(
-            "query_id",
-            "cell",
-            "j",
-            "code",
-            _fixed_sq_l2("_sub", "_cb", self.sub_dim).alias("_dq"),
-        )
+        adc = adc_table(admitted, cb, self.m, self.sub_dim)
         # bounded collect (|queries| × nprobe cell ids): turns the
         # probe set into a static partition filter so the code-table
         # scan never opens an unprobed cell's files
         probed_cells = [
-            r["cell"] for r in probes.select("cell").distinct().collect()
+            r["cell"] for r in admitted.select("cell").distinct().collect()
         ]
-        codes = session.table(self.table).filter(
-            F.col("cell").isin(probed_cells)
+        codes = (
+            session.table(self.table)
+            .filter(F.col("cell").isin(probed_cells))
+            .select("vec_id", "cell", F.posexplode("codes").alias("j", "code"))
+            .withColumn("code", F.col("code").cast("long"))  # match adc's key type
         )
-        enc = codes.select(
-            "vec_id",
-            "cell",
-            F.posexplode("codes").alias("j", "code"),
-        ).withColumn("code", F.col("code").cast("long"))  # match adc's key type
-        cand = (
-            enc.join(F.broadcast(adc), ["cell", "j", "code"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(
-                F.sum("_dq").alias("_tq"),
-                F.any_value("cell").alias("cell"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy("_tq", "vec_id")
-        from kpipe_spark.util import ieee_round
-
         adc_k = k * refine_factor if refine_with is not None else k
-        shortlist = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= adc_k)
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                ieee_round(F.col("_tq") / F.lit(_FP), 4).alias("adc_dist"),
-                F.col("cell").cast("long").alias("cell"),
-                "rn",
-            )
-        )
+        shortlist = adc_topk(codes, adc, adc_k)
         if refine_with is None:
             return shortlist
 
-        dim = self.m * self.sub_dim
         corpus = self._vectors(refine_with).withColumnRenamed(
             "vec_id", "neighbor_id"
         )
@@ -676,22 +740,15 @@ class AnnIndex(StoredArtifact):
             shortlist.drop("rn")
             .join(corpus, "neighbor_id")
             .join(F.broadcast(qv), "query_id")
-            .withColumn("_edq", _fixed_sq_l2("_qe", "_e", dim))
+            .withColumn("_edq", _fixed_sq_l2("_qe", "_e", self._dim))
         )
-        wr = Window.partitionBy("query_id").orderBy("_edq", "neighbor_id")
-        return (
-            refined.withColumn("rn", F.row_number().over(wr))
-            .filter(F.col("rn") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                ieee_round(F.col("_edq") / F.lit(_FP), 4).alias(
-                    "exact_dist"
-                ),
-                "adc_dist",
-                "cell",
-                "rn",
-            )
+        return top_k(refined, "query_id", ["_edq", "neighbor_id"], k).select(
+            "query_id",
+            "neighbor_id",
+            ieee_round(F.col("_edq") / F.lit(_FP), 4).alias("exact_dist"),
+            "adc_dist",
+            "cell",
+            "rn",
         )
 
     # -- streaming serving ---------------------------------------------

@@ -74,6 +74,23 @@ def as_double_array(c: Column | str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def top_k(
+    df: DataFrame,
+    by: str | list[str],
+    order: list | tuple,
+    k: int,
+    rank_col: str = "rn",
+) -> DataFrame:
+    """The first ``k`` rows of each ``by`` group under ``order``,
+    numbered 1..k in ``rank_col`` — the per-key ranking every search
+    and recall query ends with. A ``row_number`` window plus a filter;
+    ``order`` must end in a unique key so ranks are deterministic."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -106,18 +123,10 @@ def brute_force_topk(
             ).alias("_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            F.round("_sim", 4).alias("cosine_sim"),
-            "rn",
-        )
+    return top_k(
+        scored, query_id_col, [F.col("_sim").desc(), "neighbor_id"], k
+    ).select(
+        query_id_col, "neighbor_id", F.round("_sim", 4).alias("cosine_sim"), "rn"
     )
 
 
@@ -189,18 +198,10 @@ def lsh_topk(
             ).alias("_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            F.round("_sim", 4).alias("cosine_sim"),
-            "rn",
-        )
+    return top_k(
+        scored, query_id_col, [F.col("_sim").desc(), "neighbor_id"], k
+    ).select(
+        query_id_col, "neighbor_id", F.round("_sim", 4).alias("cosine_sim"), "rn"
     )
 
 
@@ -388,14 +389,9 @@ def ivf_topk(
                 F.any_value(F.col(vcol)).alias(vcol),
                 F.any_value(F.col(ncol)).alias(ncol),
             )
-        w = Window.partitionBy(idcol).orderBy(
-            F.col("_csim").desc(), F.col("centroid_id")
-        )
-        return (
-            scored.withColumn("_crn", F.row_number().over(w))
-            .filter(F.col("_crn") <= n)
-            .drop("_csim", "_crn")
-        )
+        return top_k(
+            scored, idcol, [F.col("_csim").desc(), "centroid_id"], n, "_crn"
+        ).drop("_csim", "_crn")
 
     assigned = nearest_cells(corpus, vec_col, "_cpn", id_col, 1)
     probes = nearest_cells(queries, query_vec_col, "_qpn", query_id_col, nprobe)
@@ -413,16 +409,8 @@ def ivf_topk(
             ).alias("_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("_sim").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            F.round("_sim", 4).alias("cosine_sim"),
-            "rn",
-        )
+    return top_k(
+        scored, query_id_col, [F.col("_sim").desc(), "neighbor_id"], k
+    ).select(
+        query_id_col, "neighbor_id", F.round("_sim", 4).alias("cosine_sim"), "rn"
     )

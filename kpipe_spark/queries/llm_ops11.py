@@ -39,6 +39,7 @@ from kpipe_spark.catalog import load_tables
 from kpipe_spark.functions import dedup as D
 from kpipe_spark.functions import similarity as S
 from kpipe_spark.functions import text as T
+from kpipe_spark.functions.ann_index import _FP as _EMB_FP
 from kpipe_spark.queries import register
 from kpipe_spark.queries._oracle_fragments import MINHASH_CTES
 from kpipe_spark.util import ensure_parallelism, materialize
@@ -318,8 +319,7 @@ def d70_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # exact top-k: one corpus scan x broadcast query panel
-    wq = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), "vec_id")
-    exact = (
+    exact = S.top_k(
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -328,11 +328,11 @@ def d70_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.cosine_pre(
                 F.col("_qe"), F.col("_e"), F.col("_qn"), F.col("_n")
             ).alias("_sim"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
+        ),
+        "query_id",
+        [F.col("_sim").desc(), "vec_id"],
+        k,
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"))
 
     cents = v.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("centroid_id"),
@@ -358,12 +358,8 @@ def d70_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.any_value("_n").alias("_n"),
         )
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("_csim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
+    probes = S.top_k(
+        q.crossJoin(F.broadcast(cents)).select(
             "query_id",
             "_qe",
             "_qn",
@@ -371,11 +367,12 @@ def d70_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             S.cosine_pre(
                 F.col("_qe"), F.col("_ce"), F.col("_qn"), F.col("_cn")
             ).alias("_csim"),
-        )
-        .withColumn("crn", F.row_number().over(wp))
-        .filter(F.col("crn") <= 2)
-        .select("query_id", "_qe", "_qn", "centroid_id")
-    )
+        ),
+        "query_id",
+        [F.col("_csim").desc(), "centroid_id"],
+        2,
+        "crn",
+    ).select("query_id", "_qe", "_qn", "centroid_id")
     cand = (
         assigned.join(F.broadcast(probes), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -388,12 +385,9 @@ def d70_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ncand = cand.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_candidates"))
-    wr = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), "neighbor_id")
-    ivf = (
-        cand.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
-    )
+    ivf = S.top_k(
+        cand, "query_id", [F.col("_sim").desc(), "neighbor_id"], k
+    ).select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
     return (
         exact.join(ivf, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
@@ -639,12 +633,12 @@ def d73_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Fixed-point scale for embedding aggregation: float32 payloads cast
-# exactly to double, then scaled by 2^24 (the float32 mantissa width)
-# and rounded onto an integer grid. Cross-row sums become exact BIGINT
-# arithmetic — immune to partial-aggregation order — on both engines;
-# the scale cancels in cosine and divides out exactly for means.
-_EMB_FP = float(1 << 24)
+# Fixed-point scale for embedding aggregation (_EMB_FP, the 2^24 PQ
+# scale): float32 payloads cast exactly to double, then scaled by 2^24
+# (the float32 mantissa width) and rounded onto an integer grid.
+# Cross-row sums become exact BIGINT arithmetic — immune to
+# partial-aggregation order — on both engines; the scale cancels in
+# cosine and divides out exactly for means.
 
 
 @register(

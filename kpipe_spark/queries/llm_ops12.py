@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from kpipe_spark.catalog import load_tables
 from kpipe_spark.functions import dedup as D
 from kpipe_spark.functions import text as T
+from kpipe_spark.functions.ann_index import _FP
 from kpipe_spark.queries import register
 from kpipe_spark.util import ensure_parallelism, ieee_round, materialize
 
@@ -62,10 +63,10 @@ _BOUND = 2
 # the quadratic hot-bucket blowup, so both join sides are capped.
 _BOUND_DF_CAP = 16
 
-# Fixed-point scale for order-free fractional sums (d74's trick):
-# per-term doubles are quantized to BIGINTs so the cross-partition sum
-# is exact integer arithmetic under any partial-aggregation order.
-_FP = float(1 << 24)
+# _FP, the 2^24 fixed-point scale, makes fractional sums order-free
+# (d74's trick): per-term doubles are quantized to BIGINTs so the
+# cross-partition sum is exact integer arithmetic under any
+# partial-aggregation order.
 
 # Candidate max-sequence-lengths for the truncation-loss curve.
 _TRUNC_LENS = (16, 32, 64, 96, 128)

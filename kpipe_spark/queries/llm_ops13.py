@@ -41,8 +41,21 @@ from pyspark.sql import functions as F
 
 from kpipe_spark.catalog import load_tables
 from kpipe_spark.functions import similarity as S
+from kpipe_spark.functions.ann_index import (
+    _FP,
+    _fixed_sq_l2,
+    adc_table,
+    adc_topk,
+    assign_residual,
+    code_distances,
+    first_k_cells,
+    first_k_codebook,
+    nearest_codes,
+    nearest_probes,
+    subvectors,
+)
 from kpipe_spark.queries import register
-from kpipe_spark.util import ieee_round
+from kpipe_spark.util import ensure_parallelism, ieee_round
 
 # 64-dim embeddings → m=16 subspaces × 4 dims, k=64 codes per
 # subspace (the first-64 vectors' subvectors — deterministic training,
@@ -54,7 +67,7 @@ from kpipe_spark.util import ieee_round
 _PQ_M = 16
 _PQ_SUB = 4
 _PQ_K = 64
-_FP = float(1 << 24)  # fixed-point scale for distance quantization
+_DIM = _PQ_M * _PQ_SUB
 
 # Eval panel: every 25th of the first 500 vectors — d70's exact-recall
 # panel, so d87's PQ recall is directly comparable to d70's IVF recall
@@ -62,99 +75,37 @@ _PANEL = "vec_id % 25 = 0 AND vec_id < 500"
 _TOPK = 10
 
 
-def _sq_l2q(a, b, dim: int):
-    """Fixed-point squared L2 between two array columns of KNOWN
-    length, unrolled into plain element arithmetic: element_at stays
-    inside whole-stage codegen where the zip_with→aggregate fold runs
-    interpreted — measured 2.3× faster on the encode stage (0.80s vs
-    1.80s over the sf0.1 corpus' 2M candidate rows) and BIT-IDENTICAL
-    (IEEE: 0.0+t0 == t0 for t0 ≥ 0, and both forms sum left-to-right,
-    so the engines' agreement is untouched — verified by the strict
-    repr-level oracle compare)."""
-    total = None
-    for i in range(dim):
-        t = F.element_at(a, i + 1) - F.element_at(b, i + 1)
-        sq = t * t
-        total = sq if total is None else total + sq
-    return F.floor(total * F.lit(_FP) + F.lit(0.5)).cast("long")
-
-
-def _pq_frames(spark: SparkSession, sf_dir: str):
-    """(enc, adc): the corpus code table (vec_id, j, code) and the
-    panel's ADC lookup table (query_id, j, code, dq)."""
-    from kpipe_spark.util import ensure_parallelism
-
+def _pq_subvectors(spark: SparkSession, sf_dir: str):
+    """(subs, cb): the corpus' raw-vector subvectors (vec_id, j, _sub)
+    and the first-k codebook trained on them."""
     emb = load_tables(spark, sf_dir).embeddings
     # the embeddings parquet is one split at test SFs, and the corpus
-    # encode below expands it x(m*k) through the broadcast codebook
-    # join — without a respread the whole k x m x n ADC arithmetic
-    # runs on ONE core (the round-13 stage profile that read "genuine
+    # encode expands it x(m*k) through the broadcast codebook join —
+    # without a respread the whole k x m x n ADC arithmetic runs on
+    # ONE core (the round-13 stage profile that read "genuine
     # arithmetic" was measuring a single-task stage)
     v = ensure_parallelism(emb).select(
         "vec_id", S.as_double_array("embedding").alias("_e")
     )
-    subs = v.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("_e"), j * _PQ_SUB + 1, _PQ_SUB)
-                    for j in range(_PQ_M)
-                ]
-            )
-        ).alias("j", "_sub"),
-    )
-    cb = subs.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("code"), "j", F.col("_sub").alias("_cb")
-    )
-    # squared-L2 subspace distance, quantized to 2^24 fixed point the
-    # moment it exists — argmin, ADC sum and ranking are integer-exact
-    dq = _sq_l2q("_sub", "_cb", _PQ_SUB)
+    subs = subvectors(v, "_e", _PQ_M, _PQ_SUB)
+    return subs, first_k_codebook(subs, _PQ_K)
 
-    def dist_of(side: DataFrame) -> DataFrame:
-        return side.join(F.broadcast(cb), "j").select(
-            "vec_id", "j", "code", dq.alias("dq")
-        )
 
-    # encode: min_by over (dq, code) — nearest codebook entry, ties to
-    # the lowest code; k candidate rows collapse map-side per (vec, j)
-    enc = (
-        dist_of(subs)
-        .groupBy("vec_id", "j")
-        .agg(
-            F.min_by("code", F.struct(F.col("dq"), F.col("code"))).alias(
-                "code"
-            )
-        )
-    )
+def _pq_frames(spark: SparkSession, sf_dir: str):
+    """(enc, adc): the corpus code table (vec_id, j, code) and the
+    panel's ADC lookup table (query_id, j, code, _dq)."""
+    subs, cb = _pq_subvectors(spark, sf_dir)
     # ADC table: panel subvectors only (20 × m × k rows — bounded by
     # construction, an eval panel), derived separately so the corpus-
     # scaled distance frame is never branch-shared
-    adc = dist_of(subs.filter(F.expr(_PANEL))).select(
-        F.col("vec_id").alias("query_id"), "j", "code", "dq"
-    )
-    return enc, adc
+    adc = code_distances(
+        subs.filter(F.expr(_PANEL)), cb, _PQ_SUB
+    ).withColumnRenamed("vec_id", "query_id")
+    return nearest_codes(subs, cb, _PQ_SUB), adc
 
 
 def _pq_topk_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    enc, adc = _pq_frames(spark, sf_dir)
-    scored = (
-        enc.join(F.broadcast(adc), ["j", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("dq").alias("_tq"))
-    )
-    w = Window.partitionBy("query_id").orderBy("_tq", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOPK)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            ieee_round(F.col("_tq") / F.lit(_FP), 4).alias("adc_dist"),
-            "rn",
-        )
-    )
+    return adc_topk(*_pq_frames(spark, sf_dir), _TOPK)
 
 
 # Shared oracle CTE chain: subvectors -> codebook -> quantized
@@ -272,20 +223,18 @@ def d87_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-task form beat the 64-task respread locally (1.37 vs
     # 1.70 s best); at 100 TB the scan arrives well-split and
     # ensure_parallelism would be a no-op anyway. The PQ side it
-    # shares (_pq_frames) IS respread — that one measured faster.
+    # shares (_pq_subvectors) IS respread — that one measured faster.
     v = emb.select("vec_id", S.as_double_array("embedding").alias("_e"))
     q = v.filter(F.expr(_PANEL)).select(
         F.col("vec_id").alias("query_id"), F.col("_e").alias("_qe")
     )
-    sqd = _sq_l2q("_qe", "_e", _PQ_M * _PQ_SUB)
-    wq = Window.partitionBy("query_id").orderBy("_dq", "vec_id")
-    exact = (
+    scored = (
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", sqd.alias("_dq"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _TOPK)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+        .select("query_id", "vec_id", _fixed_sq_l2("_qe", "_e", _DIM).alias("_dq"))
+    )
+    exact = S.top_k(scored, "query_id", ["_dq", "vec_id"], _TOPK).select(
+        "query_id", F.col("vec_id").alias("neighbor_id")
     )
     pq = _pq_topk_df(spark, sf_dir).select(
         "query_id", "neighbor_id", F.lit(1).alias("_hit")
@@ -423,105 +372,17 @@ def d88_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # respread, every lap). At 100 TB the scan arrives well-split and
     # the same plan parallelizes by itself.
     v = emb.select("vec_id", S.as_double_array("embedding").alias("_e"))
-    cents = v.filter(F.col("vec_id") < _NCELL).select(
-        F.col("vec_id").alias("cell"), F.col("_e").alias("_ce")
-    )
-    cdq = _sq_l2q("_e", "_ce", _PQ_M * _PQ_SUB)
-
-    # one-pass coarse assignment carrying the winning centroid's
-    # vector out of the min_by, so the residual needs no join back
-    scored = v.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "_e", "cell", "_ce", cdq.alias("_cdq")
-    )
-    win = F.min_by(
-        F.struct(F.col("cell"), F.col("_ce")),
-        F.struct(F.col("_cdq"), F.col("cell")),
-    )
-    assigned = (
-        scored.groupBy("vec_id")
-        .agg(win.alias("_w"), F.any_value("_e").alias("_e"))
-        .select(
-            "vec_id",
-            F.col("_w.cell").alias("cell"),
-            F.zip_with("_e", "_w._ce", lambda x, y: x - y).alias("_r"),
-        )
-    )
-    rsubs = assigned.select(
-        "vec_id",
-        "cell",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("_r"), j * _PQ_SUB + 1, _PQ_SUB)
-                    for j in range(_PQ_M)
-                ]
-            )
-        ).alias("j", "_sub"),
-    )
-    cb = rsubs.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("code"), "j", F.col("_sub").alias("_cb")
-    )
-    dq = _sq_l2q("_sub", "_cb", _PQ_SUB)
-    enc = (
-        rsubs.join(F.broadcast(cb), "j")
-        .select("vec_id", "cell", "j", "code", dq.alias("_dq"))
-        .groupBy("vec_id", "cell", "j")
-        .agg(
-            F.min_by("code", F.struct(F.col("_dq"), F.col("code"))).alias(
-                "code"
-            )
-        )
-    )
-
-    # query side: nprobe nearest cells, residual vs EACH probed cell
-    wp = Window.partitionBy("vec_id").orderBy("_cdq", "cell")
-    probes = (
-        v.filter(F.expr(_PANEL))
-        .crossJoin(F.broadcast(cents))
-        .select("vec_id", "_e", "cell", "_ce", cdq.alias("_cdq"))
-        .withColumn("_prn", F.row_number().over(wp))
-        .filter(F.col("_prn") <= _NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cell",
-            F.zip_with("_e", "_ce", lambda x, y: x - y).alias("_qr"),
-        )
-    )
-    qsubs = probes.select(
-        "query_id",
-        "cell",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("_qr"), j * _PQ_SUB + 1, _PQ_SUB)
-                    for j in range(_PQ_M)
-                ]
-            )
-        ).alias("j", "_sub"),
-    )
-    adc = qsubs.join(F.broadcast(cb), "j").select(
-        "query_id", "cell", "j", "code", dq.alias("_dq")
-    )
-    cand = (
-        enc.join(F.broadcast(adc), ["cell", "j", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum("_dq").alias("_tq"),
-            F.any_value("cell").alias("cell"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("_tq", "vec_id")
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOPK)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            ieee_round(F.col("_tq") / F.lit(_FP), 4).alias("adc_dist"),
-            F.col("cell").cast("long").alias("cell"),
-            "rn",
-        )
+    cents = first_k_cells(v, _NCELL)
+    # corpus side: AnnIndex.build's encode, minus the stored table
+    rsubs = subvectors(assign_residual(v, cents, _DIM), "_r", _PQ_M, _PQ_SUB)
+    cb = first_k_codebook(rsubs, _PQ_K)
+    # query side: AnnIndex.search's fixed-nprobe path
+    q = v.filter(F.expr(_PANEL)).withColumnRenamed("vec_id", "query_id")
+    probes = nearest_probes(q, cents, _DIM, _NPROBE)
+    return adc_topk(
+        nearest_codes(rsubs, cb, _PQ_SUB),
+        adc_table(probes, cb, _PQ_M, _PQ_SUB),
+        _TOPK,
     )
 
 
@@ -531,43 +392,11 @@ def d88_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, j, code, dq): each vector-subspace's chosen code AND
+    """(vec_id, j, code, _dq): each vector-subspace's chosen code AND
     its quantization error (the min subspace distance d86's argmin
     discards) — the raw material of codebook-health monitoring."""
-    from kpipe_spark.util import ensure_parallelism
-
-    emb = load_tables(spark, sf_dir).embeddings
-    # respread the one-split scan before the x(m*k) expansion (see
-    # _pq_frames)
-    v = ensure_parallelism(emb).select(
-        "vec_id", S.as_double_array("embedding").alias("_e")
-    )
-    subs = v.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("_e"), j * _PQ_SUB + 1, _PQ_SUB)
-                    for j in range(_PQ_M)
-                ]
-            )
-        ).alias("j", "_sub"),
-    )
-    cb = subs.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("code"), "j", F.col("_sub").alias("_cb")
-    )
-    dist = subs.join(F.broadcast(cb), "j").select(
-        "vec_id", "j", "code", _sq_l2q("_sub", "_cb", _PQ_SUB).alias("dq")
-    )
-    win = F.min_by(
-        F.struct(F.col("code"), F.col("dq")),
-        F.struct(F.col("dq"), F.col("code")),
-    )
-    return (
-        dist.groupBy("vec_id", "j")
-        .agg(win.alias("_w"))
-        .select("vec_id", "j", F.col("_w.code").alias("code"), F.col("_w.dq").alias("dq"))
-    )
+    subs, cb = _pq_subvectors(spark, sf_dir)
+    return nearest_codes(subs, cb, _PQ_SUB, keep_dq=True)
 
 
 @register(
@@ -631,8 +460,8 @@ def d89_pq_codebook_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = chosen.groupBy("j").agg(
         F.count(F.lit(1)).alias("n_vectors"),
-        F.sum("dq").alias("_sd"),
-        F.max("dq").alias("_md"),
+        F.sum("_dq").alias("_sd"),
+        F.max("_dq").alias("_md"),
         F.countDistinct("code").alias("codes_used"),
     )
     return (
@@ -872,12 +701,8 @@ def d93_adaptive_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), "neighbor_id"
-    )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOPK)
+        S.top_k(scored, "query_id", [F.col("_sim").desc(), "neighbor_id"], _TOPK)
         .join(F.broadcast(probe_stats.select("query_id", "n_probed")), "query_id")
         .select(
             "query_id",
@@ -954,10 +779,8 @@ def d94_adaptive_nprobe_recall(
         F.col("_e").alias("_qe"),
         F.col("_n").alias("_qn"),
     )
-    exact_w = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), "neighbor_id"
-    )
-    exact = (
+    by_sim = [F.col("_sim").desc(), "neighbor_id"]
+    exact = S.top_k(
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -966,11 +789,12 @@ def d94_adaptive_nprobe_recall(
             S.cosine_pre(
                 F.col("_qe"), F.col("_e"), F.col("_qn"), F.col("_n")
             ).alias("_sim"),
-        )
-        .withColumn("_rn", F.row_number().over(exact_w))
-        .filter(F.col("_rn") <= _TOPK)
-        .select("query_id", "neighbor_id")
-    )
+        ),
+        "query_id",
+        by_sim,
+        _TOPK,
+        "_rn",
+    ).select("query_id", "neighbor_id")
     cand = (
         assigned.join(
             F.broadcast(
@@ -993,10 +817,8 @@ def d94_adaptive_nprobe_recall(
     ncand = cand.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_candidates")
     )
-    ivf = (
-        cand.withColumn("_rn", F.row_number().over(exact_w))
-        .filter(F.col("_rn") <= _TOPK)
-        .select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
+    ivf = S.top_k(cand, "query_id", by_sim, _TOPK, "_rn").select(
+        "query_id", "neighbor_id", F.lit(1).alias("_hit")
     )
     return (
         exact.join(ivf, ["query_id", "neighbor_id"], "left")

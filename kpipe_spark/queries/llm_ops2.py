@@ -230,14 +230,13 @@ def d13_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.any_value(F.col(vec_col)).alias(vec_col),
                 F.any_value(F.col(norm_col)).alias(norm_col),
             )
-        w = Window.partitionBy(side.columns[0]).orderBy(
-            F.col("_csim").desc(), F.col("centroid_id")
-        )
-        return (
-            scored.withColumn("_crn", F.row_number().over(w))
-            .filter(F.col("_crn") <= nprobe)
-            .drop("_csim", "_crn")
-        )
+        return S.top_k(
+            scored,
+            side.columns[0],
+            [F.col("_csim").desc(), "centroid_id"],
+            nprobe,
+            "_crn",
+        ).drop("_csim", "_crn")
 
     assigned = nearest_cells(v, "_e", "_n", 1)
     probes = nearest_cells(
@@ -261,12 +260,9 @@ def d13_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", F.round("_sim", 4).alias("cosine_sim"), "rn")
-    )
+    return S.top_k(
+        scored, "query_id", [F.col("_sim").desc(), "neighbor_id"], 5
+    ).select("query_id", "neighbor_id", F.round("_sim", 4).alias("cosine_sim"), "rn")
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,18 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 16g: local[N] runs the driver
+    and every task slot in one JVM, and a heap sized past free memory
+    gets the process killed on a host without swap."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "16g"
+    half_mib = ram // 2 // (1 << 20)
+    return f"{min(16 * 1024, half_mib)}m"
+
+
 def get_spark(
     app_name: str = "kpipe-spark",
     master: str | None = None,
@@ -88,7 +100,7 @@ def get_spark(
         # spark-submit and this setting only sizes the driver.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
     )
     for k, v in (extra_conf or {}).items():

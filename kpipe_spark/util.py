@@ -238,9 +238,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     the same way Spark packs splits (total bytes + per-file open cost,
     over maxPartitionBytes); the RDD fallback only fires for in-memory
     frames (streaming micro-batches, createDataFrame fixtures), which
-    are already materialized. Set session conf
-    ``spark.kpipe.ensureParallelism=false`` to make this a no-op on
-    clusters where inputs are known well-split.
+    are already materialized.
     """
     # a pre-foreachBatch streaming frame has no split count to inspect
     # (df.rdd would raise); its micro-batches are repartitioned by the
@@ -248,8 +246,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.isStreaming:
         return df
     spark = df.sparkSession
-    if spark.conf.get("spark.kpipe.ensureParallelism", "true") == "false":
-        return df
     target = min_partitions or spark.sparkContext.defaultParallelism
 
     try:

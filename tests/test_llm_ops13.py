@@ -164,16 +164,18 @@ def test_d88_neighbors_come_from_probed_cells_only(spark, vectors):
         assert sorted(r["rn"] for r in rs) == list(range(1, 11))
 
 
-def test_fixed_point_distance_matches_numpy_on_adversarial_vectors(spark):
+@pytest.mark.parametrize("dim", [4, 64])
+def test_fixed_point_distance_matches_numpy_on_adversarial_vectors(spark, dim):
     """The cross-engine bridge is floor(sqL2 * 2^24 + 0.5) computed in
     IEEE left-to-right order — check the Spark expression against a
     numpy recomputation on vectors the corpus never exercises:
     near-identical pairs (differences at 1e-9), mixed magnitudes
-    (1e-6 vs 1e3), negative zeros, and exact ties."""
-    from kpipe_spark.queries.llm_ops13 import _sq_l2q
+    (1e-6 vs 1e3), negative zeros, and exact ties. Both widths the PQ
+    kernels use: the 4-wide subspace distance (encode, ADC) and the
+    64-wide full-vector sum (coarse assignment, probe ranking, refine)."""
+    from kpipe_spark.functions.ann_index import _fixed_sq_l2
 
     rng = np.random.default_rng(20260815)
-    dim = 4
     pairs = []
     for i in range(200):
         a = rng.normal(0, 1, dim)
@@ -193,11 +195,11 @@ def test_fixed_point_distance_matches_numpy_on_adversarial_vectors(spark):
     got = {
         r["pair_id"]: r["dq"]
         for r in df.select(
-            "pair_id", _sq_l2q("a", "b", dim).alias("dq")
+            "pair_id", _fixed_sq_l2("a", "b", dim).alias("dq")
         ).collect()
     }
     for pid, a, b in pairs:
-        # numpy reference in the same order: ((t0+t1)+t2)+t3
+        # numpy reference in the same order: ((t0+t1)+t2)+...
         av, bv = np.array(a), np.array(b)
         t = (av - bv) * (av - bv)
         acc = 0.0

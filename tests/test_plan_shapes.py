@@ -127,8 +127,10 @@ def test_broadcast_hints_are_reviewed_and_bounded(spark):
         "sketch",      # sketches.CmsSketch.estimate: <= lanes*width
                        # aggregated counters (4096, fixed forever)
         "probe_stats",  # llm_ops13 d93/d94: one row per panel query
-        "cb",          # llm_ops13 d86: m*k-row PQ codebook (1024 rows)
-        "adc",         # llm_ops13 d86: panel*m*k ADC lookup table
+        "cb",          # ann_index PQ kernels: m*k-row codebook (1024
+                       # rows in d86-d89's family)
+        "adc",         # ann_index PQ kernels: queries*nprobe*m*k ADC
+                       # lookup table (an eval panel or serving batch)
         "qv",          # ann_index refine: the bounded query panel
         "hist",        # selection.py: <=10001-row quality histogram
         "freq",        # vocab-sized token document-frequency table
@@ -179,6 +181,59 @@ def test_broadcast_hints_are_reviewed_and_bounded(spark):
         "unreviewed broadcast hints (add to allowlist with a bound):\n"
         + "\n".join(offenders)
     )
+
+
+def test_pq_kernels_have_one_home():
+    """One implementation per kernel: under kpipe_spark/ the 2^24
+    fixed-point scale and the unrolled fixed-point squared L2 are
+    defined only in functions/ann_index.py — every other module imports
+    them — and the module-level PQ kernels there broadcast only the
+    bounded operands the audit above reviewed: centroids, probes, the
+    codebook, the ADC table and the query panel."""
+    import ast
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "kpipe_spark")
+    home = os.path.join("functions", "ann_index.py")
+    scale = re.compile(r"1\s*<<\s*24")
+    unrolled_l2 = re.compile(r"element_at\([^()]*\)\s*-\s*F\.element_at\(")
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            if os.path.relpath(path, root) == home:
+                continue
+            with open(path) as fh:
+                src = fh.read()
+            for pat in (scale, unrolled_l2):
+                for mm in pat.finditer(src):
+                    line = src[: mm.start()].count("\n") + 1
+                    offenders.append(f"{fn}:{line} {mm.group(0)}")
+    assert not offenders, (
+        "PQ kernel code outside functions/ann_index.py (import it):\n"
+        + "\n".join(offenders)
+    )
+
+    with open(os.path.join(root, home)) as fh:
+        tree = ast.parse(fh.read())
+    kernel_operands = {"cents", "probes", "cb", "adc", "qv"}
+    seen = set()
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "broadcast"
+            ):
+                op = node.args[0]
+                name = op.id if isinstance(op, ast.Name) else ast.dump(op)
+                assert name in kernel_operands, (fn.name, name)
+                seen.add(name)
+    assert {"cents", "cb", "adc"} <= seen, seen
 
 
 def test_component_join_is_size_gated_both_regimes(spark, tmp_path):
