@@ -2,14 +2,21 @@
 """Headline benchmark: run the flagship queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}. The full artifact (per-query ambient
-contention, A/B guards, streaming stats) is written to --out (default
-BENCH_HEADLINE.json); the stdout line is sized to fit the driver's
-bounded 2000-char tail capture (see _compact_headline_line).
+"queries": {name: sec}, "sf": ...}. The full artifact (per-row
+measurements, A/B guards, streaming stats) is written to --out (default
+BENCH_HEADLINE_c{cores}.json, named after the session's core count);
+the stdout line is sized to fit the driver's bounded 2000-char tail
+capture (see _compact_headline_line). ``--sweep`` times every
+registered query once instead (default --out SWEEP.json).
 
 Each query is timed end-to-end (plan + execute + noop-sink write) after
 one warm-up query primes the JVM/session. Queries are the oracle-graded
 headliners spanning scan-agg, multi-join, window, dedup and similarity.
+Every headline and sweep row records what was measured and nothing
+else: the best wall time, the external cores other processes burned
+during the capture, and the best run's Spark task CPU, task count and
+single-task stage share. Performance claims are decided by the paired
+runs of ``perfbench/``, not here.
 
 Methodology: the noop sink forces FULL materialization of every output
 column. A count() would let Catalyst prune the measured work away — a
@@ -24,13 +31,16 @@ import json
 import os
 import sys
 import time
+import uuid
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from kpipe_spark.queries import all_queries  # noqa: E402
 from kpipe_spark.session import get_spark  # noqa: E402
+from perfbench.layers import StatusStore, environment, stage_totals  # noqa: E402
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -227,502 +237,6 @@ def _pipeline_throughput(build, n_events: int, runs: int = 5) -> dict:
         "spread_over_median": round((rates[-1] - rates[0]) / median, 3),
         "runs": runs,
     }
-
-
-_REPO_DIR = os.path.dirname(os.path.abspath(__file__))
-
-
-def _latest_sweep_artifacts(n: int = 2) -> list[str]:
-    """The newest n committed SWEEP_r{NN}.json paths, newest first."""
-    import glob
-    import re
-
-    def round_no(p: str) -> int:
-        m = re.search(r"SWEEP_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    paths = sorted(
-        glob.glob(os.path.join(_REPO_DIR, "SWEEP_r*.json")),
-        key=round_no,
-        reverse=True,
-    )
-    return paths[:n]
-
-
-def _headline_carry_candidates(out_path: str) -> list[str]:
-    """Committed-headline fallbacks for the degraded-timer carry when
-    ``out_path`` itself doesn't exist yet (a fresh BENCH_r{N}.json run
-    — round-12 ADVICE #3): the committed BENCH_HEADLINE.json first
-    (the repo's quiet-capture artifact), then the newest committed
-    BENCH_r{NN}.json, excluding the file this run is about to write."""
-    import glob
-    import re
-
-    def round_no(p: str) -> int:
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    cands = [os.path.join(_REPO_DIR, "BENCH_HEADLINE.json")]
-    cands += sorted(
-        glob.glob(os.path.join(_REPO_DIR, "BENCH_r*.json")),
-        key=round_no,
-        reverse=True,
-    )
-    return [
-        p for p in cands if os.path.abspath(p) != os.path.abspath(out_path)
-    ]
-
-
-def _sweep_delta(cur_doc: dict, prev_path: str) -> dict | None:
-    """Round-over-round sweep comparison on QUIET ROWS ONLY — the
-    signal ARCHITECTURE §6.5 says to trust over totals (sweep totals
-    moved 146.5→199.6 s across round 7 on identical code purely with
-    host noise). Compares the common queries whose capture ambient was
-    under the gate in BOTH artifacts; movers are named, with the
-    standing caveat that sweep rows are single captures (confirm
-    best-of-3 before acting)."""
-    try:
-        with open(prev_path) as f:
-            prev = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    gate = _ambient_gate()
-    cq, pq = cur_doc.get("queries", {}), prev.get("queries", {})
-    ca = cur_doc.get("ambient_load_per_query", {})
-    pa = prev.get("ambient_load_per_query", {})
-    common = [n for n in cq if n in pq]
-    quiet = [
-        n
-        for n in common
-        if ca.get(n, 0.0) <= gate and pa.get(n, 0.0) <= gate
-    ]
-    movers = {
-        n: {"prev": pq[n], "cur": cq[n]}
-        for n in quiet
-        if _is_mover(cq[n], pq[n]) or _is_mover(pq[n], cq[n])
-    }
-    sub_prev = round(sum(pq[n] for n in quiet), 1)
-    sub_cur = round(sum(cq[n] for n in quiet), 1)
-    out = {
-        "prev_artifact": os.path.basename(prev_path),
-        "n_common": len(common),
-        "n_quiet_compared": len(quiet),
-        "quiet_subtotal_prev": sub_prev,
-        "quiet_subtotal_cur": sub_cur,
-        "quiet_subtotal_ratio": round(sub_cur / max(sub_prev, 1e-9), 3),
-        "movers": dict(sorted(movers.items())),
-        "note": (
-            "quiet rows = ambient under gate in BOTH artifacts; sweep "
-            "rows are single captures — regression-direction movers "
-            "are auto-adjudicated best-of-3 in movers_confirmation "
-            "when a live bench session computed this delta (sweep "
-            "runs); a delta recomputed from committed artifacts "
-            "(headline) inherits the sweep artifact's confirmations"
-        ),
-    }
-    # broad host drift poisons even same-session best-of-3
-    # confirmations: when ~200 UNTOUCHED queries all read slower, a
-    # 'confirmed_regression' verdict usually confirms the session, not
-    # the code (measured r9: a sweep started minutes after a 20-min
-    # test-suite run read +14% across the board and 'confirmed' three
-    # movers that a fresh session put back near their r8 levels)
-    if out["quiet_subtotal_ratio"] > 1.1 or out["quiet_subtotal_ratio"] < 0.9:
-        out["host_drift_caveat"] = (
-            f"quiet subtotal moved {out['quiet_subtotal_ratio']}x across "
-            f"{len(quiet)} common rows — session/host-level drift; read "
-            "movers_confirmation verdicts against it (a confirmed "
-            "regression under broad drift needs a FRESH-session check "
-            "before acting)"
-        )
-    return out
-
-
-def _env_versions(spark) -> dict:
-    """Toolchain pin for the sweep artifact: python / pyspark / JVM.
-    Lets an anchor_delta drift bisect toolchain-vs-host in one diff."""
-    import platform
-
-    try:
-        jvm = spark.sparkContext._jvm.System.getProperty("java.version")
-    except Exception:
-        jvm = None
-    import pyspark
-
-    return {
-        "python": platform.python_version(),
-        "pyspark": pyspark.__version__,
-        "java": jvm,
-    }
-
-
-def _anchor_sweep_artifact(out_path: str) -> str | None:
-    """The OLDEST committed SWEEP_r{NN}.json — the fixed anchor the
-    round-12 verdict asked for (What's wrong #1/#2): every round's
-    delta compares only to the PREVIOUS artifact, so a slow monotone
-    environment (or data-layout) degradation re-anchors itself each
-    round and never fires any gate. Comparing quiet rows against the
-    oldest artifact as well keeps a persisted elevation visible until
-    it is explained or deliberately re-anchored."""
-    arts = [
-        p
-        # unbounded listing: a capped one would silently advance the
-        # "fixed" anchor one round per round once the cap is exceeded —
-        # the exact re-anchoring drift this function exists to prevent
-        for p in _latest_sweep_artifacts(n=10**9)
-        if os.path.abspath(p) != os.path.abspath(out_path)
-    ]
-    return arts[-1] if arts else None
-
-
-def _anchor_delta(cur_doc: dict, anchor_path: str) -> dict | None:
-    """Quiet-rows comparison against the oldest committed sweep (the
-    anchor), per row and in aggregate. Flags cumulative moves the
-    round-over-round delta is structurally blind to: a row elevated
-    ≥1.5× vs its anchor-quiet value stays listed EVERY round until it
-    returns or the anchor is deliberately re-set, even when the
-    previous-round delta reads green (the d62/d08 step-change class —
-    stepped up in a drifted session, then compared only to itself)."""
-    base = _sweep_delta(cur_doc, anchor_path)
-    if base is None:
-        return None
-    try:
-        with open(anchor_path) as f:
-            anchor = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    gate = _ambient_gate()
-    cq, aq = cur_doc.get("queries", {}), anchor.get("queries", {})
-    ca = cur_doc.get("ambient_load_per_query", {})
-    aa = anchor.get("ambient_load_per_query", {})
-    quiet = [
-        n
-        for n in cq
-        if n in aq and ca.get(n, 0.0) <= gate and aa.get(n, 0.0) <= gate
-    ]
-    vs_anchor = {
-        n: round(cq[n] / max(aq[n], 1e-9), 2) for n in sorted(quiet)
-    }
-    # the shared two-part threshold on UNROUNDED values — an inline
-    # re-implementation (or flagging off the display-rounded ratio)
-    # would desynchronize detection from _confirm_anchor_elevations'
-    # re-test, which adjudicates with _is_mover
-    elevated = {
-        n: vs_anchor[n] for n in vs_anchor if _is_mover(cq[n], aq[n])
-    }
-    out = {
-        "anchor_artifact": os.path.basename(anchor_path),
-        "n_quiet_compared": base["n_quiet_compared"],
-        "quiet_subtotal_anchor": base["quiet_subtotal_prev"],
-        "quiet_subtotal_cur": base["quiet_subtotal_cur"],
-        "quiet_subtotal_ratio_vs_anchor": base["quiet_subtotal_ratio"],
-        "vs_anchor_ratio": vs_anchor,
-        "rows_elevated_vs_anchor": dict(sorted(elevated.items())),
-        "note": (
-            "cumulative comparison to the OLDEST committed quiet sweep "
-            "— rows here may read green in sweep_delta (which "
-            "re-anchors to the previous round each time); a row stays "
-            "flagged until it returns to anchor level or the anchor is "
-            "deliberately reset with an explanation"
-        ),
-    }
-    if out["quiet_subtotal_ratio_vs_anchor"] >= 1.5:
-        out["bisect_flag"] = (
-            f"quiet subtotal {out['quiet_subtotal_ratio_vs_anchor']}x "
-            "vs the oldest anchor — environment-vs-repo bisect required "
-            "(spark-warehouse accretion, testdata fragmentation, JVM "
-            "updates, host aging)"
-        )
-    return out
-
-
-def _sentinel_series(out_path: str, cur_doc: dict) -> list[dict]:
-    """Per-round (q01 sentinel, artifact total, loadavg) time-series
-    over every committed sweep artifact plus the current run — the
-    trend view the round-12 verdict asked for, so a monotone creep is
-    visible inside one artifact instead of requiring a reader to open
-    seven."""
-    series = []
-    for p in reversed(_latest_sweep_artifacts(n=10**9)):
-        if os.path.abspath(p) == os.path.abspath(out_path):
-            continue
-        try:
-            with open(p) as f:
-                doc = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        series.append(
-            {
-                "artifact": os.path.basename(p),
-                "q01": doc.get("queries", {}).get(_FRESH_SENTINEL),
-                "total": doc.get("value"),
-                "loadavg_start": doc.get("loadavg_start"),
-            }
-        )
-    series.append(
-        {
-            "artifact": os.path.basename(out_path),
-            "q01": cur_doc.get("queries", {}).get(_FRESH_SENTINEL),
-            "total": cur_doc.get("value"),
-            "loadavg_start": cur_doc.get("loadavg_start"),
-        }
-    )
-    return series
-
-
-def _confirm_anchor_elevations(
-    spark,
-    sf_dir,
-    queries,
-    anchor_delta: dict,
-    anchor_queries: dict,
-    reuse_best3: dict | None = None,
-) -> dict:
-    """Best-of-3 adjudication of ``rows_elevated_vs_anchor`` — the
-    anchor analogue of ``_confirm_movers`` (round-13: the first live
-    anchor_delta flagged 12 rows; the q01-sentinel best-of-3 protocol
-    cleared every one as single-capture noise, so the adjudication is
-    machine-side from now on). Each elevated row re-times best-of-3
-    in the warmed session with the q01 sentinel alongside; verdict
-    ``single_capture_noise`` when the best-of-3 fails the two-part
-    test vs the anchor value (>0.3 s AND >1.5×), else
-    ``persisted_elevation`` — investigate or re-anchor deliberately.
-    A drifted confirmation session (sentinel >1.5× its own anchor
-    value) stamps ``session_drifted`` on every row instead of a
-    trustable verdict. ``anchor_queries`` is the anchor artifact's
-    already-parsed queries dict; ``reuse_best3`` maps rows that
-    movers_confirmation best-of-3'd moments earlier in this same
-    session to those values — the anchor verdict reuses them instead
-    of timing a third identical best-of-3 of the same query."""
-    aq = anchor_queries
-    reuse_best3 = reuse_best3 or {}
-
-    def best3(name: str) -> float:
-        q = queries[name]
-        q.build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            q.build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    sentinel = best3(_FRESH_SENTINEL)
-    sentinel_anchor = aq.get(_FRESH_SENTINEL)
-    drifted = (
-        sentinel_anchor is not None and sentinel > 1.5 * sentinel_anchor
-    )
-    out: dict[str, dict] = {
-        "_sentinel": {
-            "query": _FRESH_SENTINEL,
-            "best3": sentinel,
-            "anchor": sentinel_anchor,
-        }
-    }
-    for name in anchor_delta.get("rows_elevated_vs_anchor", {}):
-        if name not in queries or name not in aq:
-            continue
-        reused = name in reuse_best3
-        b3 = reuse_best3[name] if reused else best3(name)
-        if drifted:
-            verdict = "session_drifted"
-        elif _is_mover(b3, aq[name]):
-            verdict = "persisted_elevation"
-        else:
-            verdict = "single_capture_noise"
-        row = {"anchor": aq[name], "best3": b3, "verdict": verdict}
-        if reused:
-            row["best3_from"] = "movers_confirmation"
-        out[name] = row
-    return out
-
-
-def _is_mover(cur: float, ref: float) -> bool:
-    """THE two-part mover threshold — >0.3 s absolute AND >1.5× ratio,
-    directional (``cur`` worse than ``ref``). One definition shared by
-    mover DETECTION (`_sweep_delta`, symmetric via both directions)
-    and ADJUDICATION (`_confirm_movers`, best-of-3 vs prev and vs the
-    older quiet level): tuning the gate in one place cannot silently
-    desynchronize what the sweep calls a mover from what the
-    adjudication re-tests."""
-    return (cur - ref > 0.3) and (cur > 1.5 * max(ref, 1e-9))
-
-
-def _confirm_movers(
-    spark, sf_dir, queries, movers: dict, prior_quiet: dict | None = None
-) -> dict:
-    """Machine adjudication of the sweep_delta movers that point in
-    the REGRESSION direction (cur > prev): each gets an automatic
-    best-of-3 re-run in the same warmed session, because a sweep row
-    is a single timed capture and can eat a GC pause worth 2x+ on a
-    sub-2 s query. Rounds 6-8 adjudicated these by hand in prose every
-    round (r8: m05 2.43 s single vs 0.584 best-of-3, d47 5.65 vs 3.74
-    — both capture flakes); this embeds the verdict in the artifact.
-
-    verdict per mover: ``capture_flake`` if the best-of-3 no longer
-    qualifies as a mover against prev under the SAME two-part
-    threshold _sweep_delta uses (>0.3 s absolute AND >1.5x ratio — a
-    ratio-only test would 'confirm' sub-second deltas the sweep's own
-    definition doesn't even call movers); ``confirmed_regression`` if
-    it still does — investigate before round end; ``hot_capture`` if
-    the confirmation window itself was contended after one quiet
-    retry (CLAUDE.md: never compare a number whose ambient exceeded
-    the gate — a machine-stamped verdict from a hot capture is
-    exactly that comparison). Improvement-direction movers are left
-    alone (a too-good single capture overstates a win but flags
-    nothing to fix; the next round's delta self-corrects against it).
-
-    ``prior_quiet`` (name -> quiet capture from the round BEFORE prev)
-    cross-checks a confirmed regression against the longer history:
-    prev is itself a single capture and can flake in the FAST
-    direction, minting a phantom regression one round later (r10
-    caught exactly this: d97 read 0.436 in the r9 sweep against a
-    0.648/0.664 r7/r8 steady level, so r10's 0.769 'confirmed' vs
-    prev while sitting 0.1 s off the real level). If the best-of-3 is
-    NOT a mover against the older quiet value under the same
-    ``_is_mover`` threshold, the verdict is ``matches_prior_level`` —
-    deliberately NEUTRAL wording, because the evidence alone cannot
-    distinguish its two readings: (a) prev was a fast-side capture
-    flake (the d97 case — nothing to fix), or (b) prev was a REAL
-    prior-round improvement and this round regressed it back (very
-    much something to fix). Disambiguate against the prior round's
-    code diff before dismissing; the earlier 'prev_capture_flake'
-    name baked reading (a) into the artifact and would have shipped
-    reading (b) unflagged."""
-    gate = _ambient_gate()
-    budget = _RequeueBudget()
-    prior_quiet = prior_quiet or {}
-    out: dict[str, dict] = {}
-    for name, mv in sorted(movers.items()):
-        if mv["cur"] <= mv["prev"] or name not in queries:
-            continue
-        q = queries[name]
-        best3, ext = _timed_capture(lambda: q.build(spark, sf_dir), runs=3)
-        if gate > 0 and ext > gate:
-            _await_ambient_quiet(gate, budget)
-            best3b, ext = _timed_capture(
-                lambda: q.build(spark, sf_dir), runs=3
-            )
-            best3 = min(best3, best3b)
-        still_a_mover = _is_mover(best3, mv["prev"])
-        older = prior_quiet.get(name)
-        rec = {
-            "prev": mv["prev"],
-            "cur_single": mv["cur"],
-            "cur_best3": round(best3, 3),
-            "ambient_during_best3": round(ext, 2),
-        }
-        if gate > 0 and ext > gate:
-            rec["verdict"] = "hot_capture"
-        elif not still_a_mover:
-            rec["verdict"] = "capture_flake"
-        elif older is not None and not _is_mover(best3, older):
-            rec["verdict"] = "matches_prior_level"
-            rec["prior_round_quiet"] = older
-        else:
-            rec["verdict"] = "confirmed_regression"
-            if older is not None:
-                rec["prior_round_quiet"] = older
-        out[name] = rec
-    return out
-
-
-_FRESH_SENTINEL = "q01_pricing_summary"
-
-_FRESH_CHECK_SCRIPT = r"""
-import json, sys, time
-repo, sf_dir, names_json = sys.argv[1], sys.argv[2], sys.argv[3]
-sys.path.insert(0, repo)
-names = json.loads(names_json)
-from kpipe_spark.session import get_spark
-from kpipe_spark.queries import all_queries
-from kpipe_spark.catalog import TABLE_NAMES, load_table
-spark = get_spark(app_name="kpipe-bench-fresh-check")
-spark.sparkContext.setLogLevel("ERROR")
-for t in TABLE_NAMES:
-    load_table(spark, sf_dir, t).count()
-qs = all_queries()
-out = {}
-for n in names:
-    q = qs[n]
-    q.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        q.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    out[n] = round(best, 3)
-print("FRESHJSON:" + json.dumps(out))
-"""
-
-
-def _fresh_session_check(
-    sf_dir: str, movers_prev: dict[str, float], sentinel_prev: float | None
-) -> dict:
-    """The machine form of the round-10/11 hand adjudication: when the
-    whole sweep session drifted (quiet_subtotal_ratio > ~1.2), a
-    same-session best-of-3 'confirmed_regression' usually confirms the
-    SESSION, not the code — the decisive test is a FRESH process
-    (new JVM, new worker pool) timing each confirmed mover next to an
-    untouched sentinel. Verdicts per mover, from the fresh best-of-3
-    against the same prev reference `_confirm_movers` used:
-    ``session_weather`` (no longer a mover under `_is_mover` — the
-    drifted session minted it), ``confirmed_fresh`` (still a mover
-    while the sentinel sits near its prev level — real, investigate),
-    ``fresh_session_also_drifted`` (sentinel itself reads >1.25× prev
-    — the host is still bad; nothing can be concluded, try later)."""
-    import subprocess
-
-    names = [_FRESH_SENTINEL] + [
-        n for n in sorted(movers_prev) if n != _FRESH_SENTINEL
-    ]
-    try:
-        proc = subprocess.run(
-            [sys.executable, "-c", _FRESH_CHECK_SCRIPT, _REPO_DIR,
-             sf_dir, json.dumps(names)],
-            capture_output=True,
-            text=True,
-            timeout=1200,
-        )
-        fresh = {}
-        for line in proc.stdout.splitlines():
-            if line.startswith("FRESHJSON:"):
-                fresh = json.loads(line[len("FRESHJSON:"):])
-        if not fresh:
-            return {"error": "fresh session produced no timings",
-                    "returncode": proc.returncode,
-                    "stderr_tail": proc.stderr[-500:]}
-    except (subprocess.TimeoutExpired, OSError) as e:
-        return {"error": f"fresh session failed: {e}"}
-    out: dict = {"fresh_timings": fresh}
-    sent_ratio = None
-    if sentinel_prev and fresh.get(_FRESH_SENTINEL):
-        sent_ratio = round(fresh[_FRESH_SENTINEL] / sentinel_prev, 3)
-    out["sentinel"] = {
-        "name": _FRESH_SENTINEL,
-        "prev": sentinel_prev,
-        "fresh_best3": fresh.get(_FRESH_SENTINEL),
-        "ratio": sent_ratio,
-    }
-    verdicts: dict[str, dict] = {}
-    for n, prev in movers_prev.items():
-        f = fresh.get(n)
-        if f is None:
-            continue
-        rec = {"prev": prev, "fresh_best3": f,
-               "ratio": round(f / max(prev, 1e-9), 3)}
-        if sent_ratio is not None and sent_ratio > 1.25:
-            rec["verdict"] = "fresh_session_also_drifted"
-        elif not _is_mover(f, prev):
-            rec["verdict"] = "session_weather"
-        else:
-            rec["verdict"] = "confirmed_fresh"
-        verdicts[n] = rec
-    out["movers"] = verdicts
-    return out
 
 
 def _work_overlap_ab(spark, sf_dir: str, work_ms: float = 10.0) -> dict:
@@ -929,8 +443,6 @@ def _incremental_admit_ab(spark, sf_dir: str) -> dict:
     from kpipe_spark.catalog import load_tables
     from kpipe_spark.functions.corpus_index import CorpusIndex
 
-    import uuid
-
     docs = load_tables(spark, sf_dir).documents
     is_new = F.col("doc_id") % 4 == 0
     # uuid-suffixed: two concurrent bench runs share one warehouse and
@@ -985,8 +497,6 @@ def _cluster_reuse_ab(spark, sf_dir: str) -> dict:
     the serve side; at 100 TB the gap is four full corpus passes per
     reporting cycle. ``examples/cluster_reuse.py`` is the parity
     proof (stored == inline row-for-row)."""
-    import uuid
-
     from kpipe_spark.catalog import load_tables
     from kpipe_spark.functions.cluster_index import ClusterIndex
     from kpipe_spark.functions.dedup import dup_components
@@ -1054,8 +564,6 @@ def _cluster_incremental_refresh_ab(spark, sf_dir: str) -> dict:
     the batch, so at a 100 TB release cadence the gap is the whole
     corpus re-pass per release. Both sides are best-of-2 with the
     stored state reset between runs (the fold mutates the table)."""
-    import uuid
-
     from kpipe_spark.catalog import load_tables
     from kpipe_spark.functions.cluster_index import ClusterIndex
     from kpipe_spark.functions.corpus_index import CorpusIndex
@@ -1095,239 +603,19 @@ def _cluster_incremental_refresh_ab(spark, sf_dir: str) -> dict:
         bands.drop()
 
 
-def sweep(out_path: str | None = None) -> None:
-    """Time EVERY registry query (warm, noop sink) and write the full
-    per-query table to a JSON artifact (--out, default SWEEP.json) so
-    outliers are diffable round-over-round instead of living in prose.
-    The headline list is a curated subset; this is the blind-spot
-    catcher — round 4's run found a query at 77 s (d11) that three
-    rounds of headline benches never saw.
-
-    Outlier policy (the artifact embeds it): a query >2x its
-    prior-round sweep time ON A QUIET CAPTURE (ambient under the gate)
-    is investigated before round end; hot captures are re-run, not
-    compared. Each query gets one warm-up run, then one timed capture
-    with the same external-CPU ambient measurement + bounded requeue
-    the headline loop uses."""
-    _await_quiet_machine()
-    out_path = out_path or os.environ.get(
-        "SPARK_GRAFT_SWEEP_OUT", "SWEEP.json"
-    )
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    loadavg_start = round(os.getloadavg()[0], 2)
-    spark = get_spark(app_name="kpipe-spark-bench-sweep")
-    spark.sparkContext.setLogLevel("ERROR")
-    from kpipe_spark.catalog import TABLE_NAMES, load_table
-
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).count()
-    queries = all_queries()
-    gate = _ambient_gate()
-    budget = _RequeueBudget()
-    times: dict[str, float] = {}
-    ambient: dict[str, float] = {}
-    requeued: dict[str, int] = {}
-    for name, q in queries.items():
-        q.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best, ext = _timed_capture(lambda: q.build(spark, sf_dir), runs=1)
-        retries = 0
-        while gate > 0 and ext > gate and retries < 2:
-            _await_ambient_quiet(gate, budget)
-            best2, ext2 = _timed_capture(
-                lambda: q.build(spark, sf_dir), runs=1
-            )
-            best = min(best, best2)
-            ext = min(ext, ext2)
-            retries += 1
-        times[name] = round(best, 3)
-        ambient[name] = round(ext, 2)
-        if retries:
-            requeued[name] = retries
-    for name, t in sorted(times.items(), key=lambda kv: -kv[1]):
-        print(f"{t:8.3f}  {name}")
-    doc = {
-        "metric": "full_registry_sweep_runtime",
-        "value": round(sum(times.values()), 1),
-        "unit": "sec",
-        "n_queries": len(times),
-        "queries": dict(sorted(times.items())),
-        "ambient_load_per_query": dict(sorted(ambient.items())),
-        "ambient_gate": gate,
-        "sweep_requeues": requeued,
-        "requeue_wait_sec": int(budget.spent),
-        "slowest": dict(sorted(times.items(), key=lambda kv: -kv[1])[:10]),
-        "outlier_policy": (
-            ">2x prior-round sweep time on a quiet capture (ambient "
-            "under gate) => confirm with best-of-3 first (sweep rows "
-            "are single timed captures and can eat a GC pause), then "
-            "investigate before round end; hot captures are re-run, "
-            "never compared"
-        ),
-        "sf": sf_dir,
-        "loadavg_start": loadavg_start,
-        # environment pin (round-12 What's-wrong #1 bisect helper): a
-        # cumulative anchor_delta drift with CHANGED versions here
-        # bisects to the toolchain before anything else
-        "versions": _env_versions(spark),
-    }
-    # round-over-round quiet-rows comparison vs the newest committed
-    # sweep artifact (excluding the file this run is about to write)
-    prev = [
-        p
-        for p in _latest_sweep_artifacts(3)
-        if os.path.abspath(p) != os.path.abspath(out_path)
-    ][:2]
-    if prev:
-        delta = _sweep_delta(doc, prev[0])
-        if delta and delta["movers"]:
-            # regression-direction movers get an automatic best-of-3
-            # re-run while the warmed session is still alive, so the
-            # artifact ships its own adjudication (capture flake vs
-            # confirmed regression) instead of leaving two phantom
-            # regressions in every round's delta for a reader to chase;
-            # the round-before-prev's quiet rows cross-check against a
-            # fast-side flake in prev itself (_confirm_movers docstring)
-            prior_quiet: dict[str, float] = {}
-            if len(prev) > 1:
-                try:
-                    with open(prev[1]) as f:
-                        p2 = json.load(f)
-                    gate2 = _ambient_gate()
-                    p2q = p2.get("queries", {})
-                    p2a = p2.get("ambient_load_per_query", {})
-                    prior_quiet = {
-                        n: t
-                        for n, t in p2q.items()
-                        if p2a.get(n, 0.0) <= gate2
-                    }
-                except (OSError, json.JSONDecodeError):
-                    pass
-            delta["movers_confirmation"] = _confirm_movers(
-                spark, sf_dir, queries, delta["movers"], prior_quiet
-            )
-            # broad-drift escalation (round-11 verdict item #4): when
-            # the whole session drifted, a same-session confirmation
-            # cannot separate code from weather — re-test each
-            # confirmed mover plus an untouched sentinel in a FRESH
-            # process and ship the adjudication machine-readable
-            confirmed = {
-                n: delta["movers"][n]["prev"]
-                for n, c in delta["movers_confirmation"].items()
-                if c["verdict"] == "confirmed_regression"
-            }
-            if confirmed and delta["quiet_subtotal_ratio"] > 1.2:
-                sentinel_prev = None
-                try:
-                    with open(prev[0]) as f:
-                        sentinel_prev = (
-                            json.load(f)
-                            .get("queries", {})
-                            .get(_FRESH_SENTINEL)
-                        )
-                except (OSError, json.JSONDecodeError):
-                    pass
-                # quiesce our own JVM so the fresh process times on a
-                # machine as close to idle as this run can make it
-                spark.stop()
-                delta["fresh_session_check"] = _fresh_session_check(
-                    sf_dir, confirmed, sentinel_prev
-                )
-        doc["sweep_delta"] = delta
-    # cumulative evidence vs the OLDEST committed sweep (round-12
-    # verdict What's-wrong #1/#2): sweep_delta re-anchors to the
-    # previous round every round, so a monotone creep never fires its
-    # gates — the anchor delta and the sentinel series keep it visible
-    anchor = _anchor_sweep_artifact(out_path)
-    if anchor:
-        anchor_delta = _anchor_delta(doc, anchor)
-        if anchor_delta:
-            if anchor_delta.get("rows_elevated_vs_anchor"):
-                try:
-                    with open(anchor) as f:
-                        anchor_queries = json.load(f).get("queries", {})
-                    # rows movers_confirmation best-of-3'd moments ago
-                    # hand those values over instead of a third
-                    # identical re-timing of the same query
-                    reuse = {
-                        n: c["cur_best3"]
-                        for n, c in (
-                            doc.get("sweep_delta", {}) or {}
-                        ).get("movers_confirmation", {}).items()
-                        if "cur_best3" in c
-                    }
-                    # the fresh_session_check path may have stopped the
-                    # session; a dead session means no adjudication —
-                    # the flags ship raw and the protocol runs by hand
-                    anchor_delta["anchor_confirmation"] = (
-                        _confirm_anchor_elevations(
-                            spark,
-                            sf_dir,
-                            queries,
-                            anchor_delta,
-                            anchor_queries,
-                            reuse_best3=reuse,
-                        )
-                    )
-                except Exception as e:  # pragma: no cover
-                    anchor_delta["anchor_confirmation"] = {
-                        "_error": repr(e)
-                    }
-            doc["anchor_delta"] = anchor_delta
-    doc["sentinel_series"] = _sentinel_series(out_path, doc)
-    with open(out_path, "w") as f:
-        json.dump(doc, f, indent=1, sort_keys=False)
-        f.write("\n")
-    print(json.dumps({k: doc[k] for k in (
-        "metric", "value", "unit", "n_queries", "slowest", "sf"
-    )}))
-    adelta = doc.get("anchor_delta")
-    if adelta:
-        print(
-            f"anchor_delta vs {adelta['anchor_artifact']}: quiet "
-            f"subtotal x{adelta['quiet_subtotal_ratio_vs_anchor']}; "
-            f"rows elevated >=1.5x: "
-            f"{sorted(adelta['rows_elevated_vs_anchor']) or 'none'}",
-            file=sys.stderr,
-        )
-    delta = doc.get("sweep_delta")
-    if delta:
-        print(
-            f"sweep_delta vs {delta['prev_artifact']}: quiet subtotal "
-            f"{delta['quiet_subtotal_prev']} -> "
-            f"{delta['quiet_subtotal_cur']} s over "
-            f"{delta['n_quiet_compared']} quiet rows; movers: "
-            f"{sorted(delta['movers']) or 'none'}",
-            file=sys.stderr,
-        )
-        for name, c in delta.get("movers_confirmation", {}).items():
-            print(
-                f"  mover {name}: single {c['cur_single']}s vs prev "
-                f"{c['prev']}s -> best-of-3 {c['cur_best3']}s = "
-                f"{c['verdict']}",
-                file=sys.stderr,
-            )
-
-
 # ---------------------------------------------------------------------------
-# Per-query contention measurement.
+# Per-row measurement.
 #
-# Rounds 4 and 5 both shipped official artifacts whose numbers the code
-# didn't deserve: r4 was captured wholesale at loadavg 18.9, and r5
-# passed a START-ONLY loadavg gate at 3.95 then absorbed contention
-# that arrived mid-run (d13 read 6.0 s official vs 1.39 s on a quiet
-# re-measure of the identical plan). The fix has to be per query — but
-# raw getloadavg() cannot gate individual queries mid-bench: the bench
-# itself runs 32 executor threads, so the 1-min average is dominated by
-# our own footprint and lags by its 60 s decay constant. What CAN be
-# measured exactly is external-process CPU: /proc/stat's busy jiffies
-# minus the jiffies consumed by our own process tree (python driver +
-# Spark JVM + pyspark workers), over precisely the query's capture
-# window. That difference, divided by the window, is the number of
-# CPU cores the neighbors used while we measured — the contention that
-# actually inflates a CPU-bound query. Each headline query records it
-# as ambient_load_per_query, and any query captured above the gate is
-# re-run after the machine quiets (bounded), keeping the quietest
-# capture.
+# External CPU: /proc/stat's machine-wide busy jiffies minus the jiffies
+# of our own process tree (python driver + Spark JVM + pyspark workers),
+# over exactly the capture window, in cores — the CPU the neighbours
+# burned while we measured. Raw getloadavg() cannot say this: the bench's
+# own executor threads dominate the 1-min average, which also lags by its
+# 60 s decay constant. Task CPU: the executor CPU time, task count and
+# single-task stage share Spark's status store records for the capture's
+# own jobs. Together with wall time they say whether a slow row did more
+# work, waited, or ran while the machine was busy; nothing here waits,
+# retries or compares against older artifacts.
 # ---------------------------------------------------------------------------
 
 _HZ = os.sysconf("SC_CLK_TCK")
@@ -1389,84 +677,16 @@ def _tree_cpu_jiffies() -> int:
     return total
 
 
-def _ambient_gate() -> float:
-    """External-CPU gate in cores (not loadavg units): a query window
-    during which other processes burned more than this many cores is a
-    hot capture. 0 disables (SPARK_GRAFT_AMBIENT_GATE=0)."""
-    return float(os.environ.get("SPARK_GRAFT_AMBIENT_GATE", "2"))
-
-
-class _RequeueBudget:
-    """Global cap on time spent WAITING for ambient quiet across the
-    whole run: on a machine that never quiets (round 4 sat at loadavg
-    18.9 for the entire window), per-query waits must not compound
-    into hours — once the budget is spent, captures proceed
-    immediately and the recorded ambient_load_per_query says exactly
-    which numbers are noise-dominated."""
-
-    def __init__(self) -> None:
-        self.remaining = float(
-            os.environ.get("SPARK_GRAFT_REQUEUE_BUDGET", "600")
-        )
-        self.spent = 0.0
-
-    def consume(self, seconds: float) -> None:
-        self.remaining -= seconds
-        self.spent += seconds
-
-
-def _await_ambient_quiet(
-    gate: float, budget: "_RequeueBudget", max_wait: float = 240.0
-) -> float:
-    """Idle-sample external CPU in 2 s windows (our tree is quiescent
-    between queries, so external == ambient) until it drops under the
-    gate, the bounded wait expires, or the run-wide budget is spent.
-    Returns seconds waited.
-
-    A PERSISTENT reap pattern (pyspark idle workers timing out every
-    window) makes every sample read the AMBIENT_REAP_CORRUPTED
-    sentinel — quiet is then unobservable, not absent, so after a few
-    consecutive sentinels the wait breaks instead of burning the whole
-    run-wide budget before capturing hot anyway (round-11 ADVICE); the
-    capture that follows records the sentinel as its ambient, so the
-    artifact says "attribution corrupted", never "quiet"."""
-    waited = 0.0
-    corrupted_streak = 0
-    while waited < max_wait and budget.remaining > 0:
-        b0, t0 = _total_busy_jiffies(), _tree_cpu_jiffies()
-        time.sleep(2)
-        waited += 2
-        budget.consume(2)
-        # _ext_cores, not the raw difference: a reap-corrupted window
-        # reads NEGATIVE raw (tree out-counts the machine), which the
-        # old form mistook for instant quiet — keep waiting instead
-        ext = _ext_cores(
-            _total_busy_jiffies() - b0, _tree_cpu_jiffies() - t0, 2.0
-        )
-        if ext == AMBIENT_REAP_CORRUPTED:
-            corrupted_streak += 1
-            if corrupted_streak >= 5:
-                break
-            continue
-        corrupted_streak = 0
-        if ext < gate * 0.75:
-            break
-    return waited
-
-
 def _timer_health(
     nominal_ms: float = 10.0, threads: int = 64, sleeps: int = 20
 ) -> dict:
-    """Probe the host's sleep-timer fidelity under thread load: the
-    10 ms streaming rows dispatch time.sleep(0.010) across 128-thread
-    pools, so their rec/s is inversely proportional to ACTUAL sleep
-    latency — on this Firecracker guest, stall episodes manifest as
-    timer degradation (sleep(10 ms) p90 measured 24-94 ms under 64
-    threads in bad windows; round-11 verdict), which halves the 10 ms
-    rows while CPU-bound queries stay flat. ``threads`` concurrent
-    sleepers × ``sleeps`` samples each ≈ 0.25 s total; p90 ≤ 1.5×
-    nominal is the healthy line (quiet windows measure p90 ≈ 10.2 ms).
-    """
+    """Sleep-timer fidelity under thread load, recorded next to the
+    10 ms streaming rows: those rows dispatch time.sleep(0.010) across
+    128-thread pools, so their rec/s is inversely proportional to the
+    ACTUAL sleep latency (stall episodes on a VM guest have measured
+    p90 24-94 ms under 64 threads, halving the 10 ms rows while
+    CPU-bound queries stay flat). ``threads`` concurrent sleepers ×
+    ``sleeps`` samples each ≈ 0.25 s total."""
     import threading
 
     results: list[float] = []
@@ -1488,215 +708,22 @@ def _timer_health(
     for t in ts:
         t.join()
     results.sort()
-    p50 = results[len(results) // 2]
-    p90 = results[int(len(results) * 0.9)]
     return {
         "nominal_ms": nominal_ms,
-        "p50_ms": round(p50, 2),
-        "p90_ms": round(p90, 2),
+        "p50_ms": round(results[len(results) // 2], 2),
+        "p90_ms": round(results[int(len(results) * 0.9)], 2),
         "p99_ms": round(results[int(len(results) * 0.99)], 2),
         "samples": len(results),
         "threads": threads,
-        "healthy": p90 <= nominal_ms * 1.5,
     }
 
 
-def _await_timer_health(
-    budget: "_RequeueBudget", max_wait: float = 300.0
-) -> dict:
-    """Re-probe the sleep timer (bounded, budget-shared with the
-    ambient waits) until it reads healthy or the wait expires — the
-    timer analogue of _await_ambient_quiet. Returns the LAST probe
-    (healthy or not) plus the seconds waited; the caller decides what
-    a still-degraded window means for its rows (the 10 ms streaming
-    captures refuse to overwrite committed values from one)."""
-    waited = 0.0
-    probe = _timer_health()
-    while (
-        not probe["healthy"] and waited < max_wait and budget.remaining > 0
-    ):
-        time.sleep(15)
-        waited += 15
-        budget.consume(15)
-        probe = _timer_health()
-    probe["wait_sec"] = int(waited)
-    return probe
-
-
-_KEYS_10MS = (
-    "streaming_rps_10ms_work",
-    "streaming_rps_10ms_work_median",
-    "streaming_key_ordered_rps_10ms_work",
-    "streaming_key_ordered_rps_10ms_work_median",
-    "streaming_10ms_delivered_fraction",
-    "streaming_rps_10ms_work_input_basis",
-    "streaming_rps_10ms_work_input_basis_median",
-    "streaming_key_ordered_rps_10ms_work_input_basis",
-    "work_overlap_ab",
-)
-
-
-def _carried_10ms_rows(prev_10ms: dict) -> dict:
-    """The degraded-timer branch of the 10 ms rows: carry the previous
-    committed artifact's values — but only when that artifact proved
-    its own window clean (``timer_health.healthy``) or was itself a
-    marked carry (its values chain back to a healthy capture), so a
-    legacy degraded capture (the r11 artifact has no timer_health) can
-    never launder itself forward. ``streaming_10ms_carry_age`` counts
-    hops back to the last healthy capture; when nothing trustworthy
-    exists the keys ship as explicit nulls — never a degraded capture
-    dressed as a measurement."""
-    prev_timer = prev_10ms.get("timer_health") or {}
-    if (
-        prev_timer.get("healthy")
-        or prev_10ms.get("streaming_10ms_carry_age")
-    ) and all(prev_10ms.get(k) is not None for k in _KEYS_10MS):
-        work_rows = {k: prev_10ms[k] for k in _KEYS_10MS}
-        work_rows["streaming_10ms_carry_age"] = (
-            prev_10ms.get("streaming_10ms_carry_age", 0) + 1
-        )
-    else:
-        work_rows = dict.fromkeys(_KEYS_10MS)
-    work_rows["streaming_10ms_timer_degraded"] = True
-    return work_rows
-
-
-def _suspect_recapture_pass(
-    names,
-    timings: dict[str, float],
-    ambient: dict[str, float],
-    gate: float,
-    sweep_q: dict[str, float],
-    sweep_amb: dict[str, float],
-    capture,
-    budget: "_RequeueBudget | None" = None,
-) -> dict[str, dict]:
-    """The headline form of the sweep's outlier policy, machine-made:
-    a row whose capture reads >SUSPECT_RATIO× its value in the newest
-    committed QUIET sweep has almost certainly eaten a host stall the
-    ambient measure cannot see (guest-invisible hypervisor episodes
-    hit single rows at ambient ~0 — ARCHITECTURE §6.5 round-10 note).
-    Each suspect first waits out ambient contention (same gate/budget
-    discipline as first captures — round-10 ADVICE: an ungated retry
-    window can itself be hot), then re-captures via
-    ``capture(name) -> (best, ext)``; ``timings``/``ambient`` keep the
-    minimum in place, and the evidence dict records the values. A row
-    whose recapture STILL reads over threshold gets ONE more gated
-    recapture (round-13: d05's single recapture shipped 2.613 s, above
-    every quiet measurement in the repo — one retry was not enough for
-    a sustained host episode), and is flagged ``still_suspect`` if the
-    second retry is also over, so the verdict step re-tests it instead
-    of trusting a thrice-inflated number. The threshold dropped 2.0 →
-    1.35 in round 14 (round-13 PERF compared rows 1.4-1.9× over their
-    quiet-sweep levels that the 2× gate never adjudicated);
-    SPARK_GRAFT_SUSPECT_RATIO overrides it. Rows whose sweep reference
-    was itself hot (ambient above ``gate``) are not trusted as
-    references and are skipped."""
-    ratio = float(os.environ.get("SPARK_GRAFT_SUSPECT_RATIO", "1.35"))
-    out: dict[str, dict] = {}
-    for name in names:
-        ref = sweep_q.get(name)
-        if not ref or sweep_amb.get(name, 0.0) > gate > 0:
-            continue
-        if timings[name] <= ratio * ref:
-            continue
-        if budget is not None and gate > 0:
-            _await_ambient_quiet(gate, budget)
-        best, ext = capture(name)
-        out[name] = {
-            "first_capture": timings[name],
-            "recapture": round(best, 3),
-            "quiet_sweep_ref": ref,
-        }
-        if best > ratio * ref:
-            if budget is not None and gate > 0:
-                _await_ambient_quiet(gate, budget)
-            best2, ext2 = capture(name)
-            out[name]["recapture2"] = round(best2, 3)
-            if best2 < best:
-                best, ext = best2, ext2
-            if best > ratio * ref:
-                out[name]["still_suspect"] = True
-        if best < timings[name]:
-            timings[name] = round(best, 3)
-            ambient[name] = round(ext, 2)
-    return out
-
-
-def _ratio_mover_pass(
-    names,
-    timings: dict[str, float],
-    ambient: dict[str, float],
-    gate: float,
-    sweep_q: dict[str, float],
-    sweep_amb: dict[str, float],
-    prev_ratios: dict[str, float],
-    capture,
-    budget: "_RequeueBudget | None" = None,
-    already_recaptured: set[str] | None = None,
-) -> tuple[dict[str, float], dict[str, dict]]:
-    """Headline self-adjudication (round-10 verdict item #5): every
-    row carries ``vs_sweep_ratio`` = headline time / the same query's
-    value in the newest committed QUIET sweep, and a row whose ratio
-    REGRESSED >1.25× against the previous committed artifact's ratio
-    is re-captured (ambient-gated) before the artifact ships — so a
-    host-drift episode is adjudicated by the bench run itself instead
-    of the next round's verdict re-deriving it from file diffs.
-    Returns (ratios, evidence); ``timings``/``ambient`` keep the
-    minimum in place. Improvements (ratio moving DOWN) are not
-    re-captured — only inflation needs adjudication."""
-    evidence: dict[str, dict] = {}
-    skip = already_recaptured or set()
-    for name in names:
-        ref = sweep_q.get(name)
-        if not ref or sweep_amb.get(name, 0.0) > gate > 0:
-            continue
-        prev = prev_ratios.get(name)
-        if not prev or prev <= 0:
-            continue
-        ratio = timings[name] / ref
-        if ratio <= 1.25 * prev:
-            continue
-        if name in skip:
-            # the suspect pass already re-captured this row this run;
-            # its evidence stands — don't burn 3 more executions + an
-            # ambient wait on the same drifted row (round-11 review)
-            continue
-        if budget is not None and gate > 0:
-            _await_ambient_quiet(gate, budget)
-        best, ext = capture(name)
-        evidence[name] = {
-            "first_capture": timings[name],
-            "recapture": round(best, 3),
-            "quiet_sweep_ref": ref,
-            "prev_ratio": prev,
-        }
-        if best < timings[name]:
-            timings[name] = round(best, 3)
-            ambient[name] = round(ext, 2)
-        if timings[name] / ref > 1.25 * prev:
-            evidence[name]["still_moved"] = True
-    ratios = {
-        n: round(timings[n] / sweep_q[n], 3)
-        for n in names
-        # hot sweep references are excluded from adjudication above —
-        # exclude them from the SHIPPED ratios too, or an inflated ref
-        # becomes next round's deflated prev_ratio baseline and fires
-        # spurious movers (round-11 review)
-        if sweep_q.get(n) and not (sweep_amb.get(n, 0.0) > gate > 0)
-    }
-    return ratios, evidence
-
-
-# Ambient marker for a REAP-CORRUPTED window: a reaped descendant's
+# External-cores value of a REAP-CORRUPTED window: a reaped descendant's
 # PRE-window lifetime burn lands in the parent's cutime inside the
 # window it is reaped in, so tree-delta can exceed busy-delta and the
-# honest external residue is unknowable for that window. Attribution
-# failing silently toward 0 would let a genuinely hot window pass the
-# gate (the round-11 review catch), so a corrupted window reads as this
-# gate-failing sentinel instead — the capture loop retries it and, if
-# it ships, the artifact visibly says "attribution corrupted", never
-# "quiet".
+# honest external residue is unknowable for that window. Rather than
+# fail silently toward 0 (which would read as "quiet"), such a window
+# reads as this sentinel: "attribution corrupted".
 AMBIENT_REAP_CORRUPTED = 99.0
 
 
@@ -1710,12 +737,9 @@ def _ext_cores(busy_delta: int, tree_delta: int, wall: float) -> float:
 
 
 def _ambient_during(fn):
-    """(fn(), external cores burned during fn's wall window) — the
-    query loop's ambient evidence extended to the STREAMING captures,
-    which rounds <=11 shipped with no contention record at all: a 0 µs
-    streaming row that read 2x slow was unadjudicable from the
-    artifact (the round-12 gap — the 10 ms rows got the timer probe,
-    the 0 µs rows got nothing)."""
+    """(fn(), external cores burned during fn's wall window, rounded
+    to 0.01) — the external-CPU reading of every query, streaming and
+    pipeline capture."""
     b0, t0 = _total_busy_jiffies(), _tree_cpu_jiffies()
     w0 = time.perf_counter()
     out = fn()
@@ -1726,76 +750,56 @@ def _ambient_during(fn):
     return out, round(ext, 2)
 
 
-def _gated_stream_run(fn, gate: float, budget: "_RequeueBudget"):
-    """One streaming capture with the query loop's hot-window
-    discipline: measure ambient over the run's wall window; if it
-    exceeded the gate, wait out the contention (bounded, shared
-    budget) and capture once more, keeping the run with the higher
-    STEADY rate (contention only deflates a throughput row — max is
-    the quiet-side analogue of the query loop's min). Returns
-    ((whole, steady), ambient, retried)."""
-    r, ext = _ambient_during(fn)
-    retried = 0
-    if gate > 0 and ext > gate and budget.remaining > 0:
-        _await_ambient_quiet(gate, budget)
-        r2, ext2 = _ambient_during(fn)
-        retried = 1
-        if r2[1] > r[1]:
-            r, ext = r2, ext2
-    return r, ext, retried
+def _timed_capture(spark, build, runs: int = 3) -> dict:
+    """One row: best-of-``runs`` wall seconds of ``build()`` plus a
+    noop write (which forces every output column), the external cores
+    over the whole capture window, and the best run's task metrics from
+    the JVM status store — executor CPU seconds summed over its
+    completed stages, their task count, and the share of those stages
+    that ran as a single task. Each run tags its jobs with its own job
+    group, so eager jobs inside ``build()`` count toward the row."""
+    sc = spark.sparkContext
 
+    def best_run() -> tuple[float, str]:
+        best, best_group = float("inf"), ""
+        for _ in range(runs):
+            group = f"bench-capture-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            build().write.format("noop").mode("overwrite").save()
+            sec = time.perf_counter() - t0
+            if sec < best:
+                best, best_group = sec, group
+        # later jobs stay out of the last run's group
+        sc.setJobGroup("bench", "bench")
+        return best, best_group
 
-def _timed_capture(build, runs: int = 3) -> tuple[float, float]:
-    """(best-of-runs seconds, ambient cores during the whole capture
-    window). The noop write forces execution of every output column."""
-    b0, t0j = _total_busy_jiffies(), _tree_cpu_jiffies()
-    w0 = time.perf_counter()
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        build().write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    wall = max(time.perf_counter() - w0, 1e-9)
-    ext = _ext_cores(
-        _total_busy_jiffies() - b0, _tree_cpu_jiffies() - t0j, wall
-    )
-    return best, ext
-
-
-def _await_quiet_machine() -> float:
-    """Ambient-load gate: refuse to start measuring while the machine
-    is busy. Round 4's official artifact was captured at loadavg 18.9
-    and every number inflated ~1.5x with zero plan changes — a bench
-    taken under that much contention measures the neighbors, not the
-    code. Wait (bounded) for 1-min loadavg to drop below the gate;
-    returns seconds waited. Gate/wait tunable via env for machines
-    whose idle baseline differs (SPARK_GRAFT_LOAD_GATE=0 disables)."""
-    gate = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "4"))
-    max_wait = float(os.environ.get("SPARK_GRAFT_LOAD_GATE_WAIT", "900"))
-    if gate <= 0:
-        return 0.0
-    waited = 0.0
-    while os.getloadavg()[0] > gate and waited < max_wait:
-        time.sleep(15)
-        waited += 15
-    if os.getloadavg()[0] > gate:
-        print(
-            f"WARNING: proceeding at loadavg {os.getloadavg()[0]:.1f} "
-            f"> gate {gate} after {int(waited)}s — numbers will be "
-            "noise-dominated",
-            file=sys.stderr,
-        )
-    return waited
+    (best, best_group), ext = _ambient_during(best_run)
+    status = StatusStore(spark)
+    status.drain_listener_bus()
+    totals = stage_totals([
+        s
+        for j in status.jobs({best_group})
+        for sid in j["stages"]
+        if (s := status.stage(sid)) is not None
+    ])
+    return {
+        "wall_s": round(best, 3),
+        "ext_cores": ext,
+        "task_cpu_s": round(totals["stage.cpu_s"], 3),
+        "tasks": totals["stage.tasks"],
+        "single_task_share": round(totals["stage.single_task_share"], 3),
+    }
 
 
 def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
     """The ONE stdout JSON line, sized for the driver's bounded tail
     capture (2000 chars: BENCH_r06.json shipped `parsed: null` because
-    the full doc — per-query ambient dict + two methodology paragraphs —
-    overflowed it and the line got beheaded). The full doc goes to the
-    --out file; stdout carries the contract fields (metric/value/unit/
-    queries/sf) plus compact evidence summaries, dropping optional
-    fields lowest-value-first if the line would still overflow."""
+    the full doc overflowed it and the line got beheaded). The full doc
+    goes to the --out file; stdout carries the contract fields
+    (metric/value/unit/queries/sf), the rates and compact summaries of
+    the per-row readings, dropping optional fields lowest-value-first
+    if the line would still overflow."""
     compact = {
         k: doc[k]
         for k in (
@@ -1803,6 +807,7 @@ def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
             "value",
             "unit",
             "queries",
+            "task_cpu_s",
             "legacy16_subtotal",
             "pipeline_records_per_sec",
             "pipeline_rps_median",
@@ -1819,20 +824,16 @@ def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
             "streaming_key_ordered_rps_10ms_work_input_basis",
             "sf",
             "loadavg_start",
-            "ambient_gate",
-            "requeue_wait_sec",
         )
         if k in doc
     }
-    # per-query ambient collapses to its max + the nonzero rows — on a
-    # quiet run (the only kind worth comparing) that is "0.0" + {}
-    amb = doc.get("ambient_load_per_query", {})
+    # per-row external cores collapse to their max + the nonzero rows —
+    # on a quiet run that is "0.0" + {}
+    amb = {n: r["ext_cores"] for n, r in doc.get("rows", {}).items()}
     compact["ambient_max"] = max(amb.values(), default=0.0)
     hot = {k: v for k, v in amb.items() if v > 0}
     if hot:
         compact["ambient_hot"] = hot
-    if doc.get("bench_requeues"):
-        compact["bench_requeues"] = doc["bench_requeues"]
     th = doc.get("timer_health")
     if th:
         compact["timer_p90_ms"] = th.get("p90_ms")
@@ -1841,20 +842,10 @@ def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
         compact["streaming_ambient_max"] = max(
             (v for vs in samb.values() for v in vs), default=0.0
         )
-    if doc.get("streaming_10ms_timer_degraded"):
-        compact["streaming_10ms_timer_degraded"] = True
-        if doc.get("streaming_10ms_carry_age"):
-            compact["streaming_10ms_carry_age"] = doc[
-                "streaming_10ms_carry_age"
-            ]
-    if doc.get("suspect_recaptures"):
-        compact["suspect_recaptures"] = {
-            n: [v["first_capture"], v["recapture"]]
-            + ([v["recapture2"]] if "recapture2" in v else [])
-            for n, v in doc["suspect_recaptures"].items()
-        }
     ab = doc.get("d05_signature_ab", {})
     if ab:
+        compact["d05_ab_projection_sec"] = ab.get("projection_sec")
+        compact["d05_ab_aggregate_sec"] = ab.get("aggregate_sec")
         compact["d05_ab_shipped_is_faster"] = ab.get("shipped_is_faster")
     admit = doc.get("incremental_admit_ab", {})
     if admit:
@@ -1869,41 +860,20 @@ def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
         compact["cluster_incremental_speedup"] = cinc.get(
             "incremental_speedup"
         )
-    delta = doc.get("sweep_delta")
-    if delta:
-        compact["sweep_quiet_subtotals"] = [
-            delta["quiet_subtotal_prev"],
-            delta["quiet_subtotal_cur"],
-        ]
-        if delta["movers"]:
-            compact["sweep_movers"] = sorted(delta["movers"])
-        conf = delta.get("movers_confirmation", {})
-        if conf:
-            compact["sweep_movers_verdicts"] = {
-                n: c["verdict"] for n, c in sorted(conf.items())
-            }
-    compact["detail"] = doc.get("detail_artifact", "BENCH_HEADLINE.json")
+    compact["detail"] = doc.get("detail_artifact")
     # drop order: evidence summaries first, never the contract fields
     droppable = (
         "streaming_ambient_max",
-        "sweep_movers_verdicts",
-        "sweep_movers",
-        "sweep_quiet_subtotals",
         "ambient_hot",
-        "bench_requeues",
-        "suspect_recaptures",
         "streaming_rps_spread",
         "streaming_rps_median",
         "streaming_rps_best",
         "pipeline_rps_spread",
         "pipeline_rps_median",
-        "d05_ab_shipped_is_faster",
         "admit_artifact_speedup",
         "cluster_serve_only_speedup",
         "cluster_incremental_speedup",
         "loadavg_start",
-        "requeue_wait_sec",
-        "ambient_gate",
     )
     line = json.dumps(compact, separators=(",", ":"))
     for k in droppable:
@@ -1914,55 +884,74 @@ def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
     return line
 
 
-def _headline_sweep_delta() -> dict | None:
-    """sweep_delta between the two newest committed sweep artifacts
-    (SWEEP_r{N} vs SWEEP_r{N-1}) for embedding in the headline doc —
-    the per-round BENCH artifact then names the movers itself."""
-    sweeps = _latest_sweep_artifacts(2)
-    if len(sweeps) < 2:
-        return None
-    try:
-        with open(sweeps[0]) as f:
-            cur = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    # prefer the delta the sweep run embedded: it carries the
-    # machine-made movers_confirmation (best-of-3 adjudication of
-    # regression-direction movers), which a recompute from committed
-    # artifacts cannot reproduce without a live session
-    embedded = cur.get("sweep_delta")
-    if (
-        isinstance(embedded, dict)
-        and embedded.get("prev_artifact") == os.path.basename(sweeps[1])
-    ):
-        delta = dict(embedded)
-    else:
-        delta = _sweep_delta(cur, sweeps[1])
-    if delta is not None:
-        delta["cur_artifact"] = os.path.basename(sweeps[0])
-    return delta
-
-
-def main(out_path: str | None = None) -> None:
-    load_gate_wait = _await_quiet_machine()
-    # ambient load BEFORE the workload: the bench itself saturates the
-    # machine, so an at-exit sample (rounds <=3 reported ~9 "under
-    # load") mostly measures the bench's own footprint. loadavg_start
-    # is the number round-over-round comparisons should normalize by.
-    loadavg_start = round(os.getloadavg()[0], 2)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="kpipe-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-
-    # warm-up (not counted): JVM JIT + codegen classes, parquet footer
-    # caches for EVERY table, and the Python worker pool for pandas-UDF
-    # queries — one-time session costs, not per-query work
+def _warm_session(spark, sf_dir: str):
+    """Load every table once and run one query, so the captures that
+    follow measure per-query work, not one-time session costs (JVM JIT
+    and codegen classes, parquet footer caches). Returns the
+    registry."""
     from kpipe_spark.catalog import TABLE_NAMES, load_table
 
     for t in TABLE_NAMES:
         load_table(spark, sf_dir, t).count()
+    queries = all_queries()
     queries["q01_pricing_summary"].build(spark, sf_dir).count()
+    return queries
+
+
+def sweep(out_path: str | None = None) -> None:
+    """Time EVERY registry query (warm, noop sink) and write the full
+    per-row table to a JSON artifact (--out, default SWEEP.json), so
+    outliers are diffable round-over-round instead of living in prose.
+    The headline list is a curated subset; this is the blind-spot
+    catcher — round 4's run found a query at 77 s (d11) that three
+    rounds of headline benches never saw. Each query gets one warm-up
+    run, then one timed capture (``_timed_capture`` with runs=1): a
+    single capture can eat a GC pause, so read a slow row's task CPU
+    and external cores before believing its wall time."""
+    out_path = out_path or "SWEEP.json"
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    loadavg_start = round(os.getloadavg()[0], 2)
+    spark = get_spark(app_name="kpipe-spark-bench-sweep")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = _warm_session(spark, sf_dir)
+    rows: dict[str, dict] = {}
+    for name, q in queries.items():
+        q.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        rows[name] = _timed_capture(
+            spark, lambda: q.build(spark, sf_dir), runs=1
+        )
+    times = {n: r["wall_s"] for n, r in rows.items()}
+    for name, t in sorted(times.items(), key=lambda kv: -kv[1]):
+        print(f"{t:8.3f}  {name}")
+    doc = {
+        "metric": "full_registry_sweep_runtime",
+        "value": round(sum(times.values()), 1),
+        "unit": "sec",
+        "n_queries": len(times),
+        "queries": dict(sorted(times.items())),
+        "task_cpu_s": round(sum(r["task_cpu_s"] for r in rows.values()), 1),
+        "rows": dict(sorted(rows.items())),
+        "slowest": dict(sorted(times.items(), key=lambda kv: -kv[1])[:10]),
+        "sf": sf_dir,
+        "loadavg_start": loadavg_start,
+        "environment": environment(spark, _REPO),
+    }
+    with open(out_path, "w") as f:
+        json.dump(doc, f, indent=1, sort_keys=False)
+        f.write("\n")
+    print(json.dumps({k: doc[k] for k in (
+        "metric", "value", "unit", "n_queries", "task_cpu_s", "slowest", "sf"
+    )}))
+
+
+def main(out_path: str | None = None) -> None:
+    # ambient load BEFORE the workload: the bench itself saturates the
+    # machine, so an at-exit sample mostly measures its own footprint
+    loadavg_start = round(os.getloadavg()[0], 2)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark(app_name="kpipe-spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = _warm_session(spark, sf_dir)
 
     def _warm_workers(it):
         # the libs the media/text pandas-UDFs import per worker
@@ -1987,221 +976,83 @@ def main(out_path: str | None = None) -> None:
         "noop"
     ).mode("overwrite").save()
 
-    timings: dict[str, float] = {}
-    ambient: dict[str, float] = {}
-    requeued: dict[str, int] = {}
-    gate = _ambient_gate()
-    budget = _RequeueBudget()
-    for name in HEADLINE:
-        q = queries[name]
-        # best-of-3: the first run includes codegen compilation, and at
-        # local[32] any single run can eat a GC pause worth ±30% on the
-        # heavy queries (measured: the same d05 plan ranged 1.0-4.3 s
-        # across sessions at load; min-of-3 keeps the steady-state
-        # number). The capture also measures the EXTERNAL cores burned
-        # during its own window; a hot capture waits out the
-        # contention (bounded per query AND run-wide) and re-runs,
-        # keeping the quietest evidence — min() is safe because
-        # contention only inflates.
-        best, ext = _timed_capture(lambda: q.build(spark, sf_dir))
-        retries = 0
-        while gate > 0 and ext > gate and retries < 2:
-            _await_ambient_quiet(gate, budget)
-            best2, ext2 = _timed_capture(lambda: q.build(spark, sf_dir))
-            best = min(best, best2)
-            ext = min(ext, ext2)
-            retries += 1
-        timings[name] = round(best, 3)
-        ambient[name] = round(ext, 2)
-        if retries:
-            requeued[name] = retries
+    # best-of-3: the first run includes codegen compilation, and any
+    # single run can eat a GC pause worth ±30% on the heavy queries
+    # (measured: the same d05 plan ranged 1.0-4.3 s across sessions at
+    # load); min-of-3 keeps the steady-state number
+    rows = {
+        name: _timed_capture(spark, lambda: queries[name].build(spark, sf_dir))
+        for name in HEADLINE
+    }
+    timings = {n: r["wall_s"] for n, r in rows.items()}
 
     # 3 fresh runs (each its own checkpoint dir) × 10 micro-batches.
-    # Rounds ≤5 used 5 batches and reported median/spread over the
-    # WHOLE-run rates, which bundle query startup + first-trigger
-    # checkpoint-dir I/O into a ~7 s window — that one-time cost, not
-    # the pipeline, was the variance (r5 spread/median = 0.44). The
-    # spread statistics now come from the STEADY-STATE rates (batch 1
+    # The spread statistics come from the STEADY-STATE rates (batch 1
     # completion → last batch completion, 9 measured intervals per
     # run), the shape the reference's minutes-long consumer benchmarks
     # report by construction; whole-run best is kept for continuity
-    # with rounds 1-5.
-    # one UNCOUNTED warm-up run first: the session's first streaming
-    # query pays one-time costs the headline warmup never touches
-    # (file-source listing + streaming codegen JIT) — measured: a
-    # session's first run reads ~98k steady vs 134-153k for every
-    # later run, which is warmup, not pipeline variance
+    # with rounds 1-5 (whose whole-run spread was first-trigger
+    # checkpoint-dir I/O, not the pipeline).
+    # one UNCOUNTED warm-up run per mode first: the session's first
+    # streaming query pays one-time costs the headline warmup never
+    # touches (file-source listing + streaming codegen JIT).
     # PARALLEL and KEY_ORDERED captures are INTERLEAVED (P,K,P,K,...),
-    # not block-ordered: the r8 artifact read KEY_ORDERED FASTER than
-    # PARALLEL (163,954 vs 150,298 steady) purely because the two
-    # blocks ran minutes apart under different host/JIT state — a
-    # same-session interleaved A/B (r9 adjudication, ARCHITECTURE
-    # §6.5) shows the expected order, PARALLEL ~7% ahead (median 120k
-    # vs 112k): the per-key shuffle+sort costs, it doesn't pay. The
-    # under-split suspicion was also checked and ruled out: the
-    # PARALLEL sink receives 32 partitions (runner.process_batch's
-    # ensure_parallelism), KEY_ORDERED 64 (the key repartition).
-    # KEY_ORDERED is BASELINE.md's last throughput row (KPipe
-    # KEY_ORDERED 285,750 rec/s @ 0 µs sink / 34,465 @ 10 ms); the
-    # noop sink matches the 0 µs row.
+    # not block-ordered: two blocks minutes apart run under different
+    # host/JIT state (r8 read KEY_ORDERED faster than PARALLEL that
+    # way; interleaved, PARALLEL leads by ~7% — the per-key
+    # shuffle+sort costs, it doesn't pay). KEY_ORDERED is BASELINE.md's
+    # last throughput row (KPipe KEY_ORDERED 285,750 rec/s @ 0 µs sink
+    # / 34,465 @ 10 ms); the noop sink matches the 0 µs row. Every run
+    # records the external cores over its own window.
     from kpipe_spark.streaming.modes import ProcessingMode
 
-    # suspect re-capture (the headline form of the sweep's outlier
-    # policy): a row whose best-of-3 reads >2x its value in the newest
-    # committed QUIET sweep has almost certainly eaten a host stall the
-    # ambient measure cannot see — guest-invisible hypervisor episodes
-    # (frequency/memory-bandwidth contention) hit single rows at
-    # ambient ~0 (measured round 10: d86 1.34 s in one session, 11.87 s
-    # best-of-3 minutes later, ambient 0.08 — different rows spike in
-    # different sessions). Re-capture each suspect once, keep the min,
-    # and record both values so the artifact shows its work.
-    suspect_recaptures: dict[str, dict] = {}
-    vs_sweep_ratio: dict[str, float] = {}
-    ratio_movers: dict[str, dict] = {}
-    sweeps = _latest_sweep_artifacts(1)
-    if sweeps:
-        try:
-            with open(sweeps[0]) as f:
-                sweep_doc = json.load(f)
-            sweep_q = sweep_doc.get("queries", {})
-            sweep_amb = sweep_doc.get("ambient_load_per_query", {})
-        except (OSError, json.JSONDecodeError):
-            sweep_q, sweep_amb = {}, {}
-        suspect_recaptures = _suspect_recapture_pass(
-            HEADLINE,
-            timings,
-            ambient,
-            gate,
-            sweep_q,
-            sweep_amb,
-            lambda name: _timed_capture(
-                lambda: queries[name].build(spark, sf_dir)
-            ),
-            budget,
-        )
-        # per-row sweep-normalized ratio + round-over-round mover
-        # adjudication against the PREVIOUS committed artifact (read
-        # before this run overwrites it). No bootstrap fallback: an
-        # artifact without stored vs_sweep_ratio predates round 11,
-        # and deriving its ratios against the NEWEST sweep would mix
-        # sweep references when the sweep refreshed between rounds
-        # (round-11 ADVICE) — mover adjudication is simply skipped on
-        # such a bootstrap round (every r11+ artifact stores ratios)
-        prev_ratios: dict[str, float] = {}
-        try:
-            with open(
-                out_path
-                or os.environ.get(
-                    "SPARK_GRAFT_BENCH_OUT", "BENCH_HEADLINE.json"
+    def interleaved(**kw) -> tuple[list, list, list, list]:
+        p_runs, k_runs, p_amb, k_amb = [], [], [], []
+        for _ in range(3):
+            r, ext = _ambient_during(
+                lambda: _streaming_pipeline_rate(spark, sf_dir, **kw)
+            )
+            p_runs.append(r)
+            p_amb.append(ext)
+            r, ext = _ambient_during(
+                lambda: _streaming_pipeline_rate(
+                    spark, sf_dir, mode=ProcessingMode.KEY_ORDERED, **kw
                 )
-            ) as f:
-                prev_doc = json.load(f)
-            prev_ratios = prev_doc.get("vs_sweep_ratio") or {}
-        except (OSError, json.JSONDecodeError):
-            prev_ratios = {}
-        vs_sweep_ratio, ratio_movers = _ratio_mover_pass(
-            HEADLINE,
-            timings,
-            ambient,
-            gate,
-            sweep_q,
-            sweep_amb,
-            prev_ratios,
-            lambda name: _timed_capture(
-                lambda: queries[name].build(spark, sf_dir)
-            ),
-            budget,
-            already_recaptured=set(suspect_recaptures),
-        )
+            )
+            k_runs.append(r)
+            k_amb.append(ext)
+        return p_runs, k_runs, p_amb, k_amb
 
     _streaming_pipeline_rate(spark, sf_dir, n_batches=3)
     _streaming_pipeline_rate(
         spark, sf_dir, n_batches=3, mode=ProcessingMode.KEY_ORDERED
     )
-    stream_runs, ko_runs = [], []
-    stream_amb, ko_amb = [], []
-    streaming_requeues = 0
-    for _ in range(3):
-        r, ext, rq = _gated_stream_run(
-            lambda: _streaming_pipeline_rate(spark, sf_dir), gate, budget
-        )
-        stream_runs.append(r)
-        stream_amb.append(ext)
-        streaming_requeues += rq
-        r, ext, rq = _gated_stream_run(
-            lambda: _streaming_pipeline_rate(
-                spark, sf_dir, mode=ProcessingMode.KEY_ORDERED
-            ),
-            gate,
-            budget,
-        )
-        ko_runs.append(r)
-        ko_amb.append(ext)
-        streaming_requeues += rq
+    stream_runs, ko_runs, stream_amb, ko_amb = interleaved()
     whole_rates = sorted(r for r, _ in stream_runs)
     steady_rates = sorted(s for _, s in stream_runs)
-    streaming_rate = whole_rates[-1]
-    streaming_steady = steady_rates[-1]
     ko_steady = sorted(s for _, s in ko_runs)
     # work-injected rows: BASELINE.md's 10 ms sweep points (PARALLEL
     # 57,563 / KEY_ORDERED 34,465 rec/s). Every DELIVERED record costs
     # 10 ms of blocking wait at the sink, overlapped via
     # blocking_enrich's per-partition thread pool — the honest Spark
     # counterpart of kpipe's virtual-thread dispatch — and the rate is
-    # over delivered records (the ones that pay). Context for the
-    # comparison: the sink-only overlap measures 53-61k delivered
-    # rec/s in batch A/B (reference parity); the streaming number is
-    # lower because each micro-batch also runs the full pipeline +
-    # DLQ + accounting that the reference's dispatch benchmark
-    # doesn't. 5 batches per run (4 steady intervals; a 2-batch
-    # warm-up), interleaved P/K (the r9 rule).
-    # timer-health gate (round-12, the r11 verdict's one weak grade):
-    # the 10 ms rows measure sleep(0.010) fidelity as much as engine
-    # throughput — on this host, stall episodes degrade the timer
-    # (sleep p90 24-94 ms under thread load) and halve these rows with
-    # zero code changes. Probe p50/p90 under 64 threads first (bounded
-    # re-probe wait, shared requeue budget); a still-degraded window
-    # REFUSES to overwrite the committed 10 ms rows — they are carried
-    # from the previous artifact with machine-readable provenance, and
-    # the probe itself ships as the evidence (direct sleep-latency
-    # measurement beats a capture that bakes the degradation in).
-    timer_probe = _await_timer_health(budget)
-    w_runs, wko_runs = [], []
-    w_amb, wko_amb = [], []
-    if timer_probe["healthy"]:
-        _streaming_pipeline_rate(spark, sf_dir, n_batches=2, work_ms=10.0)
-        for _ in range(3):
-            r, ext, rq = _gated_stream_run(
-                lambda: _streaming_pipeline_rate(
-                    spark, sf_dir, n_batches=5, work_ms=10.0
-                ),
-                gate,
-                budget,
-            )
-            w_runs.append(r)
-            w_amb.append(ext)
-            streaming_requeues += rq
-            r, ext, rq = _gated_stream_run(
-                lambda: _streaming_pipeline_rate(
-                    spark,
-                    sf_dir,
-                    n_batches=5,
-                    work_ms=10.0,
-                    mode=ProcessingMode.KEY_ORDERED,
-                ),
-                gate,
-                budget,
-            )
-            wko_runs.append(r)
-            wko_amb.append(ext)
-            streaming_requeues += rq
+    # over delivered records (the ones that pay). The streaming number
+    # sits below the sink-only overlap because each micro-batch also
+    # runs the full pipeline + DLQ + accounting that the reference's
+    # dispatch benchmark doesn't. 5 batches per run (4 steady
+    # intervals; a 2-batch warm-up), interleaved P/K. These rows
+    # measure sleep(0.010) fidelity as much as engine throughput, so
+    # the timer probe is recorded beside them.
+    timer_probe = _timer_health()
+    _streaming_pipeline_rate(spark, sf_dir, n_batches=2, work_ms=10.0)
+    w_runs, wko_runs, w_amb, wko_amb = interleaved(n_batches=5, work_ms=10.0)
     work_steady = sorted(s for _, s in w_runs)
     work_ko_steady = sorted(s for _, s in wko_runs)
-    # input-basis companions for the 10 ms rows (ADVICE r9 #4): the
-    # delivered basis is the honest per-payer rate, but BASELINE.md's
-    # 57,563 counts every CONSUMED record — publish both so the
-    # comparison reads off the artifact without re-deriving the ~29%
-    # delivered-fraction argument each round
+    # input-basis companions for the 10 ms rows: the delivered basis is
+    # the honest per-payer rate, but BASELINE.md's 57,563 counts every
+    # CONSUMED record — publish both so the comparison reads off the
+    # artifact without re-deriving the ~29% delivered fraction
+    from kpipe_spark.catalog import load_table
     from kpipe_spark.pipeline.result import PASSED, STATUS_COL
 
     ev = load_table(spark, sf_dir, "events")  # never raw-read events
@@ -2220,150 +1071,53 @@ def main(out_path: str | None = None) -> None:
         if delivered_fraction <= 0:
             return None
         return int(delivered_rps / delivered_fraction)
+
     batch_overhead = _batch_overhead(spark, sf_dir)
-    # sink-only overlap is sleep-built too — same timer gate
-    work_overlap_ab = (
-        _work_overlap_ab(spark, sf_dir) if timer_probe["healthy"] else None
-    )
-    # closing probe (round-12 ADVICE #4) IMMEDIATELY after the last
-    # sleep-built capture: it gates exactly the window the 10 ms rows
-    # were measured in — probing after the CPU-bound A/Bs and the p01
-    # throughput capture would discard healthy fresh rows for a stall
-    # that began minutes after the sleep captures finished
-    timer_probe_closing = _timer_health() if timer_probe["healthy"] else None
+    work_overlap_ab = _work_overlap_ab(spark, sf_dir)
     signature_ab = _d05_signature_ab(spark, sf_dir)
     admit_ab = _incremental_admit_ab(spark, sf_dir)
     cluster_ab = _cluster_reuse_ab(spark, sf_dir)
     cluster_inc_ab = _cluster_incremental_refresh_ab(spark, sf_dir)
-    total = round(sum(timings.values()), 3)
     # the reference's yardstick is consumer rec/s (BASELINE.md): p01 runs
     # the full outcome pipeline (JSON extract + 4 operators + accounting)
     # over the events table, so rows/elapsed is our comparable number —
     # measured with its OWN warmed multi-run capture (_pipeline_throughput),
-    # not derived from the flagship loop's single p01 timing
+    # not derived from the flagship loop's p01 timing
     n_events = queries["p01_outcome_accounting"].build(spark, sf_dir) \
         .agg(F.sum("n").alias("t")).collect()[0]["t"]
-    # ambient-gated like the query loop (round-12: a 59-core steal
-    # episode during this capture halved the committed rate while
-    # every gated row stayed clean) — re-run once after waiting out a
-    # hot window, keep the faster capture
     pipe_stats, pipe_ext = _ambient_during(
         lambda: _pipeline_throughput(
             lambda: queries["p01_outcome_accounting"].build(spark, sf_dir),
             n_events,
         )
     )
-    if gate > 0 and pipe_ext > gate:
-        _await_ambient_quiet(gate, budget)
-        retry, retry_ext = _ambient_during(
-            lambda: _pipeline_throughput(
-                lambda: queries["p01_outcome_accounting"].build(
-                    spark, sf_dir
-                ),
-                n_events,
-            )
-        )
-        if retry["best"] > pipe_stats["best"]:
-            pipe_stats, pipe_ext = retry, retry_ext
-    out_path = out_path or os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT", "BENCH_HEADLINE.json"
+    # named after the session's core count, so runs on differently
+    # sized hosts never overwrite each other's artifact
+    out_path = (
+        out_path
+        or f"BENCH_HEADLINE_c{spark.sparkContext.defaultParallelism}.json"
     )
-    # fresh 10 ms rows require BOTH probes healthy (round-12 ADVICE
-    # #4: the opening probe gates entry, but a stall episode can BEGIN
-    # mid-capture and still ship as fresh "healthy" rows — ambient
-    # gating catches CPU steal, not pure timer degradation); the
-    # closing probe itself ran right after the last sleep-built
-    # capture, above
-    window_healthy = timer_probe["healthy"] and timer_probe_closing["healthy"]
-    # 10 ms rows: fresh when the timer window was healthy end to end;
-    # otherwise CARRIED from the previous committed artifact — but only
-    # one that proved its own window clean (timer_health.healthy), so a
-    # legacy degraded capture (the r11 artifact) can never launder
-    # itself forward. carry_age counts hops back to the last healthy
-    # capture.
-    if window_healthy:
-        work_rows = {
-            "streaming_rps_10ms_work": work_steady[-1],
-            "streaming_rps_10ms_work_median": work_steady[1],
-            "streaming_key_ordered_rps_10ms_work": work_ko_steady[-1],
-            "streaming_key_ordered_rps_10ms_work_median": work_ko_steady[
-                1
-            ],
-            "streaming_10ms_delivered_fraction": round(
-                delivered_fraction, 4
-            ),
-            "streaming_rps_10ms_work_input_basis": input_basis(
-                work_steady[-1]
-            ),
-            "streaming_rps_10ms_work_input_basis_median": input_basis(
-                work_steady[1]
-            ),
-            "streaming_key_ordered_rps_10ms_work_input_basis": input_basis(
-                work_ko_steady[-1]
-            ),
-            "work_overlap_ab": work_overlap_ab,
-        }
-    else:
-        # carry source (round-12 ADVICE #3): a degraded run writing to
-        # a FRESH --out path (e.g. BENCH_r13.json) has no previous
-        # artifact under its own name — fall back to the newest
-        # committed headline artifact (BENCH_HEADLINE.json, then the
-        # newest BENCH_r{N}.json), the same committed-artifact
-        # discipline the sweep-delta path uses, instead of shipping
-        # nulls while a healthy committed capture sits in the repo.
-        # first candidate with a CARRY-WORTHY capture wins — breaking
-        # on the first file that merely parses would ship nulls when a
-        # legacy/degraded artifact sits in front of a healthy one
-        work_rows = _carried_10ms_rows({})
-        for cand in [out_path, *_headline_carry_candidates(out_path)]:
-            try:
-                with open(cand) as f:
-                    prev_10ms = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                continue
-            rows = _carried_10ms_rows(prev_10ms)
-            if rows.get(_KEYS_10MS[0]) is not None:
-                work_rows = rows
-                break
-    # full artifact: everything, including the per-query ambient dict.
-    # Methodology prose lives in ARCHITECTURE.md §6.5 (moving it out of
-    # the JSON is half of what keeps the stdout line under the driver's
-    # 2000-char tail window; the other half is the compact-line builder)
+    # full artifact; methodology prose lives in ARCHITECTURE.md §6.5
+    # (keeping it out of the JSON is half of what keeps the stdout line
+    # under the driver's 2000-char tail window)
     doc = {
         "metric": "headline_queries_total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
+        # summed over the rows' best runs — read beside "value"
+        "task_cpu_s": round(sum(r["task_cpu_s"] for r in rows.values()), 3),
         # rounds 1-3 comparability: the original 16 headline
         # queries, before d54/p04/d68/d79 joined the list
         "legacy16_subtotal": round(
             sum(timings[n] for n in HEADLINE[:16]), 3
         ),
-        # external-process CPU cores burned during each query's
-        # capture window (total /proc/stat busy minus our own process
-        # tree) — definition + rationale: ARCHITECTURE.md §6.5.
-        # Captures above ambient_gate were waited out and re-run
-        # (bench_requeues).
-        "ambient_load_per_query": ambient,
-        "ambient_gate": gate,
-        "bench_requeues": requeued,
-        # rows that read >2x their quiet-sweep value on first capture
-        # and were re-captured once (host-stall episodes the ambient
-        # measure cannot see); timings keep the min, both recorded
-        "suspect_recaptures": suspect_recaptures,
-        # headline time / same query's newest committed QUIET sweep
-        # value, and rows whose ratio regressed >1.25x vs the previous
-        # committed artifact (re-captured before shipping) — the
-        # self-adjudication the r10 verdict had to re-derive by hand
-        "vs_sweep_ratio": vs_sweep_ratio,
-        "ratio_movers": ratio_movers,
+        # per row: wall_s, ext_cores (external cores over the capture
+        # window), task_cpu_s, tasks, single_task_share
+        "rows": rows,
         # headline value keeps the streaming convention (best); median/
         # spread make a host-state swing visible inside ONE artifact
         "pipeline_records_per_sec": pipe_stats["best"],
-        # methodology break marker (ADVICE r8): rounds <=7 derived this
-        # key from a SINGLE best-of-3 p01 timing; r8+ is best-of-5
-        # warmed dedicated captures, which systematically reads higher.
-        # Do not diff the key across the break without this caveat.
         "pipeline_rps_method": "best-of-5-warmed (r8+; rounds<=7 single-capture — not comparable)",
         "pipeline_rps_best": pipe_stats["best"],
         "pipeline_rps_median": pipe_stats["median"],
@@ -2373,64 +1127,58 @@ def main(out_path: str | None = None) -> None:
         ],
         "pipeline_rps_runs": pipe_stats["runs"],
         "pipeline_rps_ambient": pipe_ext,
-        "streaming_records_per_sec": streaming_rate,
+        "streaming_records_per_sec": whole_rates[-1],
         # steady-state = batch-1 completion -> last-batch completion
-        # (startup excluded); spread stats over the 3 runs' steady
-        # rates — methodology: ARCHITECTURE.md §6.5
-        "streaming_steady_state_rps": streaming_steady,
+        # (startup excluded); spread stats over the 3 runs' steady rates
+        "streaming_steady_state_rps": steady_rates[-1],
         "streaming_rps_best": steady_rates[-1],
         "streaming_rps_median": steady_rates[1],
         "streaming_rps_spread": steady_rates[-1] - steady_rates[0],
         # per-key ordered mode (reference: 285,750 rec/s @ 0 µs sink)
         "streaming_key_ordered_rps": ko_steady[-1],
         "streaming_key_ordered_rps_median": ko_steady[1],
-        # 10 ms blocking work per record, overlapped (reference:
-        # PARALLEL 57,563 / KEY_ORDERED 34,465 rec/s @ 10 ms), on both
-        # the delivered and the input (reference) basis, plus the
-        # sink-only overlap A/B — all sleep-built rows, gated on the
-        # timer probe and carried (with provenance) when it failed.
-        # timer_health is the probe that adjudicates the window:
-        # sleep(10 ms) p50/p90 under 64 threads, healthy = p90 ≤ 15 ms.
-        # The closing probe re-checks AFTER the sleep-built captures
-        # (round-12 ADVICE #4: a stall beginning mid-capture passed the
-        # opening probe); fresh 10 ms rows require both healthy.
-        "timer_health": timer_probe,
-        "timer_health_closing": timer_probe_closing,
-        # external cores during each streaming run's wall window (the
-        # query loop's ambient evidence, extended to the rows that
-        # shipped contention-blind through round 11) — the rate lists
-        # and these align positionally; compare a run against its own
-        # window, and distrust any row whose ambient exceeded the gate
+        # external cores during each streaming run's wall window; the
+        # rate lists and these align positionally
         "streaming_ambient": {
             "zero_us": stream_amb,
             "zero_us_ko": ko_amb,
             "ten_ms": w_amb,
             "ten_ms_ko": wko_amb,
         },
-        # hot streaming windows waited out + re-captured (keep-max on
-        # the steady rate — contention only deflates throughput)
-        "streaming_requeues": streaming_requeues,
-        **work_rows,
+        # 10 ms blocking work per record, overlapped (reference:
+        # PARALLEL 57,563 / KEY_ORDERED 34,465 rec/s @ 10 ms), on both
+        # the delivered and the input (reference) basis, plus the
+        # sink-only overlap A/B; timer_health is the sleep(10 ms)
+        # p50/p90/p99 under 64 threads taken just before them
+        "timer_health": timer_probe,
+        "streaming_rps_10ms_work": work_steady[-1],
+        "streaming_rps_10ms_work_median": work_steady[1],
+        "streaming_key_ordered_rps_10ms_work": work_ko_steady[-1],
+        "streaming_key_ordered_rps_10ms_work_median": work_ko_steady[1],
+        "streaming_10ms_delivered_fraction": round(delivered_fraction, 4),
+        "streaming_rps_10ms_work_input_basis": input_basis(work_steady[-1]),
+        "streaming_rps_10ms_work_input_basis_median": input_basis(
+            work_steady[1]
+        ),
+        "streaming_key_ordered_rps_10ms_work_input_basis": input_basis(
+            work_ko_steady[-1]
+        ),
+        "work_overlap_ab": work_overlap_ab,
         # the per-batch cost the reference's dispatch benchmark doesn't
-        # pay (accounting groupBy + DLQ split): with the sink-only
-        # overlap row this closes the 10 ms comparison arithmetic
+        # pay (accounting + DLQ split): with the sink-only overlap row
+        # this closes the 10 ms comparison arithmetic
         "batch_overhead": batch_overhead,
         "d05_signature_ab": signature_ab,
         "incremental_admit_ab": admit_ab,
         # the dup-cluster family's stored-artifact dividend: 5
         # consumers from one component table vs 5 inline re-derivations
         "cluster_reuse_ab": cluster_ab,
-        # round-11: release-cadence fold vs full rebuild (+~9% corpus)
+        # release-cadence fold vs full rebuild (+~9% corpus)
         "cluster_incremental_refresh_ab": cluster_inc_ab,
-        # round-over-round quiet-rows sweep comparison (the trustable
-        # signal per ARCHITECTURE §6.5), embedded so the round artifact
-        # carries it instead of the judge recomputing by hand
-        "sweep_delta": _headline_sweep_delta(),
         "sf": sf_dir,
         "loadavg_start": loadavg_start,
         "loadavg": round(os.getloadavg()[0], 2),
-        "load_gate_wait_sec": int(load_gate_wait),
-        "requeue_wait_sec": int(budget.spent),
+        "environment": environment(spark, _REPO),
         "detail_artifact": out_path,
     }
     with open(out_path, "w") as f:
@@ -2466,8 +1214,8 @@ if __name__ == "__main__":
         "--out",
         default=None,
         metavar="FILE",
-        help="write the full JSON document here "
-        "(headline: BENCH_HEADLINE.json-shaped; sweep: SWEEP.json)",
+        help="write the full JSON document here (headline default: "
+        "BENCH_HEADLINE_c{cores}.json; sweep default: SWEEP.json)",
     )
     ap.add_argument(
         "--sweep",

@@ -1,11 +1,15 @@
-"""The bench's per-query contention evidence, tested as a unit.
+"""The bench's per-row measurements, tested as units.
 
-BENCH_r{N}'s trustworthiness now rests on ambient_load_per_query =
-(machine busy jiffies − our process-tree jiffies) / window. These
-tests pin the two properties that make that number meaningful: our
-own CPU burn is attributed to the TREE (so a busy bench doesn't flag
-itself as contention), and the helpers survive process churn without
-raising (procfs rows race with exits)."""
+Each headline and sweep row records wall time, external cores =
+(machine busy jiffies − our process-tree jiffies) / window, and the
+task CPU, task count and single-task stage share Spark's status store
+holds for the row's own jobs. These tests pin what makes those numbers
+meaningful: our own CPU burn is attributed to the TREE (so a busy bench
+doesn't read itself as contention), the jiffy helpers survive process
+churn without raising (procfs rows race with exits), the capture helper
+reads task metrics for the query it ran, the stdout line fits the
+driver's tail window, and bench.py reads no tuning knob from the
+environment."""
 
 from __future__ import annotations
 
@@ -102,43 +106,46 @@ def test_tree_jiffies_monotone_and_raceproof():
     assert bench._total_busy_jiffies() > 0
 
 
-def test_requeue_budget_bounds_waiting(monkeypatch):
-    """On a machine that never quiets, _await_ambient_quiet must stop
-    consuming once the run-wide budget is spent — the bench can be
-    slow-measured but never stalled for hours."""
-    monkeypatch.setenv("SPARK_GRAFT_REQUEUE_BUDGET", "4")
-    budget = bench._RequeueBudget()
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    # force 'still hot' forever: external delta always huge
-    seq = iter(range(0, 10**6, 10**4))
-    monkeypatch.setattr(bench, "_total_busy_jiffies", lambda: next(seq))
-    monkeypatch.setattr(bench, "_tree_cpu_jiffies", lambda: 0)
-    waited = bench._await_ambient_quiet(2.0, budget, max_wait=600.0)
-    assert waited <= 4
-    assert budget.remaining <= 0
-    # a second call with the spent budget returns immediately
-    assert bench._await_ambient_quiet(2.0, budget, max_wait=600.0) == 0.0
-
-
 def _headline_doc(n_queries: int, hot: int = 0) -> dict:
     names = [f"d{i:02d}_some_reasonably_long_query_name" for i in range(n_queries)]
+    rates = {
+        k: 123456
+        for k in (
+            "pipeline_records_per_sec",
+            "pipeline_rps_median",
+            "pipeline_rps_spread",
+            "streaming_records_per_sec",
+            "streaming_steady_state_rps",
+            "streaming_rps_best",
+            "streaming_rps_median",
+            "streaming_rps_spread",
+            "streaming_key_ordered_rps",
+            "streaming_rps_10ms_work",
+            "streaming_key_ordered_rps_10ms_work",
+            "streaming_rps_10ms_work_input_basis",
+            "streaming_key_ordered_rps_10ms_work_input_basis",
+        )
+    }
     return {
         "metric": "headline_queries_total_runtime",
         "value": 25.123,
         "unit": "sec",
         "queries": {n: 1.234 for n in names},
+        "task_cpu_s": 61.234,
         "legacy16_subtotal": 9.876,
-        "ambient_load_per_query": {
-            n: (1.23 if i < hot else 0.0) for i, n in enumerate(names)
+        "rows": {
+            n: {
+                "wall_s": 1.234,
+                "ext_cores": 1.23 if i < hot else 0.0,
+                "task_cpu_s": 2.345,
+                "tasks": 17,
+                "single_task_share": 0.25,
+            }
+            for i, n in enumerate(names)
         },
-        "ambient_gate": 2.0,
-        "bench_requeues": {n: 2 for n in names[:hot]},
-        "pipeline_records_per_sec": 267379,
-        "streaming_records_per_sec": 153179,
-        "streaming_steady_state_rps": 129048,
-        "streaming_rps_best": 153179,
-        "streaming_rps_median": 129048,
-        "streaming_rps_spread": 27600,
+        **rates,
+        "timer_health": {"p50_ms": 10.12, "p90_ms": 10.4},
+        "streaming_ambient": {"zero_us": [0.0, 0.1, 0.0]},
         "d05_signature_ab": {
             "projection_sec": 0.6,
             "aggregate_sec": 1.2,
@@ -150,20 +157,21 @@ def _headline_doc(n_queries: int, hot: int = 0) -> dict:
             "inline_derivation_sec": 1.549,
             "artifact_speedup": 1.52,
         },
+        "cluster_reuse_ab": {"serve_only_speedup": 4.21},
+        "cluster_incremental_refresh_ab": {"incremental_speedup": 0.66},
         "sf": "/root/testdata/sf0.1",
         "loadavg_start": 2.58,
         "loadavg": 4.81,
-        "load_gate_wait_sec": 0,
-        "requeue_wait_sec": 0,
-        "detail_artifact": "BENCH_HEADLINE.json",
+        "detail_artifact": "BENCH_HEADLINE_c4.json",
     }
 
 
 def test_compact_headline_line_fits_driver_tail_window():
     """BENCH_r06.json shipped parsed:null because the stdout JSON line
     outgrew the driver's 2000-char tail capture. The compact line must
-    fit with margin at the real headline size (22 queries) AND keep the
-    contract fields (metric/value/unit/queries/sf) parseable."""
+    fit with margin at the real headline size AND keep the contract
+    fields (metric/value/unit/queries/sf) parseable, plus the d05 A/B's
+    two timings, not only its verdict."""
     import json
 
     line = bench._compact_headline_line(_headline_doc(len(bench.HEADLINE)))
@@ -172,16 +180,20 @@ def test_compact_headline_line_fits_driver_tail_window():
     for k in ("metric", "value", "unit", "queries", "sf"):
         assert k in parsed, k
     assert len(parsed["queries"]) == len(bench.HEADLINE)
-    # quiet run: per-query ambient collapses to a max, not 22 zeros
+    # quiet run: per-row external cores collapse to a max, not 24 zeros
     assert parsed["ambient_max"] == 0.0
     assert "ambient_hot" not in parsed
-    assert "ambient_load_definition" not in parsed
+    assert parsed["task_cpu_s"] == 61.234
+    assert parsed["d05_ab_projection_sec"] == 0.6
+    assert parsed["d05_ab_aggregate_sec"] == 1.2
+    assert parsed["d05_ab_shipped_is_faster"] is True
+    assert parsed["detail"] == "BENCH_HEADLINE_c4.json"
 
 
 def test_compact_headline_line_trims_before_overflowing():
-    """With every query hot + requeued (worst-case evidence size), the
-    line drops optional fields rather than overflow — contract fields
-    survive."""
+    """With every row hot (worst-case evidence size), the line drops
+    optional fields rather than overflow — contract fields and the d05
+    A/B timings survive."""
     import json
 
     doc = _headline_doc(len(bench.HEADLINE), hot=len(bench.HEADLINE))
@@ -190,110 +202,80 @@ def test_compact_headline_line_trims_before_overflowing():
     parsed = json.loads(line)
     assert len(line) < len(full)
     # every droppable was sacrificed before touching contract fields
-    assert "ambient_hot" not in parsed and "bench_requeues" not in parsed
-    for k in ("metric", "value", "unit", "queries", "sf"):
+    assert "ambient_hot" not in parsed and "loadavg_start" not in parsed
+    for k in (
+        "metric", "value", "unit", "queries", "sf",
+        "d05_ab_projection_sec", "d05_ab_aggregate_sec",
+    ):
         assert k in parsed, k
     # the worst case still fits the REAL window once droppables go
-    assert len(line) <= 1900, len(line)
+    assert len(bench._compact_headline_line(doc)) <= 1900
 
 
-def test_suspect_recapture_pass_policy():
-    """Pins the headline outlier re-capture: only rows >1.35x a QUIET
-    sweep reference re-capture (threshold tightened from 2x in round
-    14; SPARK_GRAFT_SUSPECT_RATIO overrides); the minimum is kept in
-    place; evidence records the values; a row still over threshold
-    after the first recapture gets exactly one more; hot sweep
-    references and absent references are skipped."""
-    timings = {
-        "stalled": 10.0,     # 5x its quiet ref -> recapture, improves
-        "worse": 3.0,        # >ratio but recaptures are slower -> keep first
-        "normal": 1.1,       # within 1.35x -> untouched
-        "hot_ref": 9.0,      # sweep ref was itself hot -> skipped
-        "no_ref": 8.0,       # not in the sweep -> skipped
-    }
-    ambient = {n: 0.0 for n in timings}
-    sweep_q = {"stalled": 2.0, "worse": 1.0, "normal": 1.0, "hot_ref": 1.0}
-    sweep_amb = {"stalled": 0.1, "worse": 0.0, "normal": 0.0, "hot_ref": 3.5}
-    captured = []
+def test_timed_capture_reads_task_metrics(spark):
+    """A tiny query through the capture helper: the row carries wall
+    time, external cores, and task metrics read from the status store
+    for the query's own jobs."""
+    from kpipe_spark.queries import all_queries
 
-    def capture(name):
-        captured.append(name)
-        return {"stalled": (2.2, 0.05), "worse": (4.0, 0.0)}[name]
-
-    out = bench._suspect_recapture_pass(
-        list(timings), timings, ambient, 2.0, sweep_q, sweep_amb, capture
+    q = all_queries()["q01_pricing_summary"]
+    row = bench._timed_capture(
+        spark, lambda: q.build(spark, "/root/testdata/sf0.001"), runs=2
     )
-    # "worse" stays over threshold after its first recapture, so it is
-    # captured a second time before being flagged
-    assert captured == ["stalled", "worse", "worse"]
-    assert timings["stalled"] == 2.2 and ambient["stalled"] == 0.05
-    assert timings["worse"] == 3.0  # min kept: recaptures were slower
-    assert timings["normal"] == 1.1 and timings["hot_ref"] == 9.0
-    assert out["stalled"] == {
-        "first_capture": 10.0, "recapture": 2.2, "quiet_sweep_ref": 2.0
+    assert set(row) == {
+        "wall_s", "ext_cores", "task_cpu_s", "tasks", "single_task_share"
     }
-    assert out["worse"]["recapture"] == 4.0  # evidence kept either way
-    assert out["worse"]["recapture2"] == 4.0
-    assert out["worse"]["still_suspect"] is True
-    assert "normal" not in out and "hot_ref" not in out and "no_ref" not in out
+    assert row["wall_s"] > 0
+    assert row["ext_cores"] >= 0
+    assert row["task_cpu_s"] > 0
+    assert row["tasks"] >= 1
+    assert 0 <= row["single_task_share"] <= 1
 
 
-def test_suspect_recapture_flags_still_suspect():
-    """A recapture that ALSO reads over threshold gets one more try
-    and is then flagged for the verdict step instead of shipping as
-    adjudicated (round-10 ADVICE: the single retry window can itself
-    be hot; round-13: so can the second)."""
-    timings = {"twice_hot": 10.0}
-    ambient = {"twice_hot": 0.0}
-    out = bench._suspect_recapture_pass(
-        ["twice_hot"],
-        timings,
-        ambient,
-        2.0,
-        {"twice_hot": 1.0},
-        {"twice_hot": 0.0},
-        lambda name: (7.0, 0.1),
-    )
-    assert out["twice_hot"]["still_suspect"] is True
-    assert out["twice_hot"]["recapture2"] == 7.0
-    assert timings["twice_hot"] == 7.0  # min still kept
+def test_bench_reads_no_env_knob():
+    """bench.py measures; it takes no tuning knobs from the environment.
+    The one variable it may read is the dataset directory. Any other
+    os.environ / os.getenv read — a gate threshold, a wait budget, an
+    output path — fails here, as does an access whose key is not a
+    literal."""
+    import ast
 
+    path = os.path.join(os.path.dirname(bench.__file__), "bench.py")
+    with open(path) as f:
+        tree = ast.parse(f.read())
 
-def test_ratio_mover_pass_policy():
-    """Pins the round-11 headline self-adjudication: every quiet-ref
-    row carries vs_sweep_ratio; only rows whose ratio regressed >1.25x
-    against the previous artifact's ratio re-capture; improvements and
-    rows without a prior ratio are untouched; a mover whose recapture
-    still regresses is flagged still_moved."""
-    timings = {
-        "drifted": 4.0,      # ratio 4.0 vs prev 1.0 -> recapture, improves
-        "stuck": 3.0,        # ratio 3.0 vs prev 1.0 -> recapture stays high
-        "steady": 1.2,       # ratio 1.2 vs prev 1.0 -> within 1.25x
-        "improved": 0.5,     # ratio down -> never recaptured
-        "fresh": 2.0,        # no prev ratio -> skipped
-    }
-    ambient = {n: 0.0 for n in timings}
-    sweep_q = {n: 1.0 for n in timings}
-    sweep_amb = {n: 0.0 for n in timings}
-    prev = {"drifted": 1.0, "stuck": 1.0, "steady": 1.0, "improved": 1.0}
-    captured = []
+    def is_os(node) -> bool:
+        return isinstance(node, ast.Name) and node.id == "os"
 
-    def capture(name):
-        captured.append(name)
-        return {"drifted": (1.1, 0.02), "stuck": (2.9, 0.0)}[name]
+    def is_environ(node) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and is_os(node.value)
+        )
 
-    ratios, evidence = bench._ratio_mover_pass(
-        list(timings), timings, ambient, 2.0, sweep_q, sweep_amb, prev, capture
-    )
-    assert captured == ["drifted", "stuck"]
-    assert timings["drifted"] == 1.1 and ratios["drifted"] == 1.1
-    assert evidence["drifted"]["prev_ratio"] == 1.0
-    assert "still_moved" not in evidence["drifted"]
-    assert evidence["stuck"]["still_moved"] is True
-    assert "improved" not in evidence and "fresh" not in evidence
-    # every quiet-ref row carries its ratio, movers or not
-    assert set(ratios) == set(timings)
-    assert ratios["improved"] == 0.5
+    reads, environ_refs, environ_reads = [], 0, 0
+    for node in ast.walk(tree):
+        assert not (isinstance(node, ast.ImportFrom) and node.module == "os")
+        if is_environ(node):
+            environ_refs += 1
+        if isinstance(node, ast.Subscript) and is_environ(node.value):
+            reads.append(node.slice)
+            environ_reads += 1
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.args
+        ):
+            if node.func.attr == "get" and is_environ(node.func.value):
+                reads.append(node.args[0])
+                environ_reads += 1
+            elif node.func.attr == "getenv" and is_os(node.func.value):
+                reads.append(node.args[0])
+    # every os.environ reference is a keyed read, every key a literal
+    assert environ_reads == environ_refs, (environ_reads, environ_refs)
+    keys = [k.value if isinstance(k, ast.Constant) else None for k in reads]
+    assert set(keys) <= {"SPARK_GRAFT_SF_DIR"}, keys
 
 
 def test_tree_jiffies_recoup_reaped_children():
