@@ -755,9 +755,11 @@ def _timed_capture(spark, build, runs: int = 3) -> dict:
     noop write (which forces every output column), the external cores
     over the whole capture window, and the best run's task metrics from
     the JVM status store — executor CPU seconds summed over its
-    completed stages, their task count, and the share of those stages
-    that ran as a single task. Each run tags its jobs with its own job
-    group, so eager jobs inside ``build()`` count toward the row."""
+    completed stages, their task count, the share of those stages
+    that ran as a single task, and the Python-worker seconds (task run
+    time minus JVM CPU on mapInPandas and pandas-UDF stages). Each run
+    tags its jobs with its own job group, so eager jobs inside
+    ``build()`` count toward the row."""
     sc = spark.sparkContext
 
     def best_run() -> tuple[float, str]:
@@ -789,6 +791,7 @@ def _timed_capture(spark, build, runs: int = 3) -> dict:
         "task_cpu_s": round(totals["stage.cpu_s"], 3),
         "tasks": totals["stage.tasks"],
         "single_task_share": round(totals["stage.single_task_share"], 3),
+        "pyworker_s": round(totals["pyworker.s"], 3),
     }
 
 
@@ -1113,7 +1116,7 @@ def main(out_path: str | None = None) -> None:
             sum(timings[n] for n in HEADLINE[:16]), 3
         ),
         # per row: wall_s, ext_cores (external cores over the capture
-        # window), task_cpu_s, tasks, single_task_share
+        # window), task_cpu_s, tasks, single_task_share, pyworker_s
         "rows": rows,
         # headline value keeps the streaming convention (best); median/
         # spread make a host-state swing visible inside ONE artifact

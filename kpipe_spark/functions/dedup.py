@@ -29,7 +29,7 @@ All built-in expressions (md5/conv/transform/aggregate) — no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from kpipe_spark.functions.text import fingerprint, tokens
@@ -404,7 +404,9 @@ def connected_components(
     DUP-GRAPH size, not the corpus, since only candidate pairs carry
     edges. localCheckpoint truncates the iterative lineage so the plan
     doesn't grow per round (on a real cluster use checkpoint() to
-    durable storage instead; convergence check moves O(1) rows).
+    durable storage instead). The changed-row count rides each round's
+    eager checkpoint through observe(), so a round is one action, with
+    no separate convergence job.
 
     Checkpoint lifecycle: each round's blocks are released as soon as
     the next round's checkpoint is materialized, and the edge list's
@@ -480,6 +482,7 @@ def connected_components(
         tagged = labels.withColumn("_old", F.lit(True)).unionByName(
             pushed.withColumn("_old", F.lit(False))
         )
+        changes = Observation()
         agg = (
             tagged.groupBy("id")
             .agg(
@@ -489,15 +492,15 @@ def connected_components(
                     < F.min(F.when(F.col("_old"), F.col("cluster_id")))
                 ).alias("_chg"),
             )
+            .observe(changes, F.count_if("_chg").alias("n"))
             .localCheckpoint(eager=True)
         )
         # agg is fully materialized (eager), so the previous round's
         # blocks are dead — release them before they pile up
         free_local_checkpoint(prev_ckpt)
         prev_ckpt = agg
-        changed = agg.filter("_chg").limit(1).count()
         labels = agg.drop("_chg")
-        if changed == 0:
+        if changes.get["n"] == 0:
             converged = True
             break
     if not converged:

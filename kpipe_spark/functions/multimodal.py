@@ -572,9 +572,13 @@ def image_patch_stats(media: DataFrame, patch: int = 14) -> DataFrame:
     return images.mapInPandas(patches, PATCH_STATS_SCHEMA)
 
 
-def size_class_partitioned(media: DataFrame, num_partitions: int = 32) -> DataFrame:
+def size_class_partitioned(
+    media: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """Repartition by (kind, size-class) so homogeneous work shares a
     task wave — giant blobs can't straggle a partition of thumbnails.
+    ``num_partitions`` defaults to the session's ``defaultParallelism``:
+    exactly one wave of Python tasks (ARCHITECTURE.md §4).
 
     NOTE: this shuffles the GENERATED media frame, i.e. every blob
     crosses the exchange. When the blob size is predictable from the
@@ -585,7 +589,11 @@ def size_class_partitioned(media: DataFrame, num_partitions: int = 32) -> DataFr
     size_class = F.floor(F.log2(F.length("content") + 1)).alias("_size_class")
     return (
         media.withColumn("_size_class", size_class)
-        .repartition(num_partitions, F.col("kind"), F.col("_size_class"))
+        .repartition(
+            num_partitions or media.sparkSession.sparkContext.defaultParallelism,
+            F.col("kind"),
+            F.col("_size_class"),
+        )
         .drop("_size_class")
     )
 
@@ -593,7 +601,7 @@ def size_class_partitioned(media: DataFrame, num_partitions: int = 32) -> DataFr
 def spec_partitioned_ids(
     ids: DataFrame,
     id_col: str = "media_id",
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     salt: int = 64,
 ) -> DataFrame:
     """Size-class placement computed BEFORE generation, on the id frame.
@@ -615,7 +623,12 @@ def spec_partitioned_ids(
     far fewer distinct keys than task slots (guide §2.5's too-few-keys
     trap — the old 8-partition shape capped the decode stage at 8
     tasks), while kind+class stay in the key so co-resident rows still
-    share a work profile."""
+    share a work profile.
+
+    ``num_partitions`` defaults to the session's ``defaultParallelism``:
+    one wave of Python tasks. Each task pays a fixed worker cost, so
+    more partitions than slots only adds waves (ARCHITECTURE.md §4;
+    a literal 32 ran 8 waves on a 4-core host)."""
     mid = F.col(id_col)
     w = F.lit(8) + mid % 16
     h = F.lit(8) + mid % 8
@@ -632,7 +645,7 @@ def spec_partitioned_ids(
         .withColumn("_size_class", F.floor(F.log2(psize + 1)))
         .withColumn("_salt", mid % salt)
         .repartition(
-            num_partitions,
+            num_partitions or ids.sparkSession.sparkContext.defaultParallelism,
             F.col("_kind_r"),
             F.col("_size_class"),
             F.col("_salt"),

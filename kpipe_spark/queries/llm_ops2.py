@@ -454,22 +454,19 @@ def m02_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m03_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kpipe_spark.util import ieee_round
 
-    # Round 14 (guide §8 + §2.5 + §4): size-class placement computed
-    # BEFORE generation on the ID frame (predicted byte size is m01's
-    # closed form of the id), then generation and decode run in ONE
-    # mapInPandas worker (generate_and_extract). The old shape
-    # generated every blob, shuffled the generated frame into 8
-    # (kind, size_class) partitions — every content byte crossed an
-    # exchange, the decode stage ran 8-wide on local[32], and each
-    # blob crossed the Python↔JVM Arrow boundary twice. Now the only
-    # exchange carries bare ids and blob bytes never leave the worker
-    # that produced them.
+    # Size-class placement computed BEFORE generation on the ID frame
+    # (predicted byte size is m01's closed form of the id), then
+    # generation and decode run in ONE mapInPandas worker
+    # (generate_and_extract), so the only exchange carries bare ids
+    # and blob bytes never leave the worker that produced them. The
+    # exchange makes exactly one wave of Python tasks
+    # (defaultParallelism partitions): a literal 32 ran 32 tasks on 4
+    # slots, eight waves of the per-task worker cost (ARCHITECTURE.md
+    # §4).
     ids = load_tables(spark, sf_dir).documents.select(
         F.col("doc_id").alias("media_id")
     )
-    feats = M.generate_and_extract(
-        M.spec_partitioned_ids(ids, num_partitions=32)
-    )
+    feats = M.generate_and_extract(M.spec_partitioned_ids(ids))
     return feats.select(
         "media_id",
         "kind",

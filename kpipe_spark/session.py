@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the kpipe_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -65,19 +68,27 @@ def get_spark(
         # toggle stays at its default because it trusts pre-execution
         # estimates, which at 100 TB can be join-inflated and build an
         # unbounded hash map. Measured on the band-join family at
-        # sf0.1 (interleaved 3-arm A/B, same session): d15 5.38->4.30,
+        # sf0.1 on local[32] (interleaved 3-arm A/B, same session; not
+        # yet re-measured on a 4-core host): d15 5.38->4.30,
         # d24 3.81->2.77, d05 1.82->1.65, d54/d07 -5-10%; the skipped
         # per-partition sorts are the win and grow with partition
         # size. AQE-only also keeps pre-execution plans (and the
         # plan-shape suite) unchanged.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(128 * 1024 * 1024)),
+            str(128 * 1024 * 1024),
         )
         .config("spark.sql.shuffle.partitions", str(nshuffle))
         # Arrow everywhere Python touches data (pandas UDFs, toPandas)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # pyspark's daemon with a stat check in front of zipimport's
+        # per-task directory re-read (worker_daemon.py): ~0.15 s less
+        # fixed cost on every Python-worker task. Workers get this
+        # package's root on their path, so the daemon (and this
+        # package's UDFs) import whatever the driver's working directory.
+        .config("spark.python.daemon.module", "kpipe_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         # deterministic timestamps regardless of host TZ
         .config("spark.sql.session.timeZone", "UTC")
         # dimension tables (region/nation/supplier and SF-scaled customer

@@ -2,14 +2,14 @@
 
 Each headline and sweep row records wall time, external cores =
 (machine busy jiffies − our process-tree jiffies) / window, and the
-task CPU, task count and single-task stage share Spark's status store
-holds for the row's own jobs. These tests pin what makes those numbers
+task CPU, task count, single-task stage share and Python-worker seconds
+Spark's status store holds for the row's own jobs. These tests pin what makes those numbers
 meaningful: our own CPU burn is attributed to the TREE (so a busy bench
 doesn't read itself as contention), the jiffy helpers survive process
 churn without raising (procfs rows race with exits), the capture helper
 reads task metrics for the query it ran, the stdout line fits the
-driver's tail window, and bench.py reads no tuning knob from the
-environment."""
+driver's tail window, and neither bench.py nor the session factory reads
+a tuning knob from the environment."""
 
 from __future__ import annotations
 
@@ -140,6 +140,7 @@ def _headline_doc(n_queries: int, hot: int = 0) -> dict:
                 "task_cpu_s": 2.345,
                 "tasks": 17,
                 "single_task_share": 0.25,
+                "pyworker_s": 0.123,
             }
             for i, n in enumerate(names)
         },
@@ -223,24 +224,23 @@ def test_timed_capture_reads_task_metrics(spark):
         spark, lambda: q.build(spark, "/root/testdata/sf0.001"), runs=2
     )
     assert set(row) == {
-        "wall_s", "ext_cores", "task_cpu_s", "tasks", "single_task_share"
+        "wall_s", "ext_cores", "task_cpu_s", "tasks", "single_task_share",
+        "pyworker_s",
     }
     assert row["wall_s"] > 0
     assert row["ext_cores"] >= 0
     assert row["task_cpu_s"] > 0
     assert row["tasks"] >= 1
     assert 0 <= row["single_task_share"] <= 1
+    assert row["pyworker_s"] >= 0
 
 
-def test_bench_reads_no_env_knob():
-    """bench.py measures; it takes no tuning knobs from the environment.
-    The one variable it may read is the dataset directory. Any other
-    os.environ / os.getenv read — a gate threshold, a wait budget, an
-    output path — fails here, as does an access whose key is not a
-    literal."""
+def _environ_keys(path: str) -> list:
+    """The keys of every os.environ / os.getenv read in ``path`` (None
+    for a key that is not a literal). Fails if an os.environ reference
+    is not a keyed read, or if the module imports from os."""
     import ast
 
-    path = os.path.join(os.path.dirname(bench.__file__), "bench.py")
     with open(path) as f:
         tree = ast.parse(f.read())
 
@@ -274,8 +274,28 @@ def test_bench_reads_no_env_knob():
                 reads.append(node.args[0])
     # every os.environ reference is a keyed read, every key a literal
     assert environ_reads == environ_refs, (environ_reads, environ_refs)
-    keys = [k.value if isinstance(k, ast.Constant) else None for k in reads]
+    return [k.value if isinstance(k, ast.Constant) else None for k in reads]
+
+
+def test_bench_reads_no_env_knob():
+    """bench.py measures; it takes no tuning knobs from the environment.
+    The one variable it may read is the dataset directory. Any other
+    os.environ / os.getenv read — a gate threshold, a wait budget, an
+    output path — fails here, as does an access whose key is not a
+    literal."""
+    keys = _environ_keys(os.path.join(os.path.dirname(bench.__file__), "bench.py"))
     assert set(keys) <= {"SPARK_GRAFT_SF_DIR"}, keys
+
+
+def test_session_reads_only_host_sizing_env():
+    """get_spark's conf is fixed: the environment may size the session
+    to the host (core count, driver heap) and nothing else. A tuning
+    knob read from the environment, such as a join threshold, fails
+    here."""
+    from kpipe_spark import session
+
+    keys = _environ_keys(session.__file__)
+    assert set(keys) <= {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}, keys
 
 
 def test_tree_jiffies_recoup_reaped_children():

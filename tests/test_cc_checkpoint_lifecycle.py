@@ -64,6 +64,37 @@ def test_repeated_builds_do_not_accumulate(spark):
     assert _persistent_rdd_count(spark) <= base
 
 
+def test_round_costs_one_checkpoint_action(spark):
+    """Convergence is read from an observe() on each round's eager
+    checkpoint, so a propagation round runs the checkpoint's jobs and
+    nothing else: five per round on this fixture (its shuffle map
+    stages run as jobs of their own under AQE, plus the checkpoint
+    itself). The separate filter/limit/count check it replaced cost
+    two more jobs per round. A 12-node chain needs more rounds than
+    any cap used here, so the difference between caps is whole
+    rounds."""
+    import uuid
+
+    sc = spark.sparkContext
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], "id_a int, id_b int"
+    )
+
+    def jobs(max_iterations: int) -> int:
+        group = f"cc-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            free_local_checkpoint(
+                D.connected_components(chain, max_iterations=max_iterations)
+            )
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(3) - jobs(2) == 5
+    assert jobs(4) - jobs(2) == 10
+
+
 def test_free_is_noop_on_non_checkpointed_frames(spark):
     df = spark.range(10).selectExpr("id", "id % 3 as k")
     assert free_local_checkpoint(df) is False

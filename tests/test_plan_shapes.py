@@ -183,6 +183,20 @@ def test_broadcast_hints_are_reviewed_and_bounded(spark):
     )
 
 
+def test_m03_id_exchange_is_one_task_wave(spark):
+    """m03's only exchange carries bare ids into the generate+decode
+    mapInPandas stage, and it has exactly defaultParallelism partitions:
+    every Python task pays a fixed worker cost, so partitions beyond the
+    task slots only add waves."""
+    plan = plan_of(spark, "m03_media_features")
+    exchanges = re.findall(
+        r"Exchange hashpartitioning\(_kind_r#\d+L?, _size_class#\d+L?, "
+        r"_salt#\d+L?, (\d+)\), REPARTITION_BY_NUM",
+        plan,
+    )
+    assert exchanges == [str(spark.sparkContext.defaultParallelism)], plan
+
+
 def test_pq_kernels_have_one_home():
     """One implementation per kernel: under kpipe_spark/ the 2^24
     fixed-point scale and the unrolled fixed-point squared L2 are
