@@ -52,33 +52,17 @@ from kpipe_spark.util import ensure_parallelism
     tags=("llm", "dedup", "similarity"),
 )
 def d11_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kpipe_spark.util import ensure_parallelism
-
     emb = load_tables(spark, sf_dir).embeddings
-    v = S.as_double_array("embedding")
-    # norms are PER-ROW quantities: computing them before the pair join
-    # (identical fold, identical bits) turns three interpreted
-    # 64-element folds per PAIR into one — and the stream side spreads
-    # across cores (the 1-split scan ran the whole nested loop in one
-    # task). Measured 77 s -> ~1 s at sf0.1 for the same output.
-    a = ensure_parallelism(emb).select(
-        F.col("vec_id").alias("id_a"), v.alias("_va"), S.norm(v).alias("_na")
-    )
-    b = emb.select(
-        F.col("vec_id").alias("id_b"), v.alias("_vb"), S.norm(v).alias("_nb")
-    )
-    # broadcast one side: the pair generator is then a map-side nested loop
-    # over corpus partitions — no shuffle of vectors at all. At scale the
-    # broadcast side is the (small) LSH-candidate set, not the corpus.
-    den = F.col("_na") * F.col("_nb")
-    sim = F.round(
-        F.when(den > 0, S.dot(F.col("_va"), F.col("_vb")) / den), 4
-    )
-    return (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", sim.alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= 0.35)
-    )
+    # All pairs are scored by the numpy pair kernel: as a broadcast
+    # nested-loop join every ordered pair paid an interpreted 64-element
+    # dot fold, because Catalyst evaluates the similarity filter before
+    # id_a < id_b (~9.5 s at sf0.1; 77 s before norms moved per row).
+    # The kernel returns the raw double in the fold's bits; the HALF_UP
+    # round and the exact threshold stay in the JVM.
+    pairs = S.cosine_pairs(emb, "vec_id", "embedding", min_sim=0.35, places=4)
+    return pairs.select(
+        "id_a", "id_b", F.round("sim", 4).alias("cosine_sim")
+    ).filter(F.col("cosine_sim") >= 0.35)
 
 
 # ---------------------------------------------------------------------------
@@ -296,7 +280,6 @@ def media_frame(
     sf_dir: str,
     kinds: tuple[str, ...] | None = None,
     include_content: bool = True,
-    spec_partitions: int | None = None,
 ) -> DataFrame:
     """documents -> multimodal frame: REAL binary content (genuine PNG /
     WAV / length-prefixed PNG-frame container, stdlib-generated on
@@ -312,29 +295,14 @@ def media_frame(
     projection here. ``include_content=False`` is the column-pruning
     analogue for the same boundary: metadata-only consumers (m02) get
     NULL content instead of paying the codec encode per row (see
-    generate_media's docstring). ``spec_partitions`` is the
-    partitioning analogue: size-class placement applied to the ID
-    frame (byte size is a closed form of the id) so blob-consuming
-    stages downstream inherit straggler-safe placement without the
-    generated bytes ever crossing an exchange
-    (spec_partitioned_ids's docstring)."""
+    generate_media's docstring)."""
     from kpipe_spark.util import ensure_parallelism
 
     docs = load_tables(spark, sf_dir).documents
-    if spec_partitions:
-        # the spec repartition IS the parallelism spread — stacking
-        # ensure_parallelism's round-robin exchange under it would pay
-        # two back-to-back id shuffles for one placement
-        ids = docs.select(F.col("doc_id").alias("media_id"))
-    else:
-        ids = ensure_parallelism(docs).select(
-            F.col("doc_id").alias("media_id")
-        )
+    ids = ensure_parallelism(docs).select(F.col("doc_id").alias("media_id"))
     if kinds:
         residues = [_KIND_RESIDUE[k] for k in kinds]
         ids = ids.filter((F.col("media_id") % 3).isin(residues))
-    if spec_partitions:
-        ids = M.spec_partitioned_ids(ids, num_partitions=spec_partitions)
     return M.generate_media(ids, include_content=include_content)
 
 

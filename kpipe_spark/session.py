@@ -89,6 +89,13 @@ def get_spark(
         # package's UDFs) import whatever the driver's working directory.
         .config("spark.python.daemon.module", "kpipe_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # no Python call-site capture for DataFrame/Column calls: with it
+        # on, pyspark wraps each such call in py4j round trips
+        # (getActiveSession, a conf read, setting and clearing the
+        # origin); building the 8 perfbench llm_corpus queries at sf0.01
+        # made about 9,200 round trips with it and 4,600 without.
+        # Errors lose only the Python call site in their query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # deterministic timestamps regardless of host TZ
         .config("spark.sql.session.timeZone", "UTC")
         # dimension tables (region/nation/supplier and SF-scaled customer

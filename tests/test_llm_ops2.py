@@ -42,6 +42,28 @@ def test_embedding_neardup_symmetric_and_thresholded(spark):
         assert r["cosine_sim"] >= 0.35
 
 
+def test_embedding_neardup_matches_the_jvm_fold_bit_for_bit(spark):
+    """d11's pair kernel returns the rows of the JVM ``cosine_pre``
+    formulation it replaced, compared at full precision."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    v = S.as_double_array("embedding")
+    a = emb.select(F.col("vec_id").alias("id_a"), v.alias("va"), S.norm(v).alias("na"))
+    b = emb.select(F.col("vec_id").alias("id_b"), v.alias("vb"), S.norm(v).alias("nb"))
+    sim = S.cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
+    fold = (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.round(sim, 4).alias("cosine_sim"))
+        .filter(F.col("cosine_sim") >= 0.35)
+    )
+
+    def rows(df):
+        return sorted((r.id_a, r.id_b, repr(r.cosine_sim)) for r in df.collect())
+
+    want = rows(fold)
+    assert want
+    assert rows(all_queries()["d11_embedding_neardup"].build(spark, SF)) == want
+
+
 def test_fingerprint_is_stable_and_order_insensitive(spark):
     """Same text ⇒ same bottom-4 sketch regardless of partitioning."""
     q = all_queries()["d12_doc_fingerprint"]

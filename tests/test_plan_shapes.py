@@ -47,9 +47,9 @@ def test_d08_vectors_never_shuffle(spark):
 
 
 def test_no_query_degenerates_to_cartesian(spark):
-    """Cross products are only ever broadcast nested loops over probe
-    batches (d11's bounded pair generator); a CartesianProduct node in
-    any registered query is a planning bug."""
+    """Cross products are only ever broadcast nested loops over a
+    bounded probe side (a query batch, a centroid table); a
+    CartesianProduct node in any registered query is a planning bug."""
     for name in all_queries():
         plan = plan_of(spark, name)
         assert "CartesianProduct" not in plan, name
@@ -145,7 +145,6 @@ def test_broadcast_hints_are_reviewed_and_bounded(spark):
                             # F.broadcast(comp) elsewhere fails this audit
         "comp.agg",    # 1-row count over comp
         "cal",         # calendar grid (days in range)
-        "b",           # d11 bounded probe batch (pair generator)
         "q",           # similarity.py probe/query set
         "hits",        # llm_ops4: subset of eval grams
         "eval_grams",  # decontamination eval suite (benchmark-sized)
@@ -195,6 +194,58 @@ def test_m03_id_exchange_is_one_task_wave(spark):
         plan,
     )
     assert exchanges == [str(spark.sparkContext.defaultParallelism)], plan
+
+
+def test_d11_scores_pairs_in_one_python_task_wave(spark):
+    """d11's pair scoring is one Arrow-batched Python stage of at most
+    defaultParallelism tasks: build() runs no job, the action runs that
+    stage and the map stage of its one exchange, and the executed plan
+    has no nested-loop join and no interpreted zip_with fold."""
+    from kpipe_spark.catalog import load_tables
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    load_tables(spark, SF).embeddings  # the catalog's one-time schema read
+    try:
+        sc.setJobGroup("d11-build", "plan pin")
+        df = all_queries()["d11_embedding_neardup"].build(spark, SF)
+        sc.setJobGroup("d11-action", "plan pin")
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("d11-build") == []
+    jobs = tracker.getJobIdsForGroup("d11-action")
+    assert len(jobs) <= 2, jobs
+
+    def names(cluster):
+        out = [cluster.name()]
+        it = cluster.childNodes().iterator()
+        while it.hasNext():
+            out.append(it.next().name())
+        it = cluster.childClusters().iterator()
+        while it.hasNext():
+            out += names(it.next())
+        return out
+
+    python_stages = [
+        tracker.getStageInfo(sid).numTasks
+        for j in jobs
+        for sid in tracker.getJobInfo(j).stageIds
+        if any(
+            m in n
+            for n in names(store.operationGraphForStage(sid).rootCluster())
+            for m in ("Python", "Pandas", "InArrow")
+        )
+    ]
+    assert len(python_stages) == 1, python_stages
+    assert python_stages[0] <= sc.defaultParallelism
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "zip_with" not in plan
 
 
 def test_pq_kernels_have_one_home():
