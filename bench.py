@@ -3,7 +3,7 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}. The full artifact (per-row
-measurements, A/B guards, streaming stats) is written to --out (default
+measurements, streaming stats) is written to --out (default
 BENCH_HEADLINE_c{cores}.json, named after the session's core count);
 the stdout line is sized to fit the driver's bounded 2000-char tail
 capture (see _compact_headline_line). ``--sweep`` times every
@@ -93,8 +93,8 @@ HEADLINE = [
 def _bench_pipeline():
     """The outcome pipeline every streaming/pipeline bench row drives
     (JSON extract -> fail_when -> require_field -> filter) — one
-    definition so the delivered-fraction math, the sink-only overlap
-    A/B and the streaming rates all measure the same work."""
+    definition so the delivered-fraction math and the streaming rates
+    measure the same work."""
     from pyspark.sql import functions as F  # noqa: F811
 
     from kpipe_spark.pipeline import Pipeline
@@ -237,370 +237,6 @@ def _pipeline_throughput(build, n_events: int, runs: int = 5) -> dict:
         "spread_over_median": round((rates[-1] - rates[0]) / median, 3),
         "runs": runs,
     }
-
-
-def _work_overlap_ab(spark, sf_dir: str, work_ms: float = 10.0) -> dict:
-    """Sink-only overlap measurement backing the 10 ms comparison: how
-    fast does blocking_enrich drain work_ms of blocking wait per
-    DELIVERED record, with the pipeline cost out of the frame? The
-    streaming 10 ms rows bundle per-batch pipeline+DLQ overhead; this
-    row isolates the dispatch+work capacity — the thing the
-    reference's workMicros benchmark actually measures (57,563
-    delivered rec/s PARALLEL @ 10 ms). Serial floor context: the same
-    frame row-at-a-time would take rows × work_ms on one core;
-    overlap_x = serial / measured."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from kpipe_spark.functions.blocking import blocking_enrich
-    from kpipe_spark.pipeline.result import PASSED, STATUS_COL
-
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    pipeline = _bench_pipeline()
-    from kpipe_spark.util import ensure_parallelism
-
-    delivered = (
-        pipeline.apply(ensure_parallelism(events))
-        .filter(F.col(STATUS_COL) == PASSED)
-        .drop(STATUS_COL)
-        .localCheckpoint(eager=True)
-    )
-    n = delivered.count()
-    wait = work_ms / 1000.0
-
-    def best_of(build, runs=2) -> float:
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    base_sec = best_of(lambda: delivered)
-    enrich = lambda: blocking_enrich(  # noqa: E731
-        delivered,
-        lambda r: time.sleep(wait) or 1,
-        "io_result",
-        "int",
-        concurrency=128,
-    )
-    best_of(enrich, runs=1)  # warm the Python workers + thread pools
-    enrich_sec = best_of(enrich)
-    serial_sec = n * wait
-    return {
-        "work_ms": work_ms,
-        "delivered_rows": n,
-        "noop_sec": round(base_sec, 3),
-        "enrich_sec": round(enrich_sec, 3),
-        "delivered_rec_per_sec": int(n / enrich_sec),
-        "serial_floor_sec": round(serial_sec, 1),
-        "overlap_x": round(serial_sec / enrich_sec, 1),
-        "reference_parallel_10ms": 57563,
-    }
-
-
-def _batch_overhead(spark, sf_dir: str) -> dict:
-    """Per-micro-batch FIXED overhead of the outcome contract: time one
-    full ``StreamRunner.process_batch`` (pipeline + one checkpoint job
-    carrying the observe() outcome counts + DLQ split write + delivery)
-    against the bare pipeline->filter(PASSED)->sink path
-    over the same static frame. The difference is the per-batch cost
-    the reference's dispatch benchmark doesn't pay — the line that,
-    with the delivered-fraction row, lets BASELINE.md's 57,563/34,465
-    comparison read straight off the artifact: our streaming 10 ms
-    rows = sink-only overlap capacity minus (this overhead amortized
-    per batch), over delivered records."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from kpipe_spark.catalog import load_table
-    from kpipe_spark.pipeline.result import PASSED, STATUS_COL
-    from kpipe_spark.streaming import StreamRunner
-    from kpipe_spark.util import ensure_parallelism
-
-    # load_table, never a raw read — events.parquet carries NANOS
-    # timestamps (CLAUDE.md); a raw read only works if something else
-    # already flipped the session conf
-    events = ensure_parallelism(
-        load_table(spark, sf_dir, "events")
-    ).localCheckpoint(eager=True)
-    n = events.count()
-
-    def noop(df, batch_id=None) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    runner = StreamRunner(
-        pipeline=_bench_pipeline(), sink=noop, dlq_writer=noop
-    )
-    pipeline = _bench_pipeline()
-
-    def bare() -> None:
-        noop(
-            pipeline.apply(events)
-            .filter(F.col(STATUS_COL) == PASSED)
-            .drop(STATUS_COL)
-        )
-
-    def best_of(run, runs=3) -> float:
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            run()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    runner.process_batch(events, 0)  # warm both paths' codegen
-    bare()
-    full_sec = best_of(lambda: runner.process_batch(events, 0))
-    bare_sec = best_of(bare)
-    return {
-        "rows_per_batch": n,
-        "full_process_batch_sec": round(full_sec, 3),
-        "pipeline_sink_only_sec": round(bare_sec, 3),
-        "fixed_overhead_sec": round(max(full_sec - bare_sec, 0.0), 3),
-    }
-
-
-def _d05_signature_ab(spark, sf_dir: str) -> dict:
-    """A/B guard for the minhash signature shape (ARCHITECTURE.md
-    'projection vs aggregate' crossover note): time the SHIPPED pure-
-    projection signature against the explode -> groupBy aggregate
-    reference at the current slot family. The winner flipped once
-    already (aggregate won at 64 slots, projection at 24), so every
-    bench run re-measures on this machine — a family retune that
-    silently regresses d05 shows up as shipped_is_faster=false in
-    BENCH_r{N}.json instead of hiding inside the headline total."""
-    from kpipe_spark.catalog import load_tables
-    from kpipe_spark.functions import dedup as D
-    from kpipe_spark.functions.dedup import (
-        MERSENNE_P31,
-        MINHASH_NUM_HASHES,
-        slot_coefficients,
-        word_shingle_hashes,
-    )
-    from kpipe_spark.util import ensure_parallelism
-
-    docs = load_tables(spark, sf_dir).documents
-
-    def best_of(build, n=2) -> float:
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    def aggregate_shape():
-        content = F.col("text").isNotNull() & F.col("text").rlike(r"\S")
-        pre = ensure_parallelism(docs.filter(content)).select(
-            "doc_id", F.explode(word_shingle_hashes("text", 3)).alias("h")
-        )
-        g = pre.groupBy("doc_id").agg(
-            *[
-                F.min(
-                    (F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE_P31
-                ).alias(f"s{j}")
-                for j, (a, b) in (
-                    (j, slot_coefficients(j))
-                    for j in range(MINHASH_NUM_HASHES)
-                )
-            ]
-        )
-        return g.select(
-            "doc_id",
-            F.array(
-                *[F.col(f"s{j}") for j in range(MINHASH_NUM_HASHES)]
-            ).alias("sig"),
-        )
-
-    proj = best_of(lambda: D.minhash_signature_df(docs))
-    agg = best_of(aggregate_shape)
-    return {
-        "projection_sec": round(proj, 3),
-        "aggregate_sec": round(agg, 3),
-        "shipped": "projection",
-        "shipped_is_faster": proj <= agg,
-    }
-
-
-def _incremental_admit_ab(spark, sf_dir: str) -> dict:
-    """The stored-artifact dividend, measured: admitting the same
-    batch (doc_id % 4 == 0) against (a) a pre-built bucketed band
-    index (CorpusIndex.admit — the steady-state production path; the
-    one-time index build is NOT in the timed window, it's the cost
-    you pay once per corpus) vs (b) the self-contained d54 query that
-    re-derives corpus signatures inline every run (what the headline
-    d54 number measures, by design — the oracle needs it
-    self-contained). The gap is what the artifact buys per batch; at
-    100 TB (a) stays batch-sized while (b) is a full corpus pass.
-
-    Reading the ratio: ~1.3-1.7× at sf0.1 on a quiet machine (the
-    r5-era 3.18× was a contaminated inline numerator — adjudicated
-    ARCHITECTURE §5 round-7 note). The bench batch is 25% of the
-    corpus, so batch-side signature work + session fixed costs
-    dominate BOTH sides here; the dividend grows with the
-    corpus/batch ratio (measured: stored admit 1.76→0.99 s as the
-    batch shrinks 25%→0.4% while inline stays corpus-sized), so the
-    local ratio is a floor, not the claim."""
-    from kpipe_spark.catalog import load_tables
-    from kpipe_spark.functions.corpus_index import CorpusIndex
-
-    docs = load_tables(spark, sf_dir).documents
-    is_new = F.col("doc_id") % 4 == 0
-    # uuid-suffixed: two concurrent bench runs share one warehouse and
-    # would otherwise overwrite/drop each other's index mid-measurement
-    idx = CorpusIndex.build(
-        spark,
-        docs.filter(~is_new),
-        f"bench_corpus_bands_{uuid.uuid4().hex[:8]}",
-        num_buckets=8,
-    )
-    try:
-        batch = docs.filter(is_new)
-
-        def timed(build) -> float:
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                build().write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            return best
-
-        stored = timed(lambda: idx.admit(batch))
-        from kpipe_spark.queries import all_queries
-
-        inline = timed(
-            lambda: all_queries()["d54_incremental_dedup"].build(
-                spark, sf_dir
-            )
-        )
-        return {
-            "stored_index_admit_sec": round(stored, 3),
-            "inline_derivation_sec": round(inline, 3),
-            "artifact_speedup": round(inline / stored, 2),
-        }
-    finally:
-        idx.drop()
-
-
-def _cluster_reuse_ab(spark, sf_dir: str) -> dict:
-    """The ClusterIndex dividend, measured: serving all five component
-    consumers (d24/d47/d52/d55/d65 — ``dedup_reports.CONSUMERS``) from
-    (a) one stored component table vs (b) each consumer re-deriving
-    MinHash -> star candidates -> label propagation inline, the
-    self-contained shape the graded queries keep by oracle necessity.
-
-    Three numbers: the inline 5-pass total (what the sweep's five
-    slowest dedup rows sum to), the one-time build (the single corpus
-    pass the artifact amortizes), and the 5-consumer serve total
-    (broadcast joins of a dup-graph-sized table — the marginal cost
-    per report once built). Even the FIRST corpus comes out ahead
-    (build + serve < inline), and every later report cycle pays only
-    the serve side; at 100 TB the gap is four full corpus passes per
-    reporting cycle. ``examples/cluster_reuse.py`` is the parity
-    proof (stored == inline row-for-row)."""
-    from kpipe_spark.catalog import load_tables
-    from kpipe_spark.functions.cluster_index import ClusterIndex
-    from kpipe_spark.functions.dedup import dup_components
-    from kpipe_spark.functions.dedup_reports import CONSUMERS
-
-    docs = load_tables(spark, sf_dir).documents
-
-    def timed(run, n=2) -> float:
-        best = float("inf")
-        for _ in range(n):
-            t0 = time.perf_counter()
-            run()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    def noop(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    def inline_pass() -> None:
-        for fn in CONSUMERS.values():
-            noop(fn(docs, dup_components(docs)))
-
-    inline = timed(inline_pass)
-    # uuid-suffixed: two concurrent bench runs share one warehouse
-    # (the _incremental_admit_ab rule)
-    idx = ClusterIndex.build(
-        spark, docs, f"bench_clusters_{uuid.uuid4().hex[:8]}"
-    )
-    try:
-        build = timed(lambda: idx.refresh(docs))
-
-        def serve_pass() -> None:
-            comp = idx.components_df
-            for fn in CONSUMERS.values():
-                noop(fn(docs, comp))
-
-        serve = timed(serve_pass)
-        return {
-            "consumers": len(CONSUMERS),
-            "inline_recompute_sec": round(inline, 3),
-            "stored_build_sec": round(build, 3),
-            "stored_serve_sec": round(serve, 3),
-            # first corpus: build once + serve all, vs inline
-            "artifact_speedup_including_build": round(
-                inline / (build + serve), 2
-            ),
-            # every later reporting cycle: serve only
-            "serve_only_speedup": round(inline / serve, 2),
-        }
-    finally:
-        idx.drop()
-
-
-def _cluster_incremental_refresh_ab(spark, sf_dir: str) -> dict:
-    """Round-11: the ClusterIndex release-cadence dividend, measured —
-    folding a ~9% batch into stored components via
-    ``refresh_incremental`` (batch-sized edges from the stored band
-    index + quotient label propagation + touched-bucket overwrite) vs
-    the full ``refresh`` rebuild over the grown corpus (a complete
-    MinHash -> CC pass).
-
-    Reading the ratio: at sf0.1 both sides carry session fixed costs
-    and the corpus is small, so the local ratio is a FLOOR — the full
-    side scales with the corpus while the incremental side scales with
-    the batch, so at a 100 TB release cadence the gap is the whole
-    corpus re-pass per release. Both sides are best-of-2 with the
-    stored state reset between runs (the fold mutates the table)."""
-    from kpipe_spark.catalog import load_tables
-    from kpipe_spark.functions.cluster_index import ClusterIndex
-    from kpipe_spark.functions.corpus_index import CorpusIndex
-
-    docs = load_tables(spark, sf_dir).documents
-    is_new = F.col("doc_id") % 11 == 0
-    old, batch = docs.filter(~is_new), docs.filter(is_new)
-    # uuid-suffixed: concurrent bench runs share one warehouse
-    idx = ClusterIndex.build(
-        spark, old, f"bench_inc_clusters_{uuid.uuid4().hex[:8]}"
-    )
-    bands = CorpusIndex.build(
-        spark, old, f"bench_inc_bands_{uuid.uuid4().hex[:8]}", num_buckets=8
-    )
-    try:
-        inc_times, stats = [], {}
-        for _ in range(2):
-            t0 = time.perf_counter()
-            stats = idx.refresh_incremental(batch, bands)
-            inc_times.append(time.perf_counter() - t0)
-            idx.refresh(old)  # reset to the pre-batch state (untimed)
-        full_times = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            idx.refresh(docs)
-            full_times.append(time.perf_counter() - t0)
-        inc, full = min(inc_times), min(full_times)
-        return {
-            "incremental_fold_sec": round(inc, 3),
-            "full_rebuild_sec": round(full, 3),
-            "incremental_speedup": round(full / inc, 2),
-            "overwritten_buckets": stats.get("overwritten_buckets"),
-            "num_comp_buckets": stats.get("num_comp_buckets"),
-        }
-    finally:
-        idx.drop()
-        bands.drop()
 
 
 # ---------------------------------------------------------------------------
@@ -845,24 +481,6 @@ def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
         compact["streaming_ambient_max"] = max(
             (v for vs in samb.values() for v in vs), default=0.0
         )
-    ab = doc.get("d05_signature_ab", {})
-    if ab:
-        compact["d05_ab_projection_sec"] = ab.get("projection_sec")
-        compact["d05_ab_aggregate_sec"] = ab.get("aggregate_sec")
-        compact["d05_ab_shipped_is_faster"] = ab.get("shipped_is_faster")
-    admit = doc.get("incremental_admit_ab", {})
-    if admit:
-        compact["admit_artifact_speedup"] = admit.get("artifact_speedup")
-    cluster = doc.get("cluster_reuse_ab", {})
-    if cluster:
-        compact["cluster_serve_only_speedup"] = cluster.get(
-            "serve_only_speedup"
-        )
-    cinc = doc.get("cluster_incremental_refresh_ab", {})
-    if cinc:
-        compact["cluster_incremental_speedup"] = cinc.get(
-            "incremental_speedup"
-        )
     compact["detail"] = doc.get("detail_artifact")
     # drop order: evidence summaries first, never the contract fields
     droppable = (
@@ -873,9 +491,6 @@ def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
         "streaming_rps_best",
         "pipeline_rps_spread",
         "pipeline_rps_median",
-        "admit_artifact_speedup",
-        "cluster_serve_only_speedup",
-        "cluster_incremental_speedup",
         "loadavg_start",
     )
     line = json.dumps(compact, separators=(",", ":"))
@@ -1039,8 +654,7 @@ def main(out_path: str | None = None) -> None:
     # 10 ms of blocking wait at the sink, overlapped via
     # blocking_enrich's per-partition thread pool — the honest Spark
     # counterpart of kpipe's virtual-thread dispatch — and the rate is
-    # over delivered records (the ones that pay). The streaming number
-    # sits below the sink-only overlap because each micro-batch also
+    # over delivered records (the ones that pay). Each micro-batch also
     # runs the full pipeline + DLQ + accounting that the reference's
     # dispatch benchmark doesn't. 5 batches per run (4 steady
     # intervals; a 2-batch warm-up), interleaved P/K. These rows
@@ -1075,12 +689,6 @@ def main(out_path: str | None = None) -> None:
             return None
         return int(delivered_rps / delivered_fraction)
 
-    batch_overhead = _batch_overhead(spark, sf_dir)
-    work_overlap_ab = _work_overlap_ab(spark, sf_dir)
-    signature_ab = _d05_signature_ab(spark, sf_dir)
-    admit_ab = _incremental_admit_ab(spark, sf_dir)
-    cluster_ab = _cluster_reuse_ab(spark, sf_dir)
-    cluster_inc_ab = _cluster_incremental_refresh_ab(spark, sf_dir)
     # the reference's yardstick is consumer rec/s (BASELINE.md): p01 runs
     # the full outcome pipeline (JSON extract + 4 operators + accounting)
     # over the events table, so rows/elapsed is our comparable number —
@@ -1150,9 +758,9 @@ def main(out_path: str | None = None) -> None:
         },
         # 10 ms blocking work per record, overlapped (reference:
         # PARALLEL 57,563 / KEY_ORDERED 34,465 rec/s @ 10 ms), on both
-        # the delivered and the input (reference) basis, plus the
-        # sink-only overlap A/B; timer_health is the sleep(10 ms)
-        # p50/p90/p99 under 64 threads taken just before them
+        # the delivered and the input (reference) basis; timer_health
+        # is the sleep(10 ms) p50/p90/p99 under 64 threads taken just
+        # before them
         "timer_health": timer_probe,
         "streaming_rps_10ms_work": work_steady[-1],
         "streaming_rps_10ms_work_median": work_steady[1],
@@ -1166,18 +774,6 @@ def main(out_path: str | None = None) -> None:
         "streaming_key_ordered_rps_10ms_work_input_basis": input_basis(
             work_ko_steady[-1]
         ),
-        "work_overlap_ab": work_overlap_ab,
-        # the per-batch cost the reference's dispatch benchmark doesn't
-        # pay (accounting + DLQ split): with the sink-only overlap row
-        # this closes the 10 ms comparison arithmetic
-        "batch_overhead": batch_overhead,
-        "d05_signature_ab": signature_ab,
-        "incremental_admit_ab": admit_ab,
-        # the dup-cluster family's stored-artifact dividend: 5
-        # consumers from one component table vs 5 inline re-derivations
-        "cluster_reuse_ab": cluster_ab,
-        # release-cadence fold vs full rebuild (+~9% corpus)
-        "cluster_incremental_refresh_ab": cluster_inc_ab,
         "sf": sf_dir,
         "loadavg_start": loadavg_start,
         "loadavg": round(os.getloadavg()[0], 2),
@@ -1189,21 +785,6 @@ def main(out_path: str | None = None) -> None:
         f.write("\n")
     # the ONE stdout line, final and compact (driver tail = 2000 chars)
     print(_compact_headline_line(doc), flush=True)
-    # the A/B is a GUARD, not just telemetry: a family retune that
-    # makes the explode->aggregate signature faster than the shipped
-    # projection must fail the bench run, not hide in a JSON field.
-    # 20% tolerance so scheduler noise on a near-tie can't flap.
-    if signature_ab["projection_sec"] > signature_ab["aggregate_sec"] * 1.2:
-        print(
-            "FAIL: d05 signature A/B flipped — the shipped projection "
-            f"shape ({signature_ab['projection_sec']}s) is slower than "
-            f"the aggregate shape ({signature_ab['aggregate_sec']}s); "
-            "retune MINHASH slot family or flip the shipped shape "
-            "(ARCHITECTURE.md 'projection vs aggregate')",
-            file=sys.stderr,
-        )
-        sys.exit(1)
-
 
 if __name__ == "__main__":
     import argparse

@@ -23,8 +23,9 @@ the keep-one dedup a training pipeline applies before tokenization —
 and checks the keep-one invariant (survivors = corpus minus
 non-canonical dup-group members) against the component table itself.
 
-`bench.py`'s `cluster_reuse_ab` row measures what the artifact buys:
-(build + 5 consumers) vs (5 x inline recompute) at sf0.1.
+What the artifact buys, (build + 5 consumers) vs (5 x inline
+recompute), measured 2.76x at sf0.1 on 4 cores (BENCH_r15.json,
+`cluster_reuse_ab`).
 
 Run: python examples/cluster_reuse.py [sf_dir]
 """

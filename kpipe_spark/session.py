@@ -59,25 +59,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE rewrite sort-merge -> shuffled-hash at runtime when
-        # every post-shuffle partition is under 128 MiB (default 0 =
-        # never). The decision uses ACTUAL partition bytes, not
-        # estimates; the bound is on SERIALIZED/COMPRESSED post-shuffle
-        # bytes, so the in-memory hash map can be a few times larger —
-        # still well under executor memory — the static preferSortMergeJoin
-        # toggle stays at its default because it trusts pre-execution
-        # estimates, which at 100 TB can be join-inflated and build an
-        # unbounded hash map. Measured on the band-join family at
-        # sf0.1 on local[32] (interleaved 3-arm A/B, same session; not
-        # yet re-measured on a 4-core host): d15 5.38->4.30,
-        # d24 3.81->2.77, d05 1.82->1.65, d54/d07 -5-10%; the skipped
-        # per-partition sorts are the win and grow with partition
-        # size. AQE-only also keeps pre-execution plans (and the
-        # plan-shape suite) unchanged.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(128 * 1024 * 1024),
-        )
         .config("spark.sql.shuffle.partitions", str(nshuffle))
         # Arrow everywhere Python touches data (pandas UDFs, toPandas)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -117,9 +117,11 @@ def test_aqe_skew_join_splits_oversized_partitions(spark):
     to test data, AQE's final plan marks the join skew=true — the
     oversized hot-key partition was split at runtime. (At default
     256 MB thresholds the same mechanics engage at cluster scale.)
-    Since session.py sets maxShuffledHashJoinLocalMapThreshold, AQE may
-    legally rewrite the sort-merge join to shuffled-hash; the skew
-    split fires for both node types, so accept either."""
+    session.py leaves maxShuffledHashJoinLocalMapThreshold at Spark's
+    default (0, never convert), so get_spark's final plan keeps the
+    sort-merge join; a session that sets the threshold lets AQE rewrite
+    it to shuffled-hash, and the skew split fires for both node types,
+    so accept either."""
     saved = {
         k: spark.conf.get(k, None)
         for k in (
