@@ -484,8 +484,8 @@ def _compact_headline_line(doc: dict, limit: int = 1900) -> str:
     compact["detail"] = doc.get("detail_artifact")
     # drop order: evidence summaries first, never the contract fields
     droppable = (
-        "streaming_ambient_max",
         "ambient_hot",
+        "streaming_ambient_max",
         "streaming_rps_spread",
         "streaming_rps_median",
         "streaming_rps_best",

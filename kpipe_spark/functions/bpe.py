@@ -101,15 +101,15 @@ def train_bpe(
     round: one aggregate over the vocab table (pairs explode -> weight
     sum, map-side combined) + a deterministic top-1 (weight desc, pair
     asc) collected to the driver (1 row); the vocab table is then
-    rewritten with the merge and localCheckpoint'ed so the iterative
-    lineage doesn't stack (use checkpoint() on a real cluster). Each
-    round's superseded checkpoint is released immediately — the result
+    rewritten with the merge and materialized (``util.materialize``)
+    so the iterative lineage doesn't stack. Each round's superseded
+    checkpoint is released immediately — the result
     is a driver-side rule list, so no blocks survive the call
     (wave-10 lifecycle, OPTIMIZATION_r13).
     """
-    from kpipe_spark.util import free_local_checkpoint
+    from kpipe_spark.util import free_local_checkpoint, materialize
 
-    vocab = word_freq_table(df, text_col).localCheckpoint(eager=True)
+    vocab = materialize(word_freq_table(df, text_col), eager=True)
     rules: list[tuple[int, str, str, int]] = []
     for rank in range(num_merges):
         top = (
@@ -127,10 +127,13 @@ def train_bpe(
             break
         left, right = top[0]["pair"].split(" ", 1)
         rules.append((rank, left, right, int(top[0]["w"])))
-        merged = vocab.select(
-            _merge_pair(F.col("symbols"), left, right).alias("symbols"),
-            "weight",
-        ).localCheckpoint(eager=True)
+        merged = materialize(
+            vocab.select(
+                _merge_pair(F.col("symbols"), left, right).alias("symbols"),
+                "weight",
+            ),
+            eager=True,
+        )
         free_local_checkpoint(vocab)
         vocab = merged
     free_local_checkpoint(vocab)

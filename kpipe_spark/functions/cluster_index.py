@@ -337,17 +337,21 @@ class ClusterIndex(StoredArtifact):
         # a per-endpoint join would scan and shuffle it twice): unpivot
         # the batch-sized pairs to (edge, role, id) rows, join labels
         # once, regroup by edge. The edge ids are FROZEN by an eager
-        # localCheckpoint before the two unpivot branches reference
+        # materialization before the two unpivot branches reference
         # them — monotonically_increasing_id is evaluation-dependent,
         # and without the freeze each branch would re-derive ids over
         # its own task ordering and the regroup could pair role-a rows
-        # with the wrong role-b rows. Batch-sized, so the checkpoint is
-        # cheap (use checkpoint() on a real cluster).
-        pairs_e = pairs.select(
-            F.monotonically_increasing_id().alias("_eid"),
-            "id_new",
-            "id_other",
-        ).localCheckpoint(eager=True)
+        # with the wrong role-b rows. Batch-sized, so it is cheap.
+        from kpipe_spark.util import free_local_checkpoint, materialize
+
+        pairs_e = materialize(
+            pairs.select(
+                F.monotonically_increasing_id().alias("_eid"),
+                "id_new",
+                "id_other",
+            ),
+            eager=True,
+        )
         # Checkpoint lifecycle (the streaming shape runs this fold once
         # PER MICRO-BATCH; unreleased local checkpoints accumulate for
         # the life of the session — the connected_components leak,
@@ -355,8 +359,6 @@ class ClusterIndex(StoredArtifact):
         # moment the next eager checkpoint supersedes them. pairs'
         # lineage holds the batch band checkpoint inside
         # incremental_minhash_partners; pairs_e just captured its rows.
-        from kpipe_spark.util import free_local_checkpoint
-
         free_local_checkpoint(pairs)
         endpoints = pairs_e.select(
             "_eid", F.lit("a").alias("_role"), F.col("id_new").alias("_id")
@@ -387,9 +389,12 @@ class ClusterIndex(StoredArtifact):
             .filter(F.col("qa") != F.col("qb"))
         )
         sub = connected_components(edges, "qa", "qb")
-        subm = sub.select(
-            F.col("id").alias("_qnode"), F.col("cluster_id").alias("_newlab")
-        ).localCheckpoint(eager=True)
+        subm = materialize(
+            sub.select(
+                F.col("id").alias("_qnode"), F.col("cluster_id").alias("_newlab")
+            ),
+            eager=True,
+        )
         # subm supersedes both the edge-id freeze and the CC result
         free_local_checkpoint(pairs_e)
         free_local_checkpoint(sub)

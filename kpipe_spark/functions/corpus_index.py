@@ -178,8 +178,10 @@ class CorpusIndex(StoredArtifact):
         bucketed artifact (two joins unioned AFTER so the bucketed
         side stays exchange-free — see incremental_minhash_partners'
         docstring for why a pre-join union would re-shuffle it)."""
+        from kpipe_spark.util import materialize
+
         ids = F.col(self.id_col)
-        new_bands = self._bands_of(batch).localCheckpoint(eager=True)
+        new_bands = materialize(self._bands_of(batch), eager=True)
         new_side = new_bands.select(
             ids.alias("id_new"), "band", "bucket"
         )
@@ -343,9 +345,9 @@ class CorpusIndex(StoredArtifact):
         Use it on the replay path only (``ClusterIndex.update_batch``
         routes through it exactly when its fold reported a replay);
         the steady-state path keeps the cheap blind ``append``."""
-        from kpipe_spark.util import free_local_checkpoint
+        from kpipe_spark.util import free_local_checkpoint, materialize
 
-        bands = self._bands_of(batch).localCheckpoint(eager=True)
+        bands = materialize(self._bands_of(batch), eager=True)
         try:
             total = bands.count()
             present = self._batch_presence(bands).count()

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from kpipe_spark.functions.text import fingerprint, tokens
-from kpipe_spark.util import ensure_parallelism
+from kpipe_spark.util import ensure_parallelism, free_local_checkpoint, materialize
 
 
 # -- exact ------------------------------------------------------------------
@@ -350,16 +350,19 @@ def incremental_minhash_partners(
     shuffles only itself. After the batch is admitted, append its
     bands to the artifact (same bucketing) to keep the index current.
     """
-    new_bands = minhash_bands_df(
-        minhash_signature_df(new_docs, text_col, id_col, num_hashes, shingle_k),
-        id_col,
-        num_hashes,
-        bands,
     # materialize once: new_bands feeds three plan inputs (both sides of
     # vs_batch plus vs_corpus), and Spark plans join inputs
     # independently — without this the batch's signature pipeline runs
-    # 3x per call (use checkpoint() on a real cluster)
-    ).localCheckpoint(eager=True)
+    # 3x per call
+    new_bands = materialize(
+        minhash_bands_df(
+            minhash_signature_df(new_docs, text_col, id_col, num_hashes, shingle_k),
+            id_col,
+            num_hashes,
+            bands,
+        ),
+        eager=True,
+    )
     new_side = new_bands.select(F.col(id_col).alias("id_new"), "band", "bucket")
 
     def other_side(frame: DataFrame) -> DataFrame:
@@ -402,11 +405,13 @@ def connected_components(
     page form near-cliques). Per-round cost is one shuffle join
     edges><labels plus a map-side-combined min — proportional to the
     DUP-GRAPH size, not the corpus, since only candidate pairs carry
-    edges. localCheckpoint truncates the iterative lineage so the plan
-    doesn't grow per round (on a real cluster use checkpoint() to
-    durable storage instead). The changed-row count rides each round's
-    eager checkpoint through observe(), so a round is one action, with
-    no separate convergence job.
+    edges. Each round is materialized (``util.materialize``,
+    scale="corpus": the dup graph grows with the corpus), which
+    truncates the iterative lineage so the plan doesn't grow per round;
+    a cluster strategy writes the rounds to durable tables. The
+    changed-row count rides each round's eager materialization through
+    observe(), so a round is one action, with no separate convergence
+    job.
 
     Checkpoint lifecycle: each round's blocks are released as soon as
     the next round's checkpoint is materialized, and the edge list's
@@ -417,8 +422,6 @@ def connected_components(
     read 2-3x inflated timings from GC pressure).
     """
     import logging
-
-    from kpipe_spark.util import free_local_checkpoint
 
     # Symmetric edges via explode(array(fwd, rev)) — ONE pass over
     # `pairs`. The union-of-two-selects form planned the pair lineage
@@ -434,13 +437,15 @@ def connected_components(
             F.struct(F.col(b_col).alias("src"), F.col(a_col).alias("dst")),
         )
     ).alias("_e")
-    edges = (
-        pairs.select(edge)
-        .select(F.col("_e.src").alias("src"), F.col("_e.dst").alias("dst"))
-        # checkpoint the edge list too: every propagation round joins
-        # against edges — without this each round re-runs the entire
-        # upstream candidate pipeline
-        .localCheckpoint(eager=True)
+    # materialize the edge list too: every propagation round joins
+    # against edges — without this each round re-runs the entire
+    # upstream candidate pipeline
+    edges = materialize(
+        pairs.select(edge).select(
+            F.col("_e.src").alias("src"), F.col("_e.dst").alias("dst")
+        ),
+        eager=True,
+        scale="corpus",
     )
     # Round 1 folded into initialization: from identity labels, one
     # propagation round assigns each node min(self, neighbors) — which
@@ -452,16 +457,17 @@ def connected_components(
     # aggregate + an eager checkpoint, so seeding removes a full
     # dup-graph-sized join round at any scale (measured ~0.3-0.5 s per
     # CC build at sf0.1 across the component consumers).
-    labels = (
+    labels = materialize(
         edges.select(
             F.col("dst").alias("id"),
             F.least("src", "dst").alias("cluster_id"),
         )
         .groupBy("id")
-        .agg(F.min("cluster_id").alias("cluster_id"))
-        .localCheckpoint(eager=True)
+        .agg(F.min("cluster_id").alias("cluster_id")),
+        eager=True,
+        scale="corpus",
     )
-    # the checkpointed frame whose blocks the NEXT round supersedes;
+    # the materialized frame whose blocks the NEXT round supersedes;
     # labels itself becomes a projection over the round's aggregate, so
     # track the bare checkpoint, not the derived frame
     prev_ckpt = labels
@@ -483,7 +489,7 @@ def connected_components(
             pushed.withColumn("_old", F.lit(False))
         )
         changes = Observation()
-        agg = (
+        agg = materialize(
             tagged.groupBy("id")
             .agg(
                 F.min("cluster_id").alias("cluster_id"),
@@ -492,8 +498,9 @@ def connected_components(
                     < F.min(F.when(F.col("_old"), F.col("cluster_id")))
                 ).alias("_chg"),
             )
-            .observe(changes, F.count_if("_chg").alias("n"))
-            .localCheckpoint(eager=True)
+            .observe(changes, F.count_if("_chg").alias("n")),
+            eager=True,
+            scale="corpus",
         )
         # agg is fully materialized (eager), so the previous round's
         # blocks are dead — release them before they pile up
@@ -673,8 +680,6 @@ def ngram_jaccard_pairs(
     """Verified near-dup pairs: MinHash-LSH candidates refined by exact
     shingle Jaccard >= threshold. The expensive exact measure runs only
     on the candidate set."""
-    from kpipe_spark.util import ensure_parallelism, materialize
-
     cands = minhash_candidates(df, text_col, id_col, num_hashes, bands, shingle_k)
     # spread the interpreted-HOF shingle build (1-split scans run it
     # single-task) and materialize once — both join sides consume it,

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kpipe_spark.util import materialize
+
 #: hashed-bigram feature buckets shared with the DSIR scorer (d68):
 #: fixed and small, so the monitor's whole state is <= |sources| x
 #: this many rows regardless of corpus size.
@@ -68,7 +70,7 @@ def source_kl_bits(cnt: DataFrame, source_col: str = "source") -> DataFrame:
     # broadcasts + the score join); materialize it once so a
     # corpus-derived input doesn't recompute its explode per branch.
     # Bounded by contract: <= |sources| x n_buckets rows.
-    cnt = cnt.localCheckpoint(eager=False)
+    cnt = materialize(cnt)
     stot = cnt.groupBy(source_col).agg(F.sum("c").alias("ns"))
     corp = cnt.groupBy("bucket").agg(F.sum("c").alias("cq"))
     tot = corp.agg(F.sum("cq").alias("n"))

@@ -447,13 +447,15 @@ def lloyd_centroids_int(
     Returns (centroid_id int, _ce array<double>) with _ce = C/scale —
     exact in doubles (|C| < 2^53), ready for ``ivf_topk``.
     """
+    from kpipe_spark.util import free_local_checkpoint, materialize
+
     spark = vectors.sparkSession
     q = F.transform(
         F.col(vec_col),
         lambda x: F.floor(x * F.lit(float(scale))).cast("long"),
     )
-    qv = vectors.select(F.col(id_col), q.alias("_q")).localCheckpoint(
-        eager=True
+    qv = materialize(
+        vectors.select(F.col(id_col), q.alias("_q")), eager=True, scale="corpus"
     )
     cents = [
         list(r["_q"]) for r in qv.orderBy(id_col).limit(k).collect()
@@ -517,8 +519,6 @@ def lloyd_centroids_int(
     # the trained centroids live on the driver; the quantized-vector
     # checkpoint (corpus-sized) is dead — release it (wave-10
     # lifecycle) instead of leaking one per training call
-    from kpipe_spark.util import free_local_checkpoint
-
     free_local_checkpoint(qv)
     return spark.createDataFrame(
         [(i, [c / float(scale) for c in cc]) for i, cc in enumerate(cents)],

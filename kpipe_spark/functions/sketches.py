@@ -339,7 +339,7 @@ class BloomGate(StoredArtifact):
         genuinely new bits are appended (anti-join), so the worst case
         is duplicate rows from two racing appends, which ``probe``
         neutralizes with distinct(). Appends go through an eager
-        localCheckpoint to sever lineage from the table being written
+        ``util.materialize`` to sever lineage from the table being written
         (Spark refuses a plan that reads the table it inserts into).
         """
         return self.update_keys(
@@ -355,17 +355,18 @@ class BloomGate(StoredArtifact):
         """Key-level form of ``update_batch`` (same replay contract)."""
         if batch_id <= self.last_batch_id():
             return False
-        new_bits = (
-            self._bits_of_keys(keys, key_col)
-            .join(self.bits_df.select("bit"), "bit", "anti")
-            .localCheckpoint(eager=True)
+        from kpipe_spark.util import free_local_checkpoint, materialize
+
+        new_bits = materialize(
+            self._bits_of_keys(keys, key_col).join(
+                self.bits_df.select("bit"), "bit", "anti"
+            ),
+            eager=True,
         )
         new_bits.write.mode("append").saveAsTable(self.table)
         # the appended rows now live in the table; the per-batch
         # checkpoint would otherwise outlive the call (one leaked RDD
         # per micro-batch — wave-10 lifecycle, OPTIMIZATION_r13)
-        from kpipe_spark.util import free_local_checkpoint
-
         free_local_checkpoint(new_bits)
         # under foreachBatch, `keys` belongs to a CLONED session and
         # the append refreshes only THAT session's relation cache; a
@@ -870,14 +871,12 @@ class HllSketch(StoredArtifact):
         rows, and MAX over duplicates is the same MAX."""
         if batch_id <= self.last_batch_id():
             return False
-        regs = self._registers_of(docs, text_col).localCheckpoint(
-            eager=True
-        )
+        from kpipe_spark.util import free_local_checkpoint, materialize
+
+        regs = materialize(self._registers_of(docs, text_col), eager=True)
         regs.write.mode("append").saveAsTable(self.table)
         # per-batch checkpoint superseded by the append (wave-10
         # lifecycle)
-        from kpipe_spark.util import free_local_checkpoint
-
         free_local_checkpoint(regs)
         # cloned-session append (see BloomGate.update_keys): refresh the
         # artifact session's relation cache so registers_df can't serve

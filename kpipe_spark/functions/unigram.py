@@ -292,7 +292,9 @@ def train_unigram(
     class — because the Viterbi expression needs the current scores
     as a literal map. Everything corpus-scaled stays distributed.
     """
-    wf = word_freq(docs, text_col).localCheckpoint(eager=True)
+    from kpipe_spark.util import materialize
+
+    wf = materialize(word_freq(docs, text_col), eager=True)
     # bounded collect #1: the seed vocabulary (≤ alphabet + SEED_MULTI)
     seed_rows = select_seed(seed_candidates(wf)).collect()
     if not seed_rows:

@@ -164,12 +164,13 @@ def d68_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle joins only; the bigram and unigram model tables are "
     "vocabulary-sized so they are NOT broadcast-hinted (the d48/d56 "
     "honesty rule) — AQE may still choose broadcast at benchmark "
-    "scale. The per-doc count and unigram tables each feed multiple "
-    "branches and are materialized once (localCheckpoint; swap for a "
-    "stored model table in production) — the optimizer does NOT "
-    "reuse an aggregation exchange across a model branch and a "
-    "scoring join, so without materialization the corpus explode "
-    "re-runs per consumer.",
+    "scale. The per-doc count table feeds multiple branches and is "
+    "materialized once (util.materialize, corpus scale; a stored "
+    "model table in production) — the optimizer does NOT reuse an "
+    "aggregation exchange across a model branch and a scoring join, "
+    "so without materialization the corpus explode re-runs per "
+    "consumer. The vocabulary-sized unigram table is re-derived per "
+    "consumer: materializing it measured no faster.",
     tags=("llm", "quality", "tokenize"),
 )
 def d69_bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,9 +202,6 @@ def d69_bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.select(F.explode("t").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cu"))
-        # vocab-sized, consumed THREE times (w1 join, w2 join, total);
-        # without this each consumer re-runs the token explode
-        .localCheckpoint(eager=False)
     )
     ntot = uni.agg(F.sum("cu").alias("n"))
     p = 0.7 * F.col("cbg") / F.col("cu1") + 0.3 * F.col("cu2") / F.col("n")
@@ -596,9 +594,6 @@ def d73_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(T.tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        # vocab-sized; feeds both the totals row and the top-1000 —
-        # materialize once instead of exploding the corpus twice
-        .localCheckpoint(eager=False)
     )
     vocab = freq.agg(
         F.count(F.lit(1)).cast("long").alias("n_vocab"),
@@ -821,9 +816,6 @@ def d75_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(T.tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        # vocab-sized; feeds the corpus total and the top-K ranking —
-        # materialize once instead of exploding the corpus twice
-        .localCheckpoint(eager=False)
     )
     tot = freq.agg(F.sum("c").alias("t"))
     top = freq.orderBy(F.col("c").desc(), "w").limit(max(_COVERAGE_KS))
@@ -877,15 +869,10 @@ def d76_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.filter(content).select(
         "doc_id", F.explode(T.tokens("text")).alias("w")
     )
-    # the vocab derivation would otherwise re-run tok's corpus explode
-    # under the broadcast branch; vocab-sized, materialize once
-    freq = (
+    vocab16 = (
         tok.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    vocab16 = (
-        freq.orderBy(F.col("c").desc(), "w")
+        .orderBy(F.col("c").desc(), "w")
         .limit(_OOV_VOCAB_K)
         .select("w", F.lit(1).alias("_in"))
     )

@@ -55,7 +55,7 @@ from kpipe_spark.functions.ann_index import (
     subvectors,
 )
 from kpipe_spark.queries import register
-from kpipe_spark.util import ensure_parallelism, ieee_round
+from kpipe_spark.util import ensure_parallelism, ieee_round, materialize
 
 # 64-dim embeddings → m=16 subspaces × 4 dims, k=64 codes per
 # subspace (the first-64 vectors' subvectors — deterministic training,
@@ -795,7 +795,9 @@ def d94_adaptive_nprobe_recall(
         _TOPK,
         "_rn",
     ).select("query_id", "neighbor_id")
-    cand = (
+    # candidate set feeds BOTH the count and the top-k ranking;
+    # panel-bounded (|panel| × probed cells' vectors)
+    cand = materialize(
         assigned.join(
             F.broadcast(
                 probes.select("query_id", "_qe", "_qn", "centroid_id")
@@ -810,9 +812,6 @@ def d94_adaptive_nprobe_recall(
                 F.col("_qe"), F.col("_e"), F.col("_qn"), F.col("_n")
             ).alias("_sim"),
         )
-        # candidate set feeds BOTH the count and the top-k ranking;
-        # panel-bounded (|panel| × probed cells' vectors)
-        .localCheckpoint(eager=False)
     )
     ncand = cand.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_candidates")

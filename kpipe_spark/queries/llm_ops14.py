@@ -457,11 +457,7 @@ def d95_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bigram-type-sized; feeds the score join plus THREE model
     # aggregates (left-context, continuation, type total)
-    bigf = (
-        cnt.groupBy("w1", "w2")
-        .agg(F.sum("c").alias("cbg"))
-        .localCheckpoint(eager=False)
-    )
+    bigf = materialize(cnt.groupBy("w1", "w2").agg(F.sum("c").alias("cbg")))
     left_ctx = bigf.groupBy("w1").agg(
         F.sum("cbg").alias("cw"), F.count(F.lit(1)).alias("n1")
     )

@@ -348,10 +348,6 @@ def d98_hll_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(content)
         .select(F.explode(T.tokens("text")).alias("t"))
         .distinct()
-        # two consumers (registers + exact count); materialize the
-        # vocab-shaped distinct once instead of re-running the corpus
-        # explode per branch (the round-4 broadcast-branch lesson)
-        .localCheckpoint(eager=False)
     )
     m = _HLL_M
     hashed = tok.select(

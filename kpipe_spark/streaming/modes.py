@@ -4,7 +4,9 @@ kpipe dispatches records three ways (SequentialDispatcher.java,
 ParallelDispatcher.java, KeyOrderedDispatcher.java:66-474); in Spark the
 mode is a transformation applied to each micro-batch before the sink:
 
-- PARALLEL: identity — partition-parallel execution, no ordering.
+- PARALLEL: partition-parallel execution, no ordering; an under-split
+  batch (one file per trigger, one Kafka partition) is respread to the
+  session's parallelism first.
 - SEQUENTIAL: one partition, sorted by (topic, partition, offset). This
   is the honest strict-mode mapping: a true global order cannot be
   parallel in either system (kpipe processes one record at a time here
@@ -28,6 +30,8 @@ from enum import Enum
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kpipe_spark.util import ensure_parallelism
+
 
 class ProcessingMode(Enum):
     PARALLEL = "parallel"
@@ -36,22 +40,14 @@ class ProcessingMode(Enum):
 
 
 def shape_batch(
-    batch: DataFrame,
-    mode: ProcessingMode,
-    key_col: str = "key",
-    num_partitions: int | None = None,
+    batch: DataFrame, mode: ProcessingMode, key_col: str = "key"
 ) -> DataFrame:
     if mode is ProcessingMode.PARALLEL:
-        return batch
+        return ensure_parallelism(batch)
     cols = batch.columns
     order = [c for c in ("topic", "partition", "offset") if c in cols]
     if mode is ProcessingMode.SEQUENTIAL:
         return batch.coalesce(1).sortWithinPartitions(*order) if order else batch.coalesce(1)
-    # KEY_ORDERED
-    parted = (
-        batch.repartition(num_partitions, F.col(key_col))
-        if num_partitions
-        else batch.repartition(F.col(key_col))
-    )
+    # KEY_ORDERED: the hash exchange already spreads the batch
     sort_cols = [key_col] + [c for c in ("offset",) if c in cols]
-    return parted.sortWithinPartitions(*sort_cols)
+    return batch.repartition(F.col(key_col)).sortWithinPartitions(*sort_cols)

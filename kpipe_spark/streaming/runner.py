@@ -46,11 +46,7 @@ from kpipe_spark.pipeline.result import (
 from kpipe_spark.pipeline.sinks import dlq_frame
 from kpipe_spark.streaming.backpressure import BackpressureGovernor, kafka_lag
 from kpipe_spark.streaming.modes import ProcessingMode, shape_batch
-from kpipe_spark.util import (
-    ensure_parallelism,
-    free_local_checkpoint,
-    pin_local_checkpoint,
-)
+from kpipe_spark.util import free_local_checkpoint, pin_local_checkpoint
 
 log = logging.getLogger(__name__)
 
@@ -252,11 +248,7 @@ class StreamRunner:
         if self.circuit_breaker:
             self.circuit_breaker.gate()
 
-        # an under-split source (one file per trigger, one Kafka
-        # partition) would otherwise run the whole pipeline single-task
-        shaped = shape_batch(
-            ensure_parallelism(batch), self.mode, key_col=self.key_col
-        )
+        shaped = shape_batch(batch, self.mode, key_col=self.key_col)
         applied = self.pipeline.apply(shaped)
         try:
             self._deliver(applied, batch_id)

@@ -55,12 +55,23 @@ def set_materializer(fn) -> object:
 
 
 def materialize(df: DataFrame, *, eager: bool = False, scale: str = "bounded") -> DataFrame:
-    """Materialization point for branch-shared intermediates. Defaults
-    to ``localCheckpoint`` (cut lineage + cache in executor block
-    storage); deployments swap the strategy via ``set_materializer``
-    (e.g. ``table_materializer`` writes corpus-scaled frames to a
-    parquet table — the stored feature table production DSIR/novelty
-    pipelines keep anyway)."""
+    """The one materialization point under kpipe_spark/ (StreamRunner's
+    pinned per-batch checkpoint aside): branch-shared intermediates,
+    iterative-loop state and frozen batch frames all come through here.
+    Defaults to ``localCheckpoint`` (cut lineage + cache in executor
+    block storage); deployments swap the strategy via
+    ``set_materializer`` (e.g. ``table_materializer`` writes corpus-
+    scaled frames to a parquet table — the stored feature table
+    production DSIR/novelty pipelines keep anyway).
+
+    ``scale`` follows the frame's row count, not its consumer:
+
+    - "corpus": rows grow with the dataset — per-document frames and
+      the dup graph (``lloyd_centroids_int``'s quantized vectors,
+      ``connected_components``' edges and labels);
+    - "bounded": rows are capped by a vocabulary, a bucket count or
+      one batch (``train_bpe``'s vocab table, ``source_kl_bits``'
+      (source, bucket) counts, ``CorpusIndex.admit``'s batch bands)."""
     if _materializer is not None:
         return _materializer(df, eager=eager, scale=scale)
     return df.localCheckpoint(eager=eager)
@@ -220,7 +231,7 @@ def _parse_bytes(v: str) -> int:
     return int(s)
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition iff the input has fewer partitions than the session's
     parallelism.
 
@@ -241,12 +252,12 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     are already materialized.
     """
     # a pre-foreachBatch streaming frame has no split count to inspect
-    # (df.rdd would raise); its micro-batches are repartitioned by the
-    # runner (process_batch) instead
+    # (df.rdd would raise); its micro-batches are respread per mode by
+    # streaming.modes.shape_batch instead
     if df.isStreaming:
         return df
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
 
     try:
         files = df.inputFiles()

@@ -214,6 +214,16 @@ def test_compact_headline_line_trims_before_overflowing():
         assert k in parsed, k
     # the worst case still fits the REAL window once droppables go
     assert len(bench._compact_headline_line(doc)) <= 1900
+    # the per-row hot map is the big droppable: a line that fits once it
+    # alone goes keeps the one-number streaming reading
+    no_hot = json.loads(full)
+    no_hot.pop("ambient_hot")
+    line = bench._compact_headline_line(
+        doc, limit=len(json.dumps(no_hot, separators=(",", ":")))
+    )
+    parsed = json.loads(line)
+    assert "ambient_hot" not in parsed
+    assert "streaming_ambient_max" in parsed
 
 
 def test_timed_capture_reads_task_metrics(spark):

@@ -301,6 +301,55 @@ def test_pq_kernels_have_one_home():
     assert {"cents", "cb", "adc"} <= seen, seen
 
 
+def test_checkpoints_go_through_materialize():
+    """One materialization path: under kpipe_spark/ a checkpoint is taken
+    only by util.py (``materialize`` and its strategies) and by
+    StreamRunner's pinned per-batch checkpoint, so a strategy installed
+    with ``set_materializer`` reaches every other intermediate."""
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "kpipe_spark")
+    allowed = {"util.py", os.path.join("streaming", "runner.py")}
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for fn in files:
+            path = os.path.join(dirpath, fn)
+            if not fn.endswith(".py") or os.path.relpath(path, root) in allowed:
+                continue
+            with open(path) as fh:
+                for n, line in enumerate(fh, 1):
+                    if ".localCheckpoint(" in line:
+                        offenders.append(f"{os.path.relpath(path, root)}:{n}")
+    assert not offenders, (
+        "direct checkpoint outside util.materialize:\n" + "\n".join(offenders)
+    )
+
+
+def test_shape_batch_exchanges_per_mode(spark, tmp_path):
+    """A micro-batch is respread only where its mode needs it: PARALLEL
+    round-robins an under-split batch to the session's parallelism,
+    KEY_ORDERED's key exchange is the only shuffle, and SEQUENTIAL
+    (one partition) has none."""
+    from kpipe_spark.streaming.modes import ProcessingMode, shape_batch
+
+    path = str(tmp_path / "batch")
+    spark.range(100).selectExpr(
+        "cast(id % 7 as string) as key", "id as offset"
+    ).coalesce(1).write.parquet(path)
+    batch = spark.read.parquet(path)
+
+    def plan(mode: ProcessingMode) -> str:
+        shaped = shape_batch(batch, mode)
+        return shaped._jdf.queryExecution().executedPlan().toString()
+
+    parallel = plan(ProcessingMode.PARALLEL)
+    assert "RoundRobinPartitioning" in parallel, parallel
+    keyed = plan(ProcessingMode.KEY_ORDERED)
+    assert len(re.findall(r"Exchange ", keyed)) == 1, keyed
+    assert re.search(r"Exchange hashpartitioning\(key#", keyed), keyed
+    assert "Exchange" not in plan(ProcessingMode.SEQUENTIAL)
+
+
 def test_component_join_is_size_gated_both_regimes(spark, tmp_path):
     """round-10 verdict's one perf-weak finding: the component-consumer
     join family must not broadcast unconditionally — at realistic web

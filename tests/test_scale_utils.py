@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 import re
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -509,6 +510,209 @@ def test_table_materializer_scoped_lifecycle(spark):
     ], "materializer leaked tables past its scope"
     assert mat.tables == []
     mat.drop_all()  # idempotent
+
+
+_SPAM = "identical boilerplate text repeated across the corpus every day"
+_FOX = "the quick brown fox jumps over the lazy dog at dawn today"
+
+
+def _route_corpus(spark):
+    return spark.createDataFrame(
+        [
+            (100, _SPAM),
+            (101, _FOX),
+            (102, "completely unrelated prose about stored artifacts"),
+            (103, _SPAM),
+            (104, _FOX + " again"),
+        ],
+        "doc_id bigint, text string",
+    )
+
+
+def _route_batch(spark):
+    return spark.createDataFrame(
+        [(105, _SPAM), (106, "novel words about nothing in particular")],
+        "doc_id bigint, text string",
+    )
+
+
+def _route_bands(spark, made):
+    from kpipe_spark.functions.corpus_index import CorpusIndex
+
+    idx = CorpusIndex.build(
+        spark, _route_corpus(spark), f"route_bands_{uuid.uuid4().hex[:8]}",
+        num_buckets=4,
+    )
+    made.append(idx)
+    return idx
+
+
+def _bpe(spark, made):
+    from kpipe_spark.functions.bpe import train_bpe
+
+    return lambda: train_bpe(_route_corpus(spark), num_merges=2)
+
+
+def _unigram(spark, made):
+    from kpipe_spark.functions.unigram import train_unigram
+
+    return lambda: train_unigram(spark, _route_corpus(spark))
+
+
+def _components(spark, made):
+    from kpipe_spark.functions.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a int, id_b int")
+    return lambda: connected_components(pairs)
+
+
+def _partners(spark, made):
+    from kpipe_spark.functions.dedup import incremental_minhash_partners
+
+    bands = _route_bands(spark, made)
+    return lambda: incremental_minhash_partners(_route_batch(spark), bands.bands_df)
+
+
+def _admit(spark, made):
+    bands = _route_bands(spark, made)
+    return lambda: bands.admit(_route_batch(spark))
+
+
+def _append_if_missing(spark, made):
+    bands = _route_bands(spark, made)
+    return lambda: bands.append_if_missing(_route_batch(spark))
+
+
+def _refresh_incremental(spark, made):
+    from kpipe_spark.functions.cluster_index import ClusterIndex
+
+    idx = ClusterIndex.build(
+        spark, _route_corpus(spark), f"route_clusters_{uuid.uuid4().hex[:8]}"
+    )
+    made.append(idx)
+    bands = _route_bands(spark, made)
+    return lambda: idx.refresh_incremental(_route_batch(spark), bands)
+
+
+def _bloom(spark, made):
+    from kpipe_spark.functions.sketches import BloomGate
+
+    gate = BloomGate.build(
+        spark, _route_corpus(spark), f"route_bloom_{uuid.uuid4().hex[:8]}"
+    )
+    made.append(gate)
+    keys = spark.createDataFrame([("k1",), ("k2",)], "key string")
+    return lambda: gate.update_keys(keys, batch_id=0)
+
+
+def _hll(spark, made):
+    from kpipe_spark.functions.sketches import HllSketch
+
+    sk = HllSketch.build(
+        spark, _route_corpus(spark), f"route_hll_{uuid.uuid4().hex[:8]}"
+    )
+    made.append(sk)
+    return lambda: sk.update_batch(_route_batch(spark), batch_id=0)
+
+
+def _lloyd(spark, made):
+    from kpipe_spark.functions.similarity import lloyd_centroids_int
+
+    vectors = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5)]) for i in range(12)],
+        "vec_id bigint, _e array<double>",
+    )
+    return lambda: lloyd_centroids_int(vectors, k=2, iters=1)
+
+
+def _source_kl(spark, made):
+    from kpipe_spark.functions.monitoring import bigram_bucket_counts, source_kl_bits
+
+    docs = _route_corpus(spark).withColumn(
+        "source", F.concat(F.lit("s"), F.col("doc_id") % 2)
+    )
+    cnt = bigram_bucket_counts(docs, n_buckets=16)
+    return lambda: source_kl_bits(cnt)
+
+
+@pytest.mark.parametrize(
+    "entry, scales",
+    [
+        pytest.param(_bpe, {"bounded"}, id="train_bpe"),
+        pytest.param(_unigram, {"bounded"}, id="train_unigram"),
+        pytest.param(_components, {"corpus"}, id="connected_components"),
+        pytest.param(_partners, {"bounded"}, id="incremental_minhash_partners"),
+        pytest.param(_admit, {"bounded"}, id="CorpusIndex.admit"),
+        pytest.param(_append_if_missing, {"bounded"}, id="CorpusIndex.append_if_missing"),
+        pytest.param(
+            _refresh_incremental, {"bounded", "corpus"},
+            id="ClusterIndex.refresh_incremental",
+        ),
+        pytest.param(_bloom, {"bounded"}, id="BloomGate.update_keys"),
+        pytest.param(_hll, {"bounded"}, id="HllSketch.update_batch"),
+        pytest.param(_lloyd, {"corpus"}, id="lloyd_centroids_int"),
+        pytest.param(_source_kl, {"bounded"}, id="source_kl_bits"),
+    ],
+)
+def test_entry_points_materialize_through_the_strategy(spark, entry, scales):
+    """Every operator that materializes an intermediate does it through
+    util.materialize, tagged with its scale, so an installed strategy
+    (table_materializer, a reliable checkpoint) reaches it. The
+    fixtures are built under the default strategy; only the entry
+    point's own calls are recorded."""
+    from kpipe_spark.util import set_materializer
+
+    made: list = []
+    seen: list[str] = []
+
+    def recording(df, *, eager, scale):
+        seen.append(scale)
+        return df.localCheckpoint(eager=eager)
+
+    try:
+        call = entry(spark, made)
+        prev = set_materializer(recording)
+        try:
+            call()
+        finally:
+            set_materializer(prev)
+        assert scales <= set(seen), seen
+    finally:
+        for artifact in made:
+            artifact.drop()
+
+
+def test_connected_components_rounds_through_tables(spark):
+    """connected_components materializes at corpus scale, so under
+    table_materializer every round is a table write. The round's
+    observe() change count still arrives through that write: the loop
+    stops at the same round as under the default strategy (one table
+    per materialization, as many as the default's calls), and the
+    labels are the same."""
+    from kpipe_spark.functions.dedup import connected_components
+    from kpipe_spark.util import set_materializer, table_materializer
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)] + [(10, 11), (20, 20)],
+        "id_a int, id_b int",
+    )
+    calls: list[str] = []
+
+    def counting(df, *, eager, scale):
+        calls.append(scale)
+        return df.localCheckpoint(eager=eager)
+
+    prev = set_materializer(counting)
+    try:
+        default = sorted(map(tuple, connected_components(pairs).collect()))
+    finally:
+        set_materializer(prev)
+    with table_materializer() as mat:
+        via_tables = sorted(map(tuple, connected_components(pairs).collect()))
+        assert len(mat.tables) == len(calls), (mat.tables, calls)
+    # edges + seed labels + at least two rounds (the last one unchanged)
+    assert len(calls) >= 4 and set(calls) == {"corpus"}
+    assert via_tables == default
 
 
 def test_reclaim_refuses_location_owned_by_other_table(spark, tmp_path):
