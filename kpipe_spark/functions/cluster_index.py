@@ -388,7 +388,7 @@ class ClusterIndex(StoredArtifact):
             .select("qa", "qb")
             .filter(F.col("qa") != F.col("qb"))
         )
-        sub = connected_components(edges, "qa", "qb")
+        sub = connected_components(edges, "qa", "qb", scale="bounded")
         subm = materialize(
             sub.select(
                 F.col("id").alias("_qnode"), F.col("cluster_id").alias("_newlab")

@@ -392,6 +392,7 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 20,
+    scale: str = "corpus",
 ) -> DataFrame:
     """Connected components over an undirected pair list by iterative
     min-label propagation -> (id, cluster_id = min id in component).
@@ -405,10 +406,14 @@ def connected_components(
     page form near-cliques). Per-round cost is one shuffle join
     edges><labels plus a map-side-combined min — proportional to the
     DUP-GRAPH size, not the corpus, since only candidate pairs carry
-    edges. Each round is materialized (``util.materialize``,
-    scale="corpus": the dup graph grows with the corpus), which
-    truncates the iterative lineage so the plan doesn't grow per round;
-    a cluster strategy writes the rounds to durable tables. The
+    edges. Each round is materialized (``util.materialize``), which
+    truncates the iterative lineage so the plan doesn't grow per round.
+    ``scale`` tags the edge list, the seed labels and every round: the
+    default "corpus" fits a graph that grows with the corpus (d24's
+    dup graph), and a cluster strategy writes each of those frames to
+    a durable table, at least four per call; a caller whose pairs come
+    from one batch (``ClusterIndex.refresh_incremental``) passes
+    "bounded", so a per-batch fold writes none. The
     changed-row count rides each round's eager materialization through
     observe(), so a round is one action, with no separate convergence
     job.
@@ -445,7 +450,7 @@ def connected_components(
             F.col("_e.src").alias("src"), F.col("_e.dst").alias("dst")
         ),
         eager=True,
-        scale="corpus",
+        scale=scale,
     )
     # Round 1 folded into initialization: from identity labels, one
     # propagation round assigns each node min(self, neighbors) — which
@@ -465,7 +470,7 @@ def connected_components(
         .groupBy("id")
         .agg(F.min("cluster_id").alias("cluster_id")),
         eager=True,
-        scale="corpus",
+        scale=scale,
     )
     # the materialized frame whose blocks the NEXT round supersedes;
     # labels itself becomes a projection over the round's aggregate, so
@@ -500,7 +505,7 @@ def connected_components(
             )
             .observe(changes, F.count_if("_chg").alias("n")),
             eager=True,
-            scale="corpus",
+            scale=scale,
         )
         # agg is fully materialized (eager), so the previous round's
         # blocks are dead — release them before they pile up

@@ -164,13 +164,12 @@ def d68_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle joins only; the bigram and unigram model tables are "
     "vocabulary-sized so they are NOT broadcast-hinted (the d48/d56 "
     "honesty rule) — AQE may still choose broadcast at benchmark "
-    "scale. The per-doc count table feeds multiple branches and is "
-    "materialized once (util.materialize, corpus scale; a stored "
-    "model table in production) — the optimizer does NOT reuse an "
-    "aggregation exchange across a model branch and a scoring join, "
-    "so without materialization the corpus explode re-runs per "
-    "consumer. The vocabulary-sized unigram table is re-derived per "
-    "consumer: materializing it measured no faster.",
+    "scale. The per-doc count and unigram tables each feed multiple "
+    "branches and are materialized once (util.materialize; swap for a "
+    "stored model table in production) — the optimizer does NOT "
+    "reuse an aggregation exchange across a model branch and a "
+    "scoring join, so without materialization the corpus explode "
+    "re-runs per consumer.",
     tags=("llm", "quality", "tokenize"),
 )
 def d69_bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,7 +197,9 @@ def d69_bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         scale="corpus",
     )
     bigf = cnt.groupBy("w1", "w2").agg(F.sum("c").alias("cbg"))
-    uni = (
+    # vocab-sized, consumed THREE times (w1 join, w2 join, total);
+    # without this each consumer re-runs the token explode
+    uni = materialize(
         toks.select(F.explode("t").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cu"))
@@ -589,7 +590,9 @@ _ZIPF_TOP = 1000
 def d73_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir).documents
     content = F.col("text").isNotNull() & F.col("text").rlike(r"\S")
-    freq = (
+    # vocab-sized; feeds both the totals row and the top-1000 —
+    # materialize once instead of exploding the corpus twice
+    freq = materialize(
         docs.filter(content)
         .select(F.explode(T.tokens("text")).alias("w"))
         .groupBy("w")
@@ -811,7 +814,9 @@ _OOV_VOCAB_K = 16
 def d75_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir).documents
     content = F.col("text").isNotNull() & F.col("text").rlike(r"\S")
-    freq = (
+    # vocab-sized; feeds the corpus total and the top-K ranking —
+    # materialize once instead of exploding the corpus twice
+    freq = materialize(
         docs.filter(content)
         .select(F.explode(T.tokens("text")).alias("w"))
         .groupBy("w")

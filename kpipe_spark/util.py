@@ -68,10 +68,13 @@ def materialize(df: DataFrame, *, eager: bool = False, scale: str = "bounded") -
 
     - "corpus": rows grow with the dataset — per-document frames and
       the dup graph (``lloyd_centroids_int``'s quantized vectors,
-      ``connected_components``' edges and labels);
+      ``connected_components``' edges and labels over d24's corpus
+      pairs);
     - "bounded": rows are capped by a vocabulary, a bucket count or
       one batch (``train_bpe``'s vocab table, ``source_kl_bits``'
-      (source, bucket) counts, ``CorpusIndex.admit``'s batch bands)."""
+      (source, bucket) counts, ``CorpusIndex.admit``'s batch bands,
+      the one-batch graph ``ClusterIndex.refresh_incremental`` hands
+      ``connected_components``)."""
     if _materializer is not None:
         return _materializer(df, eager=eager, scale=scale)
     return df.localCheckpoint(eager=eager)

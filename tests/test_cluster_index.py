@@ -369,17 +369,20 @@ def test_legacy_migration_uses_injectable_materializer(spark, corpus):
     idx = ClusterIndex(spark, ctable)
     idx._replace_table(dup_components(corpus))  # the legacy shape
     bands = CorpusIndex.build(spark, corpus, btable, num_buckets=4)
-    seen: list[str] = []
+    seen: list[tuple[str, tuple[str, ...]]] = []
 
     def recording(df, *, eager, scale):
-        seen.append(scale)
+        seen.append((scale, tuple(df.columns)))
         return df.localCheckpoint(eager=eager)
 
     prev = set_materializer(recording)
     try:
         idx.refresh_incremental(_df(spark, [(105, SPAM)]), bands)
-        assert "corpus" in seen, (
-            "legacy migration bypassed the injectable materializer"
+        # the old rows themselves, (id, cluster_id): no other frame on
+        # this path has that shape (the fold's frames carry band, edge
+        # and id/src/dst columns)
+        assert ("corpus", (idx.id_col, "cluster_id")) in seen, (
+            "legacy migration bypassed the injectable materializer", seen
         )
     finally:
         set_materializer(prev)

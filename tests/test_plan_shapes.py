@@ -342,8 +342,18 @@ def test_shape_batch_exchanges_per_mode(spark, tmp_path):
         shaped = shape_batch(batch, mode)
         return shaped._jdf.queryExecution().executedPlan().toString()
 
-    parallel = plan(ProcessingMode.PARALLEL)
-    assert "RoundRobinPartitioning" in parallel, parallel
+    # minPartitionNum=1 packs the one small file into ONE estimated
+    # split whatever the core count (by default Spark aims for
+    # defaultParallelism splits, so the estimate would track the host)
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        parallel = plan(ProcessingMode.PARALLEL)
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    if spark.sparkContext.defaultParallelism > 1:
+        assert "RoundRobinPartitioning" in parallel, parallel
+    else:  # one core: nothing to respread to
+        assert "Exchange" not in parallel, parallel
     keyed = plan(ProcessingMode.KEY_ORDERED)
     assert len(re.findall(r"Exchange ", keyed)) == 1, keyed
     assert re.search(r"Exchange hashpartitioning\(key#", keyed), keyed

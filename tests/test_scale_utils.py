@@ -645,7 +645,7 @@ def _source_kl(spark, made):
         pytest.param(_admit, {"bounded"}, id="CorpusIndex.admit"),
         pytest.param(_append_if_missing, {"bounded"}, id="CorpusIndex.append_if_missing"),
         pytest.param(
-            _refresh_incremental, {"bounded", "corpus"},
+            _refresh_incremental, {"bounded"},
             id="ClusterIndex.refresh_incremental",
         ),
         pytest.param(_bloom, {"bounded"}, id="BloomGate.update_keys"),
@@ -676,7 +676,7 @@ def test_entry_points_materialize_through_the_strategy(spark, entry, scales):
             call()
         finally:
             set_materializer(prev)
-        assert scales <= set(seen), seen
+        assert set(seen) == scales, seen
     finally:
         for artifact in made:
             artifact.drop()
@@ -713,6 +713,14 @@ def test_connected_components_rounds_through_tables(spark):
     # edges + seed labels + at least two rounds (the last one unchanged)
     assert len(calls) >= 4 and set(calls) == {"corpus"}
     assert via_tables == default
+    # a one-batch graph (refresh_incremental's) is tagged bounded and
+    # writes no table
+    with table_materializer() as mat:
+        bounded = sorted(
+            map(tuple, connected_components(pairs, scale="bounded").collect())
+        )
+        assert mat.tables == []
+    assert bounded == default
 
 
 def test_reclaim_refuses_location_owned_by_other_table(spark, tmp_path):
