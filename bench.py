@@ -40,6 +40,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from kpipe_spark.queries import all_queries  # noqa: E402
 from kpipe_spark.session import get_spark  # noqa: E402
+from kpipe_spark.util import free_local_checkpoint  # noqa: E402
 from perfbench.layers import StatusStore, environment, stage_totals  # noqa: E402
 
 HEADLINE = [
@@ -386,33 +387,57 @@ def _ambient_during(fn):
     return out, round(ext, 2)
 
 
+def _compiles(spark) -> int:
+    """Classes the JVM's code generator has compiled since the JVM
+    started: the count of Spark's codegen compilation-time histogram,
+    read over py4j (it starts no Spark job). Under local[N] the tasks
+    run in the driver JVM, so their compiles count too."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _noop_write(df):
+    """Force every output column of ``df`` through the noop sink.
+    Returns ``df``, whose local checkpoints the caller frees with
+    ``free_local_checkpoint`` once the run is over."""
+    df.write.format("noop").mode("overwrite").save()
+    return df
+
+
 def _timed_capture(spark, build, runs: int = 3) -> dict:
     """One row: best-of-``runs`` wall seconds of ``build()`` plus a
     noop write (which forces every output column), the external cores
-    over the whole capture window, and the best run's task metrics from
+    over the whole capture window, the classes the JVM compiled during
+    the best run (``_compiles``), and the best run's task metrics from
     the JVM status store — executor CPU seconds summed over its
     completed stages, their task count, the share of those stages
     that ran as a single task, and the Python-worker seconds (task run
     time minus JVM CPU on mapInPandas and pandas-UDF stages). Each run
     tags its jobs with its own job group, so eager jobs inside
-    ``build()`` count toward the row."""
+    ``build()`` count toward the row. After each run the local
+    checkpoints its frame reads are freed, so no later run or row is
+    timed under this run's blocks (catalog tables are parquet scans,
+    and pinned checkpoints are skipped)."""
     sc = spark.sparkContext
 
-    def best_run() -> tuple[float, str]:
-        best, best_group = float("inf"), ""
+    def best_run() -> tuple[float, str, int]:
+        best, best_group, best_compiles = float("inf"), "", 0
         for _ in range(runs):
             group = f"bench-capture-{uuid.uuid4().hex}"
             sc.setJobGroup(group, group)
+            c0 = _compiles(spark)
             t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
+            df = _noop_write(build())
             sec = time.perf_counter() - t0
+            compiles = _compiles(spark) - c0
+            free_local_checkpoint(df)
             if sec < best:
-                best, best_group = sec, group
+                best, best_group, best_compiles = sec, group, compiles
         # later jobs stay out of the last run's group
         sc.setJobGroup("bench", "bench")
-        return best, best_group
+        return best, best_group, best_compiles
 
-    (best, best_group), ext = _ambient_during(best_run)
+    (best, best_group, compiles), ext = _ambient_during(best_run)
     status = StatusStore(spark)
     status.drain_listener_bus()
     totals = stage_totals([
@@ -424,6 +449,7 @@ def _timed_capture(spark, build, runs: int = 3) -> dict:
     return {
         "wall_s": round(best, 3),
         "ext_cores": ext,
+        "compiles": compiles,
         "task_cpu_s": round(totals["stage.cpu_s"], 3),
         "tasks": totals["stage.tasks"],
         "single_task_share": round(totals["stage.single_task_share"], 3),
@@ -534,7 +560,7 @@ def sweep(out_path: str | None = None) -> None:
     queries = _warm_session(spark, sf_dir)
     rows: dict[str, dict] = {}
     for name, q in queries.items():
-        q.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        free_local_checkpoint(_noop_write(q.build(spark, sf_dir)))
         rows[name] = _timed_capture(
             spark, lambda: q.build(spark, sf_dir), runs=1
         )
@@ -548,6 +574,7 @@ def sweep(out_path: str | None = None) -> None:
         "n_queries": len(times),
         "queries": dict(sorted(times.items())),
         "task_cpu_s": round(sum(r["task_cpu_s"] for r in rows.values()), 1),
+        "compiles": sum(r["compiles"] for r in rows.values()),
         "rows": dict(sorted(rows.items())),
         "slowest": dict(sorted(times.items(), key=lambda kv: -kv[1])[:10]),
         "sf": sf_dir,
@@ -558,7 +585,8 @@ def sweep(out_path: str | None = None) -> None:
         json.dump(doc, f, indent=1, sort_keys=False)
         f.write("\n")
     print(json.dumps({k: doc[k] for k in (
-        "metric", "value", "unit", "n_queries", "task_cpu_s", "slowest", "sf"
+        "metric", "value", "unit", "n_queries", "task_cpu_s", "compiles",
+        "slowest", "sf",
     )}))
 
 
@@ -590,9 +618,9 @@ def main(out_path: str | None = None) -> None:
     # execution (decode-module imports per worker + the documents
     # media BINARY column, which every count()-based table warm-up
     # column-prunes away, entering the page cache)
-    queries["m03_media_features"].build(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    free_local_checkpoint(
+        _noop_write(queries["m03_media_features"].build(spark, sf_dir))
+    )
 
     # best-of-3: the first run includes codegen compilation, and any
     # single run can eat a GC pause worth ±30% on the heavy queries
@@ -724,7 +752,8 @@ def main(out_path: str | None = None) -> None:
             sum(timings[n] for n in HEADLINE[:16]), 3
         ),
         # per row: wall_s, ext_cores (external cores over the capture
-        # window), task_cpu_s, tasks, single_task_share, pyworker_s
+        # window), compiles, task_cpu_s, tasks, single_task_share,
+        # pyworker_s
         "rows": rows,
         # headline value keeps the streaming convention (best); median/
         # spread make a host-state swing visible inside ONE artifact

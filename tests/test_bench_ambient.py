@@ -1,15 +1,17 @@
 """The bench's per-row measurements, tested as units.
 
 Each headline and sweep row records wall time, external cores =
-(machine busy jiffies − our process-tree jiffies) / window, and the
-task CPU, task count, single-task stage share and Python-worker seconds
-Spark's status store holds for the row's own jobs. These tests pin what makes those numbers
+(machine busy jiffies − our process-tree jiffies) / window, the classes
+compiled during the best run, and the task CPU, task count, single-task
+stage share and Python-worker seconds Spark's status store holds for
+the row's own jobs. These tests pin what makes those numbers
 meaningful: our own CPU burn is attributed to the TREE (so a busy bench
 doesn't read itself as contention), the jiffy helpers survive process
 churn without raising (procfs rows race with exits), the capture helper
-reads task metrics for the query it ran, the stdout line fits the
-driver's tail window, and neither bench.py nor the session factory reads
-a tuning knob from the environment."""
+reads task metrics for the query it ran and frees the checkpoints its
+frames made, the stdout line fits the driver's tail window, and neither
+bench.py nor the session factory reads a tuning knob from the
+environment."""
 
 from __future__ import annotations
 
@@ -237,15 +239,31 @@ def test_timed_capture_reads_task_metrics(spark):
         spark, lambda: q.build(spark, "/root/testdata/sf0.001"), runs=2
     )
     assert set(row) == {
-        "wall_s", "ext_cores", "task_cpu_s", "tasks", "single_task_share",
-        "pyworker_s",
+        "wall_s", "ext_cores", "compiles", "task_cpu_s", "tasks",
+        "single_task_share", "pyworker_s",
     }
     assert row["wall_s"] > 0
     assert row["ext_cores"] >= 0
+    assert row["compiles"] >= 0
     assert row["task_cpu_s"] > 0
     assert row["tasks"] >= 1
     assert 0 <= row["single_task_share"] <= 1
     assert row["pyworker_s"] >= 0
+
+
+def test_timed_capture_frees_the_builders_checkpoints(spark):
+    """d94's builder materializes its candidate frame; after a capture
+    the session holds no more persisted RDDs than before it, so a later
+    row is not timed under this row's checkpoint blocks."""
+    from kpipe_spark.queries import all_queries
+
+    q = all_queries()["d94_adaptive_nprobe_recall"]
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    bench._timed_capture(
+        spark, lambda: q.build(spark, "/root/testdata/sf0.001"), runs=1
+    )
+    assert jsc.getPersistentRDDs().size() == baseline
 
 
 def _environ_keys(path: str) -> list:
