@@ -9,8 +9,11 @@ foreachBatch each route filters its topic and runs its own pipeline +
 terminals. Offsets for unrouted rows advance automatically — the batch
 commit covers the whole offset range.
 
-The circuit breaker (when set) observes outcomes across ALL routes,
-matching the reference (docs/API.md:117: consumer-wide CB).
+MultiRunner holds no circuit breaker of its own. The reference's
+consumer-wide breaker (docs/API.md:117) is ONE ``CircuitBreaker``
+instance passed to every route's StreamRunner: it then records the
+terminal outcomes of all routes. Unrouted rows never reach a route, so
+they never enter it.
 """
 
 from __future__ import annotations
@@ -29,8 +32,9 @@ log = logging.getLogger(__name__)
 @dataclass
 class MultiRunner:
     """Route map topic -> StreamRunner. Each route keeps its own
-    pipeline/sink/DLQ; consumer-wide concerns (metrics totals, circuit
-    breaker, checkpoint) are shared."""
+    pipeline/sink/DLQ/breaker; the checkpoint and the metrics totals are
+    shared. A consumer-wide breaker is one CircuitBreaker passed to
+    every route (module docstring)."""
 
     routes: dict[str, StreamRunner]
     topic_col: str = "topic"

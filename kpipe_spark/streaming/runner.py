@@ -85,10 +85,6 @@ class Metrics:
         self.counters[key] = self.counters.get(key, 0) + n
 
 
-class CircuitOpen(Exception):
-    pass
-
-
 @dataclass
 class CircuitBreaker:
     """Count-window failure-rate breaker (Stream.withCircuitBreaker,

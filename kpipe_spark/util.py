@@ -216,24 +216,6 @@ class table_materializer:
         return False
 
 
-_BYTE_SUFFIX = {
-    "b": 1,
-    "k": 1 << 10,
-    "m": 1 << 20,
-    "g": 1 << 30,
-    "t": 1 << 40,
-    "p": 1 << 50,
-}
-
-
-def _parse_bytes(v: str) -> int:
-    """Spark byte-size string ('134217728b', '128MB', '4m') -> bytes."""
-    s = v.strip().lower().removesuffix("b")
-    if s and s[-1] in _BYTE_SUFFIX:
-        return int(s[:-1]) * _BYTE_SUFFIX[s[-1]]
-    return int(s)
-
-
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition iff the input has fewer partitions than the session's
     parallelism.
@@ -245,81 +227,21 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     count and this is a no-op — the guard only pays the (tiny) shuffle
     when the input is under-split.
 
-    Split estimation avoids a planner round-trip per call site:
-    ``df.rdd.getNumPartitions()`` converts the frame to an RDD plan just
-    to count splits — cheap locally, an extra analysis pass per query at
-    scale. For file-backed frames the scan's split count is estimated
-    the same way Spark packs splits (total bytes + per-file open cost,
-    over maxPartitionBytes); the RDD fallback only fires for in-memory
-    frames (streaming micro-batches, createDataFrame fixtures), which
-    are already materialized.
+    The split count is Spark's own (``df.rdd.getNumPartitions()``), so
+    it follows the planner's file packing on every store. Precondition:
+    pass a scan-side frame — a scan, a filtered or projected scan, or an
+    in-memory frame such as a micro-batch. Counting those plans the
+    scan and starts no job; a frame above an aggregate or a join would
+    run one, because AQE materializes the shuffle to count its
+    partitions.
     """
     # a pre-foreachBatch streaming frame has no split count to inspect
     # (df.rdd would raise); its micro-batches are respread per mode by
     # streaming.modes.shape_batch instead
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file-backed plans (e.g. streaming batches)
-        files = []
-    if files:
-        import os
-        from urllib.parse import unquote, urlparse
-
-        try:
-            max_split = _parse_bytes(
-                spark.conf.get(
-                    "spark.sql.files.maxPartitionBytes", "134217728b"
-                )
-            )
-            open_cost = _parse_bytes(
-                spark.conf.get("spark.sql.files.openCostInBytes", "4194304b")
-            )
-            total = 0
-            for f in files:
-                p = urlparse(f)
-                if p.scheme not in ("file", ""):
-                    # remote store: listing sizes here would re-do the
-                    # catalog's work; assume well-split (big-file layouts)
-                    return df
-                # inputFiles() returns percent-encoded URIs — a path
-                # with a space arrives as %20 and must be unquoted
-                # before stat'ing
-                total += os.path.getsize(unquote(p.path)) + open_cost
-        except (OSError, ValueError):
-            # file vanished between listing and stat, an exotic path,
-            # or an unparseable conf value: fall back to the exact
-            # (slower) split count rather than failing query
-            # construction
-            pass
-        else:
-            # mirror Spark's ACTUAL packing, not just maxPartitionBytes:
-            # maxSplitBytes = min(maxPartitionBytes,
-            #                     max(openCost, totalBytes/minPartitionNum))
-            # — Spark auto-splits mid-size inputs down to ~parallelism
-            # partitions, so estimating with maxPartitionBytes alone
-            # undercounts and triggers a full-dataset repartition the
-            # real scan never needed (e.g. 2 GB in 16 files already
-            # arrives as ~32 partitions on local[32])
-            try:
-                # optional entry: unset, conf.get throws through py4j
-                # (IllegalArgumentException), not a None return
-                min_pn = int(
-                    spark.conf.get("spark.sql.files.minPartitionNum")
-                )
-            except Exception:
-                min_pn = spark.sparkContext.defaultParallelism
-            split = min(max_split, max(open_cost, total // max(min_pn, 1)))
-            est = max(1, -(-total // max(split, 1)))
-            return df.repartition(target) if est < target else df
-
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
 
 
 def salted_join(
@@ -371,79 +293,6 @@ def salted_join(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
     return skewed_s.join(other_s, [on, "_salt"], how).drop("_salt")
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-partitioned parquet layout (path/key=value/...).
-
-    The read-side payoff is partition PRUNING: a filter on the
-    partition key never touches non-matching directories — at 100 TB
-    the difference between scanning a day and scanning a decade.
-    Choose low-cardinality, always-filtered keys (date, region, kind);
-    high-cardinality keys create a small-file explosion instead.
-    Verified in tests via PartitionFilters in the scan plan.
-    """
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = 256 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet dataset into ~target-sized files; returns the
-    output file count.
-
-    Streaming sinks and fine-grained partitioned writes accumulate
-    small files; at scale the metadata and open() overhead of a
-    million 1 MB files dominates scan time. Sizing from actual input
-    bytes (not row counts) keeps output files near the parquet
-    row-group sweet spot.
-
-    Sizing goes through the Hadoop FileSystem API so it works on
-    whatever store holds the data (HDFS/S3/local) — an os.walk-based
-    size reads 0 for any remote path and would collapse the rewrite
-    to ONE file, the exact failure compaction exists to fix. Shrinking
-    uses coalesce (partition merge, no shuffle); when the target file
-    count EXCEEDS the scan's partition count, coalesce is a no-op
-    upward, so the rewrite repartitions instead — that pays one
-    shuffle, but honors the target size rather than silently emitting
-    half as many files at twice the size.
-    """
-    import math
-
-    df = spark.read.parquet(src_path)
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(src_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        total = fs.getContentSummary(jpath).getLength()
-    except Exception:  # no JVM bridge (mocks) — local-fs fallback
-        total = _dataset_bytes(src_path)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    shaped = (
-        df.coalesce(n_files)
-        if n_files <= df.rdd.getNumPartitions()
-        else df.repartition(n_files)
-    )
-    shaped.write.mode("overwrite").parquet(dst_path)
-    return n_files
-
-
-def _dataset_bytes(path: str) -> int:
-    import os
-
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
 
 
 def _table_owning_location(spark, fs, target_path) -> str | None:

@@ -13,6 +13,7 @@ from kpipe_spark.pipeline.result import ERROR_COL, STATUS_COL
 from kpipe_spark.streaming import StreamRunner
 from kpipe_spark.streaming.batch_sink import apply_batch_sink, batch_sink_terminal
 from kpipe_spark.streaming.multi import MultiRunner
+from kpipe_spark.streaming.runner import CircuitBreaker
 from kpipe_spark.streaming.sources import file_source
 
 
@@ -146,6 +147,42 @@ def test_multi_topic_routing(spark, tmp_path):
     totals = multi.totals()
     assert totals["records.dropped.unrouted"] == 10  # mystery topic
     assert totals["route.orders.pipeline.processed.filtered"] == 1  # id=0
+
+
+def test_shared_breaker_sees_every_route(spark):
+    """MultiRunner has no breaker of its own: one CircuitBreaker passed
+    to every route is the consumer-wide breaker, and it records both
+    routes' terminal outcomes. Unrouted rows never enter it. Each
+    route alone fills half the window, so only the shared window
+    trips."""
+    batch = spark.createDataFrame(
+        [(["orders", "users", "mystery"][i % 3], i) for i in range(30)],
+        "topic string, id int",
+    )
+    cb = CircuitBreaker(failure_threshold=0.5, window=20, open_duration_s=0.0)
+    multi = MultiRunner(
+        routes={
+            "orders": StreamRunner(
+                pipeline=Pipeline().fail_when(F.lit(True), "boom"),
+                sink=lambda df, bid: None,
+                circuit_breaker=cb,
+            ),
+            "users": StreamRunner(
+                pipeline=Pipeline(),
+                sink=lambda df, bid: None,
+                circuit_breaker=cb,
+            ),
+        }
+    )
+    multi.process_batch(batch, 0)
+
+    # 10 orders failed + 10 users passed; the 10 mystery rows are absent
+    assert (cb._size, cb._failed) == (20, 10.0)
+    assert cb.state == "OPEN" and cb.trips == 1
+    totals = multi.totals()
+    assert totals["route.orders.pipeline.processed.failed"] == 10
+    assert totals["route.users.pipeline.processed.passed"] == 10
+    assert totals["records.dropped.unrouted"] == 10
 
 
 def test_batch_terminal_dlq_tombstone_and_envelope(spark):

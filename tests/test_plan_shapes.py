@@ -342,14 +342,9 @@ def test_shape_batch_exchanges_per_mode(spark, tmp_path):
         shaped = shape_batch(batch, mode)
         return shaped._jdf.queryExecution().executedPlan().toString()
 
-    # minPartitionNum=1 packs the one small file into ONE estimated
-    # split whatever the core count (by default Spark aims for
-    # defaultParallelism splits, so the estimate would track the host)
-    spark.conf.set("spark.sql.files.minPartitionNum", "1")
-    try:
-        parallel = plan(ProcessingMode.PARALLEL)
-    finally:
-        spark.conf.unset("spark.sql.files.minPartitionNum")
+    # the one small file is one split on any host: Spark splits a file
+    # only past maxSplitBytes, which never drops below openCostInBytes
+    parallel = plan(ProcessingMode.PARALLEL)
     if spark.sparkContext.defaultParallelism > 1:
         assert "RoundRobinPartitioning" in parallel, parallel
     else:  # one core: nothing to respread to

@@ -72,11 +72,65 @@ def test_bucketed_join_has_no_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS b_custs")
 
 
-def test_ensure_parallelism_noop_when_wide(spark):
+def test_ensure_parallelism_noop_when_wide(spark, tmp_path):
     wide = spark.range(0, 100).repartition(64)
     assert ensure_parallelism(wide) is wide  # already split enough
     narrow = spark.range(0, 100).coalesce(1)
     assert ensure_parallelism(narrow).rdd.getNumPartitions() > 1
+
+    # a file-backed frame with one split per file: a maxPartitionBytes
+    # no larger than a file closes a split after every file
+    target = spark.sparkContext.defaultParallelism
+    out = str(tmp_path / "wide.parquet")
+    spark.range(0, 100 * target).repartition(target).write.parquet(out)
+    largest = max(f.stat().st_size for f in tmp_path.glob("wide.parquet/*.parquet"))
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(largest))
+    try:
+        scan = spark.read.parquet(out)
+        assert scan.rdd.getNumPartitions() >= target  # precondition
+        assert ensure_parallelism(scan) is scan
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _frame(spark, kind: str):
+    from kpipe_spark.catalog import load_tables
+
+    docs = load_tables(spark, "/root/testdata/sf0.001").documents
+    return {
+        "catalog_scan": docs,
+        "filtered_scan": docs.filter(F.col("text").isNotNull()),
+        "in_memory": spark.createDataFrame([(i,) for i in range(10)], "id int"),
+        "aggregate": docs.groupBy("source").count(),
+    }[kind]
+
+
+@pytest.mark.parametrize(
+    "kind, starts_jobs",
+    [
+        ("catalog_scan", False),
+        ("filtered_scan", False),
+        ("in_memory", False),
+        ("aggregate", True),
+    ],
+)
+def test_ensure_parallelism_starts_no_job_on_scan_side_frames(spark, kind, starts_jobs):
+    """The call-site precondition: counting a scan-side frame's splits
+    plans the scan and starts no Spark job. A frame above an aggregate
+    is the case callers avoid: AQE runs the shuffle's map stage to
+    count its partitions."""
+    sc = spark.sparkContext
+    df = _frame(spark, kind)  # the catalog's schema read stays outside
+    group = f"ensure-par-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        ensure_parallelism(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert bool(sc.statusTracker().getJobIdsForGroup(group)) is starts_jobs
 
 
 def test_salted_join_spreads_hot_key_across_reducers(spark):
@@ -195,53 +249,6 @@ def test_approx_count_distinct_within_tolerance(spark):
         F.countDistinct("l_orderkey").alias("exact"),
     ).collect()[0]
     assert abs(row["approx"] - row["exact"]) / row["exact"] < 0.05
-
-
-def test_partitioned_write_enables_pruning(spark, tmp_path):
-    """Hive-partitioned layout: a filter on the partition key shows up
-    as PartitionFilters and prunes non-matching directories — the
-    scan-a-day-not-a-decade property."""
-    from kpipe_spark.catalog import load_table
-    from kpipe_spark.util import write_partitioned
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    out = str(tmp_path / "by_type")
-    write_partitioned(
-        events.withColumn("etype", F.col("event_type")),
-        out,
-        partition_by=["etype"],
-    )
-    pruned = spark.read.parquet(out).filter(F.col("etype") == "click")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(etype" in plan
-    exact = events.filter(F.col("event_type") == "click").count()
-    assert pruned.count() == exact
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    """Small-file compaction: many tiny files -> few target-sized ones,
-    same rows, no shuffle (coalesce)."""
-    import os
-
-    from kpipe_spark.util import compact_parquet
-
-    fragmented = str(tmp_path / "fragmented")
-    spark.range(0, 10000).repartition(50).write.parquet(fragmented)
-    n_small = len([f for f in os.listdir(fragmented) if f.endswith(".parquet")])
-    assert n_small == 50
-
-    compacted = str(tmp_path / "compacted")
-    total_bytes = sum(
-        os.path.getsize(os.path.join(fragmented, f))
-        for f in os.listdir(fragmented)
-        if f.endswith(".parquet")
-    )
-    n_out = compact_parquet(
-        spark, fragmented, compacted, target_file_bytes=total_bytes // 4
-    )
-    n_big = len([f for f in os.listdir(compacted) if f.endswith(".parquet")])
-    assert n_big == n_out <= 6
-    assert spark.read.parquet(compacted).count() == 10000
 
 
 def test_ranged_prefix_sum_matches_single_window(spark):
